@@ -168,7 +168,7 @@ object BloomSuppress {
         count(col(keyCol)).as("n_keys"))
       .select(lit(shard).as("shard"), col("n_keys"),
         lit(fpp).as("fpp"), col("sketch"))
-    Fs.stagedAppend(row.coalesce(1), None, dir)
+    Fs.stagedAppend(row.coalesce(1), Nil, dir)
   }
 
   /** Saturation observability for a sketch ledger — the [[graft.ops

@@ -287,8 +287,8 @@ object Bm25 {
     * contract either way).
     */
   private def stageInto(
-      df: DataFrame, partCol: Option[String], destDir: String): Unit =
-    graft.core.Fs.stagedAppend(df, partCol, destDir)
+      df: DataFrame, partCols: Seq[String], destDir: String): Unit =
+    graft.core.Fs.stagedAppend(df, partCols, destDir)
 
   /** Append a document batch to an existing index — the 100 TB shape is
     * append-only ingestion, not nightly rebuilds. New postings land in
@@ -324,11 +324,11 @@ object Bm25 {
     stageInto(
       postings(admitted, idCol, textCol)
         .withColumn("tb", pmod(xxhash64(col("term")), lit(nBuckets))),
-      Some("tb"), s"$path/postings")
+      Seq("tb"), s"$path/postings")
     stageInto(
       corpusStats(admitted, textCol).drop("avgdl")
         .withColumn("n_buckets", lit(nBuckets)).coalesce(1),
-      None, s"$path/stats")
+      Nil, s"$path/stats")
   }
 
   /** Physically dispose of tombstoned postings — a TERM-BUCKET-PRUNED

@@ -910,7 +910,7 @@ object ClusteredStore {
             col("_z"))
           .sortWithinPartitions("_z")
           .select(outCols: _*), anchorNow),
-        None, dataDir(dir))
+        Nil, dataDir(dir))
 
     val base0 =
       if (touchedFiles.isEmpty)
@@ -1074,7 +1074,7 @@ object ClusteredStore {
         .repartitionByRange(nNew, col("_z"))
         .sortWithinPartitions("_z")
         .select(dropCols.map(col): _*), anchorSchema(spark, dir)),
-      None, dataDir(dir))
+      Nil, dataDir(dir))
 
     val untouched = cur.filter(!col("file").isin(smalls.toSeq: _*))
     val fresh =
@@ -1131,7 +1131,7 @@ object ClusteredStore {
         .sortWithinPartitions("_z")
         .select(snapshot.columns.map(col).toSeq: _*),
         anchorSchema(spark, dir)),
-      None, dataDir(dir))
+      Nil, dataDir(dir))
     heartbeat(spark, claim, dir)
     // an EMPTY snapshot stages no files (legal: recluster of a store
     // whose rows were all in vacuumed versions) — commit a typed
@@ -1245,7 +1245,7 @@ object ClusteredStore {
             math.max(1L, (n + target - 1) / target).toInt, col("_z"))
           .sortWithinPartitions("_z")
           .select(outCols: _*), anchorSchema(spark, dir)),
-        None, dataDir(dir))
+        Nil, dataDir(dir))
     heartbeat(spark, claim, dir)
 
     val untouched = cur.filter(!col("file").isin(hitFiles: _*))
@@ -1333,7 +1333,7 @@ object ClusteredStore {
                 math.max(1L, (n + target - 1) / target).toInt, col("_z"))
               .sortWithinPartitions("_z")
               .select(outCols: _*), anchorSchema(spark, dir)),
-            None, dataDir(dir))
+            Nil, dataDir(dir))
         heartbeat(spark, claim, dir)
 
         val untouched = cur.filter(!col("file").isin(hitFiles: _*))
@@ -1645,7 +1645,7 @@ object ClusteredStore {
                   math.min(foldFiles.size, 200)), col("_z"))
                 .sortWithinPartitions("_z")
                 .select(outCols: _*), anchorSchema(spark, dir)),
-              None, dataDir(dir))
+              Nil, dataDir(dir))
           val kept = cur.filter(!col("file").isin(foldFiles: _*))
           val next =
             if (newFiles.isEmpty) kept

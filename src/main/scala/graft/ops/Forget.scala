@@ -365,7 +365,7 @@ object Forget {
           r._fg_dom, r._fg_staged, r._fg_hits, r._fg_seq,
           r._fg_tie)): _*),
       FgSchema)
-    Fs.stagedAppend(df.coalesce(1), None, ledgerDir)
+    Fs.stagedAppend(df.coalesce(1), Nil, ledgerDir)
     ()
   }
 
@@ -753,7 +753,7 @@ object Forget {
     if (srcs.length > target) {
       val folded = spark.read.schema(FgSchema)
         .parquet(srcs.map(_.getPath.toString): _*).distinct()
-      Fs.stagedAppend(folded.coalesce(target), None, ledgerDir)
+      Fs.stagedAppend(folded.coalesce(target), Nil, ledgerDir)
       srcs.foreach(s => Fs.delete(spark, s.getPath.toString))
     }
     Some(report)

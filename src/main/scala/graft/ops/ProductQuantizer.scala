@@ -239,7 +239,7 @@ object ProductQuantizer {
           vecCol, books)
         .withColumn("bucket", VectorIndex.assignBucket(cents, vecCol, "nrm"))
         .select(col("vec_id"), col("codes"), col("bucket")),
-      Some("bucket"), path)
+      Seq("bucket"), path)
 
   /** Per-row quantization error of a reconstruction: `1 − cos(v, dv)` —
     * 0 when the codebooks represent the vector exactly, approaching 1

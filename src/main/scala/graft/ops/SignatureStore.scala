@@ -123,7 +123,7 @@ object SignatureStore {
     val spark = docs.sparkSession
     graft.core.Fs.stagedAppend(
       signatures(Tombstones.mask(spark, path, docs, "doc_id")),
-      None, path)
+      Nil, path)
     ()
   }
 

@@ -128,7 +128,7 @@ object SpanScrub {
     // commute (ledger = set, reads are distinct) and none is lost.
     graft.core.Fs.stagedAppend(
       t.join(seen, Seq("h"), "left_anti").select("h").distinct(),
-      None, ledgerPath)
+      Nil, ledgerPath)
     t.unpersist()
     out
   }

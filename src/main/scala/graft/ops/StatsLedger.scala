@@ -86,7 +86,7 @@ object StatsLedger {
     // per-batch coalesce(1) is deliberate: one INGEST batch is bounded
     // (unlike a whole-table build), and one ledger file per append bounds
     // small-file growth between compactions
-    Fs.stagedAppend(stats(spark, batchDir, cols).coalesce(1), None, ledgerDir)
+    Fs.stagedAppend(stats(spark, batchDir, cols).coalesce(1), Nil, ledgerDir)
   }
 
   /** [[appendBatch]] for a [[buildWithBloom]] ledger: the new batch's
@@ -104,7 +104,7 @@ object StatsLedger {
     val batch = spark.read.parquet(batchDir)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
-    Fs.stagedAppend(batch.coalesce(1), None, ledgerDir)
+    Fs.stagedAppend(batch.coalesce(1), Nil, ledgerDir)
   }
 
   /** Schema guard shared by the append paths: the existing ledger's

@@ -122,7 +122,7 @@ object Tombstones {
       case Some(existing) =>
         shaped.join(existing, Seq("_ts_id"), "left_anti")
     }
-    Fs.stagedAppend(toWrite.coalesce(1), None, dir(path))
+    Fs.stagedAppend(toWrite.coalesce(1), Nil, dir(path))
     ()
   }
 
@@ -134,7 +134,7 @@ object Tombstones {
     */
   private[ops] def appendLedgerRows(
       spark: SparkSession, path: String, rows: DataFrame): Unit = {
-    Fs.stagedAppend(rows.coalesce(1), None, dir(path))
+    Fs.stagedAppend(rows.coalesce(1), Nil, dir(path))
     ()
   }
 
@@ -200,7 +200,7 @@ object Tombstones {
         led.groupBy("_ts_id")
           .agg(max(p).as(p), rest.map(c => max(c).as(c)): _*)
     }
-    Fs.stagedAppend(folded.coalesce(1), None, d)
+    Fs.stagedAppend(folded.coalesce(1), Nil, d)
     srcs.foreach(f => Fs.delete(spark, f))
     true
   }

@@ -150,7 +150,7 @@ object VectorIndex {
     graft.core.Fs.stagedAppend(
       Tombstones.mask(batch.sparkSession, path, batch, "vec_id")
         .withColumn("bucket", assignBucket(cents)),
-      Some("bucket"), path)
+      Seq("bucket"), path)
 
   /** Per-bucket small-file compaction of an appended index — delegates to
     * [[LogCompactor]] over the `bucket=` partition layout. Answers are

@@ -1,10 +1,11 @@
 package graft.sink
 
 import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.locks.ReentrantLock
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.LogEntry
@@ -19,42 +20,103 @@ trait LogSink extends AutoCloseable {
   override def close(): Unit = flush()
 }
 
-/** Count-triggered buffered sink (S7→S1): rows accumulate in memory and
-  * flush as one columnar batch when `bufferSize` is reached, on explicit
+/** Count-triggered buffered sink (S7→S1) with group commit: rows
+  * accumulate in memory and are written as one columnar batch when the
+  * pending buffer reaches a multiple of `bufferSize`, on explicit
   * `flush()`, on `close()`, and via a JVM shutdown hook (the reference's
-  * atexit, logger.py:85). The buffer swap happens under the lock; the
-  * write happens outside it, so callback threads are never blocked on I/O
-  * (fixing the reference quirk noted in SURVEY §2.7).
+  * atexit, logger.py:85).
+  *
+  * Contract:
+  *  - An append that does not cross a `bufferSize` boundary only takes
+  *    the lock, buffers its row and returns.
+  *  - An append that crosses a boundary, and every `flush()` and
+  *    `close()`, returns only after every row appended before it (its
+  *    own included) has been written downstream. That caller does the
+  *    write on its own thread.
+  *  - At most one downstream write is in flight. A caller that needs a
+  *    write while another is running waits for it; if its rows are still
+  *    pending afterwards it writes everything that has built up, in one
+  *    downstream call, so concurrent threshold crossings coalesce into
+  *    fewer, larger writes (group commit). While a write runs, each
+  *    further boundary parks one caller, so pending rows stay below
+  *    about `bufferSize` per caller thread.
+  *  - A write that throws loses nothing: its rows go back to the head of
+  *    the pending buffer, ahead of rows that arrived meanwhile, and the
+  *    exception is rethrown to the writing caller and to every caller
+  *    that waited on that write. The next boundary append or `flush()`
+  *    writes them again.
+  *
+  * `downstream` must not append to this sink from its own thread: a
+  * boundary append there would wait for the write it is part of.
   */
 final class BufferedSink(downstream: Seq[LogEntry] => Unit, bufferSize: Int = 100)
     extends LogSink {
 
+  /** One downstream write; `done`/`error` are guarded by `lock`. */
+  private final class Commit {
+    var done = false
+    var error: Throwable = null
+  }
+
+  private val lock = new ReentrantLock
+  private val committed = lock.newCondition()
   private val buf = new ArrayBuffer[LogEntry](bufferSize)
-  private val lock = new Object
+  private var appended = 0L // rows ever appended
+  private var written = 0L // rows downstream has accepted
+  private var inFlight: Commit = null
 
   private val shutdownHook = new Thread(() =>
     try flush() catch { case _: Throwable => () })
   Runtime.getRuntime.addShutdownHook(shutdownHook)
 
-  override def append(entry: LogEntry): Unit = {
-    var toWrite: Seq[LogEntry] = null
-    lock.synchronized {
+  override def append(entry: LogEntry): Unit = { offer(entry); () }
+
+  /** [[append]], answering whether it crossed a `bufferSize` boundary —
+    * and so returned only once its own row was written.
+    */
+  private[sink] def offer(entry: LogEntry): Boolean = {
+    lock.lock()
+    try {
       buf += entry
-      if (buf.size >= bufferSize) toWrite = swapLocked()
-    }
-    if (toWrite != null) downstream(toWrite)
+      appended += 1
+      val boundary = buf.size % (bufferSize max 1) == 0 // 0: every append
+      if (boundary) commitThrough(appended)
+      boundary
+    } finally lock.unlock()
   }
 
   override def flush(): Unit = {
-    val toWrite = lock.synchronized(swapLocked())
-    if (toWrite.nonEmpty) downstream(toWrite)
+    lock.lock()
+    try commitThrough(appended)
+    finally lock.unlock()
   }
 
-  private def swapLocked(): Seq[LogEntry] = {
-    val out = buf.toVector
-    buf.clear()
-    out
-  }
+  /** Returns once the first `target` rows are written. Called with `lock`
+    * held; releases it only around the downstream call and while waiting.
+    */
+  private def commitThrough(target: Long): Unit =
+    while (written < target) {
+      val running = inFlight
+      if (running != null) {
+        while (!running.done) committed.awaitUninterruptibly()
+        if (running.error != null) throw running.error
+      } else {
+        val batch = buf.toVector
+        buf.clear()
+        val mine = new Commit
+        inFlight = mine
+        lock.unlock()
+        try downstream(batch)
+        catch { case t: Throwable => mine.error = t }
+        finally lock.lock()
+        inFlight = null
+        mine.done = true
+        if (mine.error == null) written += batch.size
+        else buf.insertAll(0, batch)
+        committed.signalAll()
+        if (mine.error != null) throw mine.error
+      }
+    }
 
   override def close(): Unit = {
     flush()
@@ -93,20 +155,21 @@ final class ParquetDirSink(
   }
 
   /** Distributed variant: land an already-distributed Dataset of entries
-    * without routing rows through the driver.
+    * without routing rows through the driver. Goes through
+    * [[graft.core.Fs.stagedAppend]], so two sinks appending to one `dir`
+    * never share `dir/_temporary`.
     */
   def writeDataset(df: org.apache.spark.sql.DataFrame): Unit = {
-    val writer = (if (partitionOnDate && hourGrain) {
-      df.withColumn("date", to_date(col("timestamp")))
-        .withColumn("hour", hour(col("timestamp")))
-        .write.partitionBy("date", "hour")
-    } else if (partitionOnDate) {
-      df.withColumn("date", to_date(col("timestamp")))
-        .write.partitionBy("date")
-    } else df.write)
-      .mode(SaveMode.Append)
-      .option("compression", compression)
-    writer.parquet(dir)
+    val (out, partCols) =
+      if (partitionOnDate && hourGrain)
+        (df.withColumn("date", to_date(col("timestamp")))
+          .withColumn("hour", hour(col("timestamp"))), Seq("date", "hour"))
+      else if (partitionOnDate)
+        (df.withColumn("date", to_date(col("timestamp"))), Seq("date"))
+      else (df, Nil)
+    graft.core.Fs.stagedAppend(out, partCols, dir,
+      Map("compression" -> compression))
+    ()
   }
 }
 

@@ -99,7 +99,7 @@ class SchemeFsSpec extends SparkSpec {
     import spark.implicits._
     val dir = schemePath() + "/delta"
     (1 to 3).foreach { b =>
-      Fs.stagedAppend(Seq((b.toLong, 1L)).toDF("k", "n"), None, dir)
+      Fs.stagedAppend(Seq((b.toLong, 1L)).toDF("k", "n"), Nil, dir)
     }
     val pre = spark.read.parquet(dir).orderBy("k").collect()
     val report = graft.ops.LogCompactor.compactFlat(spark, dir, 1L << 30).get

@@ -39,7 +39,7 @@ class LogCompactorSpec extends SparkSpec {
     // DUPLICATE row — a delta ledger sums rows, so compaction must keep it
     (1 to 4).foreach { b =>
       graft.core.Fs.stagedAppend(
-        Seq((b.toLong, 10L), (b.toLong, 10L)).toDF("k", "n"), None, dir)
+        Seq((b.toLong, 10L), (b.toLong, 10L)).toDF("k", "n"), Nil, dir)
     }
     val pre = spark.read.parquet(dir).orderBy("k", "n").collect()
     assert(pre.length === 8)

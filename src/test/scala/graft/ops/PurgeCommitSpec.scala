@@ -201,7 +201,7 @@ class PurgeCommitSpec extends SparkSpec {
     Tombstones.mask(spark, path,
         spark.read.parquet(pDir).dropDuplicates("vec_id"), "vec_id")
       .write.mode("overwrite").parquet(legacy)
-    Fs.stagedAppend(spark.read.parquet(legacy), None, pDir)
+    Fs.stagedAppend(spark.read.parquet(legacy), Nil, pDir)
 
     // the new purge converges it: dedup on the row identity folds the
     // duplicate survivor files; the run completes clean

@@ -114,7 +114,7 @@ class SpanScrubSpec extends SparkSpec {
     SpanScrub.scrubIncremental(b2, "doc_id", "text", 12, path)
     // simulate a crash-replayed append: duplicate hashes in the ledger
     val dup = spark.read.parquet(path).limit(5)
-    graft.core.Fs.stagedAppend(dup, None, path)
+    graft.core.Fs.stagedAppend(dup, Nil, path)
     val before = spark.read.parquet(path)
     val distinctBefore = before.distinct().count()
     assert(before.count() > distinctBefore) // dups really present

@@ -201,11 +201,11 @@ class TombstoneLedgerSpec extends SparkSpec {
     Fs.stagedAppend(
       Bm25.postings(racer, "doc_id", "text")
         .withColumn("tb", pmod(xxhash64(col("term")), lit(nBuckets))),
-      Some("tb"), s"$path/postings")
+      Seq("tb"), s"$path/postings")
     Fs.stagedAppend(
       Bm25.corpusStats(racer, "text").drop("avgdl")
         .withColumn("n_buckets", lit(nBuckets)).coalesce(1),
-      None, s"$path/stats")
+      Nil, s"$path/stats")
 
     // probe-time masking already hides the id, but the corpus totals
     // now count a doc the ledger thinks has no postings

@@ -1,7 +1,9 @@
 package graft.sink
 
 import java.nio.file.Files
-import java.util.concurrent.Executors
+import java.util.concurrent.{ConcurrentHashMap, Executors}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -37,24 +39,36 @@ class LoggerSinkSpec2 extends SparkSpec {
   }
 
   test("BufferedSink under concurrent appends loses nothing") {
-    val written = new java.util.concurrent.atomic.AtomicLong(0)
+    val landed = new ConcurrentHashMap[String, Integer]
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
+    val boundaries, lateBoundaries = new java.util.concurrent.atomic.AtomicLong(0)
     val sink = new BufferedSink(entries => {
-      written.addAndGet(entries.size)
+      entries.foreach(e => landed.merge(e.run_id, 1, (a, b) => a + b))
       batches.incrementAndGet()
     }, bufferSize = 7)
     val pool = Executors.newFixedThreadPool(8)
     val n = 2000
     (1 to n).foreach { i =>
       pool.submit(new Runnable {
-        def run(): Unit = sink.append(graft.core.LogEntry(
-          new java.sql.Timestamp(0), s"r$i", "", "", "llm_end", "{}", "{}"))
+        def run(): Unit = {
+          val id = s"r$i"
+          if (sink.offer(graft.core.LogEntry(
+              new java.sql.Timestamp(0), id, "", "", "llm_end", "{}", "{}"))) {
+            boundaries.incrementAndGet()
+            if (!landed.containsKey(id)) lateBoundaries.incrementAndGet()
+          }
+        }
       })
     }
     pool.shutdown()
     pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
     sink.close()
-    assert(written.get() === n.toLong)
-    assert(batches.get() >= (n / 7).toLong)
+    // every row id written exactly once
+    assert(landed.asScala.toMap === (1 to n).map(i => s"r$i" -> (1: Integer)).toMap)
+    // a boundary-crossing append returns only after its own row is written
+    assert(boundaries.get() > 0)
+    assert(lateBoundaries.get() === 0L)
+    // group commit: each write holds at least one full buffer, plus close()
+    assert(batches.get() >= 1L && batches.get() <= (n / 7 + 1).toLong)
   }
 }
