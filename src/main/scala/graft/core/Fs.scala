@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -51,17 +53,25 @@ object Fs {
   }
 
   /** Concurrency-safe append of `df` into `destDir`: stage-write to a
-    * unique sibling directory, then move the data files into `destDir`
+    * unique directory, then move the data files into `destDir`
     * (preserving `c=v` partition subdirs for `partCols`) with per-file
-    * renames; `options` go to the Parquet writer. Two concurrent
-    * `df.write.mode("append")` calls on one directory share
-    * `destDir/_temporary` and can delete each other's in-flight task
-    * output; unique staging dirs remove the shared mutable path
-    * entirely, and Spark's UUID part-file names guarantee no rename
+    * renames. Two concurrent `df.write.mode("append")` calls on one
+    * directory share `destDir/_temporary` and can delete each other's
+    * in-flight task output; unique staging dirs remove the shared mutable
+    * path entirely, and Spark's UUID part-file names guarantee no rename
     * collision — so interleaved appenders commute and none is lost.
     * First write creates the destination. Extracted
     * from the BM25 index append path so every append-mode store (tile
     * ledgers, posting deltas) shares the one proven idiom.
+    *
+    * The stage is a hidden `.staging-<uuid>` sibling of `destDir`, so a
+    * first append leaves `destDir` absent until its files move in, which
+    * stores that probe [[nonEmptyDir]] for "ever written" rely on. With
+    * `stageInside` it is a hidden subdirectory of `destDir` instead: the
+    * caller then needs no access to `destDir`'s parent, and `destDir` may
+    * be a filesystem or bucket root. Readers, [[listDataFiles]] and
+    * [[moveDataFiles]] skip it. A call that throws leaves no file in
+    * `destDir` (see [[moveDataFiles]]) and removes its stage when it can.
     *
     * Returns the qualified destination paths of the files THIS CALL
     * moved — the caller's explicit commit lineage. A manifest-keeping
@@ -75,15 +85,25 @@ object Fs {
       df: org.apache.spark.sql.DataFrame,
       partCols: Seq[String],
       destDir: String,
-      options: Map[String, String] = Map.empty): Seq[String] = {
+      compression: String = "snappy",
+      stageInside: Boolean = false): Seq[String] = {
     val spark = df.sparkSession
-    val parent = new Path(destDir).getParent
-    val staging =
-      new Path(parent, s".staging-${java.util.UUID.randomUUID}").toString
-    df.write.mode("overwrite").options(options).partitionBy(partCols: _*)
-      .parquet(staging)
-    val moved = moveDataFiles(spark, staging, destDir)
-    delete(spark, staging)
+    val dest = new Path(destDir)
+    val staging = new Path(if (stageInside) dest else dest.getParent,
+      s".staging-${java.util.UUID.randomUUID}").toString
+    val moved =
+      try {
+        df.write.mode("overwrite").option("compression", compression)
+          .partitionBy(partCols: _*).parquet(staging)
+        moveDataFiles(spark, staging, destDir)
+      } catch {
+        case t: Throwable =>
+          try delete(spark, staging) catch { case u: Throwable => t.addSuppressed(u) }
+          throw t
+      }
+    // the rows have landed, so a failed cleanup must not report the append
+    // as failed: a stage left behind is hidden, empty debris
+    try delete(spark, staging) catch { case NonFatal(_) => () }
     moved
   }
 
@@ -117,6 +137,12 @@ object Fs {
     * `rename`, so a reader listing `destDir` sees whole files only.
     * Returns the qualified destination path of every moved file.
     *
+    * All or nothing: when a rename fails, the files this call already
+    * moved are renamed back into `srcDir` before the error is rethrown,
+    * so a caller that retries the move does not land them twice. (If
+    * renaming back fails too, that error is attached as suppressed and
+    * those files stay in `destDir`.)
+    *
     * Walks with `listStatus`, one call per directory: `listFiles` builds a
     * `LocatedFileStatus` per entry, and on the local filesystem without
     * Hadoop's native library each one forks a shell to read permissions —
@@ -134,12 +160,23 @@ object Fs {
     def dataFiles(dir: Path): Seq[FileStatus] =
       fs.listStatus(dir).toSeq.filter(visible).flatMap(st =>
         if (st.isDirectory) dataFiles(st.getPath) else Seq(st))
-    dataFiles(src).map { st =>
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"rename $from to $to failed")
+    val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
+    try dataFiles(src).foreach { st =>
       val rel = src.toUri.relativize(st.getPath.toUri).getPath
       val target = new Path(dest, rel)
       fs.mkdirs(target.getParent)
-      fs.rename(st.getPath, target)
-      target.toString
+      rename(st.getPath, target)
+      moved += st.getPath -> target
+    } catch {
+      case t: Throwable =>
+        moved.foreach { case (from, to) =>
+          try rename(to, from) catch { case u: Throwable => t.addSuppressed(u) }
+        }
+        throw t
     }
+    moved.map(_._2.toString).toSeq
   }
 }

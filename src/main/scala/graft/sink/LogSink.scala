@@ -44,10 +44,18 @@ trait LogSink extends AutoCloseable {
   *    the pending buffer, ahead of rows that arrived meanwhile, and the
   *    exception is rethrown to the writing caller and to every caller
   *    that waited on that write. The next boundary append or `flush()`
-  *    writes them again.
+  *    writes them again, together with everything pending by then. Rows
+  *    stay in memory until a write succeeds, so a downstream that can
+  *    fail for long should give up on its own (`RetryingStorage`'s
+  *    `"continue"` mode).
   *
-  * `downstream` must not append to this sink from its own thread: a
-  * boundary append there would wait for the write it is part of.
+  * Because a failed batch is sent again whole, `downstream` must land a
+  * batch all or nothing: when it throws, no row of the batch may have
+  * landed anywhere. [[ParquetDirSink.write]] does (staged write, and a
+  * failed move puts its files back) and so does [[CompositeStorage]]
+  * (a backend is not sent again the rows it already took). `downstream`
+  * must not append to this sink from its own thread: a boundary append
+  * there would wait for the write it is part of.
   */
 final class BufferedSink(downstream: Seq[LogEntry] => Unit, bufferSize: Int = 100)
     extends LogSink {
@@ -69,19 +77,13 @@ final class BufferedSink(downstream: Seq[LogEntry] => Unit, bufferSize: Int = 10
     try flush() catch { case _: Throwable => () })
   Runtime.getRuntime.addShutdownHook(shutdownHook)
 
-  override def append(entry: LogEntry): Unit = { offer(entry); () }
-
-  /** [[append]], answering whether it crossed a `bufferSize` boundary —
-    * and so returned only once its own row was written.
-    */
-  private[sink] def offer(entry: LogEntry): Boolean = {
+  override def append(entry: LogEntry): Unit = {
     lock.lock()
     try {
       buf += entry
       appended += 1
-      val boundary = buf.size % (bufferSize max 1) == 0 // 0: every append
-      if (boundary) commitThrough(appended)
-      boundary
+      if (buf.size % (bufferSize max 1) == 0) // 0: every append
+        commitThrough(appended)
     } finally lock.unlock()
   }
 
@@ -157,7 +159,9 @@ final class ParquetDirSink(
   /** Distributed variant: land an already-distributed Dataset of entries
     * without routing rows through the driver. Goes through
     * [[graft.core.Fs.stagedAppend]], so two sinks appending to one `dir`
-    * never share `dir/_temporary`.
+    * never share `dir/_temporary`, and a write that throws leaves no row
+    * in `dir`. The stage is a hidden subdirectory of `dir`, so the sink
+    * needs no access to `dir`'s parent and `dir` may be a bucket root.
     */
   def writeDataset(df: org.apache.spark.sql.DataFrame): Unit = {
     val (out, partCols) =
@@ -167,8 +171,8 @@ final class ParquetDirSink(
       else if (partitionOnDate)
         (df.withColumn("date", to_date(col("timestamp"))), Seq("date"))
       else (df, Nil)
-    graft.core.Fs.stagedAppend(out, partCols, dir,
-      Map("compression" -> compression))
+    graft.core.Fs.stagedAppend(out, partCols, dir, compression,
+      stageInside = true)
     ()
   }
 }
@@ -205,9 +209,35 @@ final class RetryingStorage(
   }
 }
 
-/** Composite sink: write every batch to all backends (S3 composite,
-  * storage.py:113-127).
+/** Composite sink: write every batch to all backends, in order (S3
+  * composite, storage.py:113-127).
+  *
+  * All or nothing toward a caller that sends a failed batch again, as
+  * [[BufferedSink]] does: when a backend throws, the backends before it
+  * have landed the batch, so each remembers those rows and is not sent
+  * them again. The primary lands every row once while a failing
+  * secondary retries. Rows are matched by reference — a re-sent batch
+  * holds the same `LogEntry` objects — and are forgotten once a call
+  * that carries them succeeds.
   */
 final class CompositeStorage(backends: Seq[Seq[LogEntry] => Unit]) {
-  def apply(entries: Seq[LogEntry]): Unit = backends.foreach(_(entries))
+
+  /** Per backend: rows it took in a call that then failed. */
+  private val taken = backends.map(_ => java.util.Collections.newSetFromMap(
+    new java.util.IdentityHashMap[LogEntry, java.lang.Boolean]))
+
+  def apply(entries: Seq[LogEntry]): Unit = {
+    val landed = ArrayBuffer.empty[(java.util.Set[LogEntry], Seq[LogEntry])]
+    try backends.zip(taken).foreach { case (write, seen) =>
+      val rest = seen.synchronized(entries.filterNot(seen.contains))
+      write(rest)
+      landed += seen -> rest
+    } catch {
+      case t: Throwable =>
+        landed.foreach { case (seen, rows) =>
+          seen.synchronized(rows.foreach(seen.add)) }
+        throw t
+    }
+    taken.foreach(seen => seen.synchronized(entries.foreach(seen.remove)))
+  }
 }

@@ -1,7 +1,6 @@
 package graft.sink
 
 import java.nio.file.Files
-import java.time.ZoneOffset
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
@@ -95,19 +94,12 @@ class BufferedSinkSpec extends SparkSpec {
   }
 
   test("real sink: 8 callback threads and a second logger on one dir " +
-    "land every row once, and only the writes' own files") {
+    "land every row once, and leave no stray files") {
     val dir = Files.createTempDirectory("gc").toString + "/log"
     val clock = FixedClock(1700000000000000L)
     val parquet = new ParquetDirSink(spark, dir)
-    // files the writes should leave: one per date partition per task,
-    // and a local batch of n rows runs as min(n, parallelism) tasks
-    val expectedFiles = new AtomicInteger
-    val slots = spark.sparkContext.defaultParallelism
-    def logger() = new ParquetLogger(new BufferedSink(batch => {
-      parquet.write(batch)
-      expectedFiles.addAndGet(math.min(batch.size, slots) * batch.map(
-        _.timestamp.toInstant.atZone(ZoneOffset.UTC).toLocalDate).distinct.size)
-    }, 50), EventType.Default, Map.empty, clock)
+    def logger() = new ParquetLogger(new BufferedSink(parquet.write, 50),
+      EventType.Default, Map.empty, clock)
     val main, second = logger()
     val thrown = new AtomicInteger
     def raise(l: ParquetLogger, runId: String): Unit =
@@ -129,6 +121,118 @@ class BufferedSinkSpec extends SparkSpec {
       (for (t <- 0 until 4; i <- 0 until 250) yield (s"b-$t-$i", "llm_start"))
     assert(landed.groupBy(identity).map { case (k, v) => k -> v.size } ===
       expected.map(_ -> 1).toMap)
-    assert(Fs.listDataFiles(spark, dir).size === expectedFiles.get)
+    // only the one date partition: no stage or _temporary left behind
+    val date = java.time.LocalDate.ofEpochDay(clock.nowMicros / 86400000000L)
+    assert(Fs.list(spark, dir).map(_.getPath.getName) === Seq(s"date=$date"))
+    assert(Fs.listDataFiles(spark, dir).forall(_.contains("/part-")))
   }
+
+  test("a composite whose second backend fails once lands each row " +
+    "on the first backend once") {
+    val first, second = new ConcurrentLinkedQueue[String]
+    val failures = new AtomicInteger
+    val composite = new CompositeStorage(Seq(
+      batch => batch.foreach(e => first.add(e.run_id)),
+      batch => {
+        if (failures.getAndIncrement() == 0) throw new RuntimeException("s3 down")
+        batch.foreach(e => second.add(e.run_id))
+      }))
+    val sink = new BufferedSink(composite.apply, bufferSize = 2)
+    sink.append(entry("r1"))
+    intercept[RuntimeException](sink.append(entry("r2")))
+    sink.append(entry("r3"))
+    sink.flush()
+    sink.close()
+    assert(first.asScala.toSeq === Seq("r1", "r2", "r3"))
+    assert(second.asScala.toSeq === Seq("r1", "r2", "r3"))
+  }
+
+  /** Rows on two dates, so every write stages at least two files. */
+  private def twoDays(n: Int) = (0 until n).map(i => LogEntry(
+    new java.sql.Timestamp(i % 2 * 86400000L), s"r$i", "", "", "llm_end",
+    "{}", "{}"))
+
+  private def runIds(dir: String): Seq[String] =
+    spark.read.parquet(dir).select("run_id").collect().map(_.getString(0))
+      .toSeq.sorted
+
+  test("ParquetDirSink: a move that fails partway lands no file, so the " +
+    "sink's retry lands each row once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftmv.impl", classOf[FailingMoveFs].getName)
+    val dir = "graftmv:" + Files.createTempDirectory("mv").toString + "/log"
+    val down = new ParquetDirSink(spark, dir)
+    val batch = twoDays(8)
+    FailingMoveFs.moves.set(0)
+    FailingMoveFs.failAt = 2
+    val sink = new BufferedSink(down.write, bufferSize = 8)
+    batch.init.foreach(sink.append)
+    intercept[java.io.IOException](sink.append(batch.last))
+    assert(Fs.listDataFiles(spark, dir).isEmpty)
+    FailingMoveFs.failAt = 0
+    sink.close()
+    assert(runIds(dir) === batch.map(_.run_id).sorted)
+    assert(Fs.list(spark, dir).forall(_.getPath.getName.startsWith("date=")))
+  }
+
+  test("ParquetDirSink writes at a bucket root") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftb.impl", classOf[BucketFs].getName)
+    BucketFs.root = Files.createTempDirectory("bucket").toString
+    val dir = "graftb://bucket/" // no parent, like s3a://bucket/
+    val batch = twoDays(4)
+    new ParquetDirSink(spark, dir).write(batch)
+    assert(runIds(dir) === batch.map(_.run_id).sorted)
+    assert(Fs.list(spark, dir).forall(_.getPath.getName.startsWith("date=")))
+  }
+}
+
+/** Local disk under the `graftmv:` scheme whose `failAt`-th rename out of
+  * a stage (counted from `moves`) throws; 0 never fails. Renames into a
+  * `.staging-` directory — Spark's task commits and a move's roll-back —
+  * are not counted. Top-level so Hadoop can instantiate it.
+  */
+class FailingMoveFs extends graft.core.TestSchemeFs {
+  import org.apache.hadoop.fs.Path
+
+  override def getUri: java.net.URI = java.net.URI.create("graftmv:///")
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (!dst.toString.contains("/.staging-") &&
+        FailingMoveFs.moves.incrementAndGet() == FailingMoveFs.failAt)
+      throw new java.io.IOException(s"injected: rename $src")
+    super.rename(src, dst)
+  }
+}
+
+object FailingMoveFs {
+  val moves = new AtomicInteger
+  @volatile var failAt = 0
+}
+
+/** Local disk under `graftb://bucket/`, rooted at `BucketFs.root`: a
+  * bucket-root URI, whose path has no parent. Top-level so Hadoop can
+  * instantiate it.
+  */
+class BucketFs extends graft.core.TestSchemeFs {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+
+  override def getUri: java.net.URI = java.net.URI.create("graftb://bucket/")
+
+  override def pathToFile(path: Path): java.io.File = {
+    val abs = if (path.isAbsolute) path else new Path(getWorkingDirectory, path)
+    new java.io.File(BucketFs.root + abs.toUri.getPath)
+  }
+
+  /** The local status names the file by its disk path; name it by `f`. */
+  override def getFileStatus(f: Path): FileStatus = {
+    val st = super.getFileStatus(f)
+    new FileStatus(st.getLen, st.isDirectory, st.getReplication,
+      st.getBlockSize, st.getModificationTime, st.getAccessTime,
+      st.getPermission, st.getOwner, st.getGroup, makeQualified(f))
+  }
+}
+
+object BucketFs {
+  @volatile var root = ""
 }

@@ -1,7 +1,7 @@
 package graft.sink
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
 
 import scala.jdk.CollectionConverters._
 
@@ -40,35 +40,38 @@ class LoggerSinkSpec2 extends SparkSpec {
 
   test("BufferedSink under concurrent appends loses nothing") {
     val landed = new ConcurrentHashMap[String, Integer]
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val boundaries, lateBoundaries = new java.util.concurrent.atomic.AtomicLong(0)
+    val writes = new ConcurrentLinkedQueue[Seq[String]] // run ids per write
     val sink = new BufferedSink(entries => {
       entries.foreach(e => landed.merge(e.run_id, 1, (a, b) => a + b))
-      batches.incrementAndGet()
+      writes.add(entries.map(_.run_id))
     }, bufferSize = 7)
+    val writtenOnReturn = ConcurrentHashMap.newKeySet[String]()
     val pool = Executors.newFixedThreadPool(8)
     val n = 2000
     (1 to n).foreach { i =>
       pool.submit(new Runnable {
         def run(): Unit = {
           val id = s"r$i"
-          if (sink.offer(graft.core.LogEntry(
-              new java.sql.Timestamp(0), id, "", "", "llm_end", "{}", "{}"))) {
-            boundaries.incrementAndGet()
-            if (!landed.containsKey(id)) lateBoundaries.incrementAndGet()
-          }
+          sink.append(graft.core.LogEntry(
+            new java.sql.Timestamp(0), id, "", "", "llm_end", "{}", "{}"))
+          if (landed.containsKey(id)) writtenOnReturn.add(id)
         }
       })
     }
     pool.shutdown()
     pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
     sink.close()
+    val batches = writes.asScala.toSeq
     // every row id written exactly once
     assert(landed.asScala.toMap === (1 to n).map(i => s"r$i" -> (1: Integer)).toMap)
-    // a boundary-crossing append returns only after its own row is written
-    assert(boundaries.get() > 0)
-    assert(lateBoundaries.get() === 0L)
+    // a boundary-crossing append returns only after its own row is written.
+    // Each write takes the whole buffer in append order and none failed,
+    // so a row at index k of its write left k + 1 rows in the buffer.
+    val boundaries = batches.flatMap(_.zipWithIndex.collect {
+      case (id, k) if (k + 1) % 7 == 0 => id })
+    assert(boundaries.nonEmpty)
+    assert(boundaries.filterNot(writtenOnReturn.contains) === Nil)
     // group commit: each write holds at least one full buffer, plus close()
-    assert(batches.get() >= 1L && batches.get() <= (n / 7 + 1).toLong)
+    assert(batches.size >= 1 && batches.size <= n / 7 + 1)
   }
 }
