@@ -110,26 +110,29 @@ object Fs {
   /** Every DATA file under `dir`, recursively, skipping `_`/`.`-prefixed
     * files and anything inside a `_`/`.`-prefixed directory — the same
     * visibility rule Spark's own file listing applies, so this is "what
-    * a directory-scan reader would read". Qualified paths; empty when
-    * the directory is missing.
+    * a directory-scan reader would read". A live sink's
+    * `.staging-<uuid>` directory is therefore never listed. Qualified
+    * paths; empty when the directory is missing.
     */
   def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
     val fs = apply(spark, dir)
     val root = fs.makeQualified(new Path(dir))
-    if (!fs.exists(root)) return Seq.empty
-    val it = fs.listFiles(root, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      val rel = root.toUri.relativize(st.getPath.toUri).getPath
-      val inHiddenDir = rel.split('/').init
-        .exists(d => d.startsWith("_") || d.startsWith("."))
-      if (!name.startsWith("_") && !name.startsWith(".") && !inHiddenDir)
-        out += st.getPath.toString
-    }
-    out.result()
+    if (!fs.exists(root)) Seq.empty
+    else dataFiles(fs, root).map(_.getPath.toString)
   }
+
+  /** The walk behind [[listDataFiles]] and [[moveDataFiles]]: one
+    * `listStatus` call per visible directory. `listFiles` builds a
+    * `LocatedFileStatus` per entry, and on the local filesystem without
+    * Hadoop's native library each one forks a shell to read permissions
+    * (320 files on a 4-core VM: 1.8–2.0 s, against 12–17 ms for this
+    * walk).
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }.flatMap(st => if (st.isDirectory) dataFiles(fs, st.getPath) else Seq(st))
 
   /** Move every DATA file under `srcDir` into `destDir`, preserving
     * relative subpaths (hive `c=v` partition dirs); `_SUCCESS`,
@@ -142,29 +145,17 @@ object Fs {
     * so a caller that retries the move does not land them twice. (If
     * renaming back fails too, that error is attached as suppressed and
     * those files stay in `destDir`.)
-    *
-    * Walks with `listStatus`, one call per directory: `listFiles` builds a
-    * `LocatedFileStatus` per entry, and on the local filesystem without
-    * Hadoop's native library each one forks a shell to read permissions —
-    * about 30 ms for a 4-file staged append, nearly all of the move.
     */
   def moveDataFiles(
       spark: SparkSession, srcDir: String, destDir: String): Seq[String] = {
     val fs = apply(spark, srcDir)
     val src = fs.makeQualified(new Path(srcDir))
     val dest = fs.makeQualified(new Path(destDir))
-    def visible(st: FileStatus) = {
-      val name = st.getPath.getName
-      !name.startsWith("_") && !name.startsWith(".")
-    }
-    def dataFiles(dir: Path): Seq[FileStatus] =
-      fs.listStatus(dir).toSeq.filter(visible).flatMap(st =>
-        if (st.isDirectory) dataFiles(st.getPath) else Seq(st))
     def rename(from: Path, to: Path): Unit =
       if (!fs.rename(from, to))
         throw new java.io.IOException(s"rename $from to $to failed")
     val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
-    try dataFiles(src).foreach { st =>
+    try dataFiles(fs, src).foreach { st =>
       val rel = src.toUri.relativize(st.getPath.toUri).getPath
       val target = new Path(dest, rel)
       fs.mkdirs(target.getParent)

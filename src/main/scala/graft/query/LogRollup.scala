@@ -67,7 +67,7 @@ object LogRollup {
   def appendNew(spark: SparkSession, logDir: String,
       rollupDir: String): Int = {
     val done = ShreddedLog.processedSrcs(spark, rollupDir)
-    val fresh = ShreddedLog.logFiles(spark, logDir)
+    val fresh = Fs.listDataFiles(spark, logDir)
       .filterNot(f => done(ShreddedLog.md5Hex(f)))
     if (fresh.nonEmpty) {
       val src = spark.read

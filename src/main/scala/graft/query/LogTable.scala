@@ -30,13 +30,19 @@ final class LogTable private (val df: DataFrame) {
   def byEventType(types: String*): LogTable =
     new LogTable(df.filter(col("event_type").isin(types: _*)))
 
-  /** Q7: per-event-type counts. */
+  /** Q7: per-event-type counts. The result has at most one row per
+    * `EventType`, so it is sorted in one partition: no range exchange,
+    * and no sampling job to plan one.
+    */
   def eventCounts: DataFrame =
-    df.groupBy("event_type").agg(count(lit(1)).as("n")).orderBy("event_type")
+    df.groupBy("event_type").agg(count(lit(1)).as("n"))
+      .coalesce(1).orderBy("event_type")
 
-  /** Q6: distinct event types. */
+  /** Q6: distinct event types, sorted in one partition like
+    * [[eventCounts]].
+    */
   def distinctEventTypes: DataFrame =
-    df.select("event_type").distinct().orderBy("event_type")
+    df.select("event_type").distinct().coalesce(1).orderBy("event_type")
 
   /** Q2+Q3 composed: token usage per custom_id with null-safe defaults
     * (README.md:221-224, examples/batch_run_example.py:100-130).

@@ -86,22 +86,6 @@ object ShreddedLog {
       .partitionBy("date", "src")
       .parquet(shredDir)
 
-  /** Source data files of a log directory (recursive under `date=`). */
-  private[query] def logFiles(spark: SparkSession, logDir: String): Seq[String] = {
-    val fs = Fs(spark, logDir)
-    val p = new org.apache.hadoop.fs.Path(logDir)
-    if (!fs.exists(p)) return Seq.empty
-    val it = fs.listFiles(p, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith("."))
-        out += st.getPath.toString
-    }
-    out.result()
-  }
-
   private[query] def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.replaceFirst(SchemePattern, "").getBytes("UTF-8"))
@@ -133,7 +117,7 @@ object ShreddedLog {
     */
   def appendNew(spark: SparkSession, logDir: String, shredDir: String): Int = {
     val done = processedSrcs(spark, shredDir)
-    val fresh = logFiles(spark, logDir).filterNot(f => done(md5Hex(f)))
+    val fresh = Fs.listDataFiles(spark, logDir).filterNot(f => done(md5Hex(f)))
     if (fresh.nonEmpty) {
       // basePath keeps the log's own `date=` partition column visible
       // while reading an explicit file list

@@ -141,6 +141,11 @@ final class BufferedSink(downstream: Seq[LogEntry] => Unit, bufferSize: Int = 10
   * PartitionFilters and the read is 1/24th the I/O. Readers that filter
   * on `date` alone still prune — hive layouts prune on any prefix of the
   * key list.
+  *
+  * File layout: each [[write]] call lands one file per partition it
+  * touches (per `date`, or per `(date, hour)` under `hourGrain`), like
+  * the reference's one file per flush (storage.py:37-41). Each
+  * [[writeDataset]] call lands one file per task per partition.
   */
 final class ParquetDirSink(
     spark: SparkSession,
@@ -150,10 +155,14 @@ final class ParquetDirSink(
     hourGrain: Boolean = false)
     extends Serializable {
 
+  /** Lands a driver-side batch (a [[BufferedSink]] flush). The batch is a
+    * few hundred rows, so it is written by one task: splitting it over
+    * the local cores would multiply the files every later scan opens.
+    */
   def write(entries: Seq[LogEntry]): Unit = {
     if (entries.isEmpty) return
     import spark.implicits._
-    writeDataset(spark.createDataset(entries).toDF())
+    writeDataset(spark.createDataset(entries).toDF().coalesce(1))
   }
 
   /** Distributed variant: land an already-distributed Dataset of entries

@@ -19,13 +19,13 @@ class LogCompactorSpec extends SparkSpec {
         "{}", s"""{"b":$b,"i":$i}""")))
     }
     val part = new java.io.File(s"$dir/date=2023-11-14")
-    // each flush writes one file per task (local[4]) → 40 small files
+    // each flush writes one file per date partition → 10 small files
     val before = part.listFiles().count(_.getName.endsWith(".parquet"))
-    assert(before === 40)
+    assert(before === 10)
     val pre = spark.read.parquet(dir).orderBy("run_id").collect()
 
     val reports = LogCompactor.compact(spark, dir, targetFileBytes = 1L << 30)
-    assert(reports.map(_.filesBefore).sum === 40)
+    assert(reports.map(_.filesBefore).sum === 10)
     val after = part.listFiles().count(_.getName.endsWith(".parquet"))
     assert(after === 1)
     val post = spark.read.parquet(dir).orderBy("run_id").collect()

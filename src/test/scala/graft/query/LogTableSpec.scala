@@ -52,6 +52,23 @@ class LogTableSpec extends SparkSpec {
     assert(logs.distinctEventTypes.count() === 5L)
   }
 
+  test("Q7/Q6 sort in one partition: no range exchange, same rows") {
+    import org.apache.spark.sql.functions._
+    val pairs = Seq(
+      logs.eventCounts -> logs.df.groupBy("event_type")
+        .agg(count(lit(1)).as("n")).orderBy("event_type"),
+      logs.distinctEventTypes -> logs.df.select("event_type").distinct()
+        .orderBy("event_type"))
+    pairs.foreach { case (q, ranged) =>
+      val rows = q.collect().toSeq
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("rangepartitioning"), plan)
+      assert(ranged.queryExecution.executedPlan.toString
+        .contains("rangepartitioning"))
+      assert(rows === ranged.collect().toSeq)
+    }
+  }
+
   test("Q2/Q3 flagship: token usage per custom id from parsed payload") {
     val rows = logs.tokenUsageByCustomId.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))

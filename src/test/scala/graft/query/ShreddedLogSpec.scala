@@ -129,4 +129,50 @@ class ShreddedLogSpec extends SparkSpec {
     assert(err.collect().map(_.toString) === wantErr)
     assert(wantErr.nonEmpty && wantTok.nonEmpty, "fixture must exercise both")
   }
+
+  test("a live sink's stage is not a source file: appendNew skips " +
+    "part files under .staging-") {
+    val root = java.nio.file.Files.createTempDirectory("shredstage").toString
+    val logDir = s"$root/log"
+    writeBatch(logDir, 0 until 20, usage = true)
+    val landed = graft.core.Fs.listDataFiles(spark, logDir)
+    // a part file that a concurrent append has staged but not yet moved
+    val staged = java.nio.file.Paths.get(logDir, ".staging-x",
+      "date=2023-11-14", "part-00000-staged.snappy.parquet")
+    java.nio.file.Files.createDirectories(staged.getParent)
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(new java.net.URI(landed.head)), staged)
+
+    assert(graft.core.Fs.listDataFiles(spark, logDir) === landed)
+    assert(ShreddedLog.appendNew(spark, logDir, s"$root/store") === landed.size)
+    assert(ShreddedLog.read(spark, s"$root/store").count() === 20L)
+    assert(LogRollup.appendNew(spark, logDir, s"$root/rollup") === landed.size)
+  }
+
+  test("appendNew finds nothing new in a store built from a recursive " +
+    "listFiles scan: source fingerprints do not depend on the listing") {
+    val root = java.nio.file.Files.createTempDirectory("shredfp").toString
+    val logDir = s"$root/log"
+    val storeDir = s"$root/store"
+    writeBatch(logDir, 0 until 30, usage = true)
+    writeBatch(logDir, 30 until 45, usage = false)
+    // build the store from the file list a FileSystem.listFiles walk gives
+    val fs = graft.core.Fs(spark, logDir)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(logDir), true)
+    val files = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (!p.getName.startsWith("_") && !p.getName.startsWith("."))
+        files += p.toString
+    }
+    val src = spark.read.option("basePath", logDir)
+      .schema(graft.core.LogSchema.schema.add("date",
+        org.apache.spark.sql.types.DateType))
+      .parquet(files.result(): _*)
+    ShreddedLog.shred(src.drop("date")).write.mode("overwrite")
+      .partitionBy("date", "src").parquet(storeDir)
+
+    assert(ShreddedLog.appendNew(spark, logDir, storeDir) === 0)
+    assert(ShreddedLog.read(spark, storeDir).count() === 45L)
+  }
 }

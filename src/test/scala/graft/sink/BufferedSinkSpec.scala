@@ -98,7 +98,12 @@ class BufferedSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("gc").toString + "/log"
     val clock = FixedClock(1700000000000000L)
     val parquet = new ParquetDirSink(spark, dir)
-    def logger() = new ParquetLogger(new BufferedSink(parquet.write, 50),
+    val writes = new AtomicInteger
+    def write(batch: Seq[LogEntry]): Unit = {
+      parquet.write(batch)
+      if (batch.nonEmpty) writes.incrementAndGet()
+    }
+    def logger() = new ParquetLogger(new BufferedSink(write, 50),
       EventType.Default, Map.empty, clock)
     val main, second = logger()
     val thrown = new AtomicInteger
@@ -124,7 +129,10 @@ class BufferedSinkSpec extends SparkSpec {
     // only the one date partition: no stage or _temporary left behind
     val date = java.time.LocalDate.ofEpochDay(clock.nowMicros / 86400000000L)
     assert(Fs.list(spark, dir).map(_.getPath.getName) === Seq(s"date=$date"))
-    assert(Fs.listDataFiles(spark, dir).forall(_.contains("/part-")))
+    // one file per write in that partition
+    val files = Fs.listDataFiles(spark, dir)
+    assert(files.forall(_.contains(s"/date=$date/part-")))
+    assert(files.size === writes.get)
   }
 
   test("a composite whose second backend fails once lands each row " +

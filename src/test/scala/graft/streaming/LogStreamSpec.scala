@@ -58,15 +58,15 @@ class LogStreamSpec extends SparkSpec {
       assert(c2.map(r => (r.getString(1), r.getLong(2))).toSeq
         === Seq(("chain_start", 2L), ("llm_end", 5L)))
 
-      // incrementality: across all micro-batches the source emitted each
-      // llm_end row exactly once (3 from the first flush, 2 from the
-      // second; the event-type filter is pushed into the streaming scan,
-      // so chain_start rows never leave the source) — a history rescan
-      // would double-count
+      // incrementality: across all micro-batches the source read each row
+      // of both flushes exactly once (4 from the first, 3 from the second;
+      // each flush is one file, so its chain_start row is read and then
+      // dropped by the event-type filter) — a history rescan would read
+      // the first flush again, 11 rows
       val batchRows = usage.recentProgress
         .filter(_.numInputRows > 0).map(_.numInputRows)
       assert(batchRows.length >= 2)
-      assert(batchRows.sum === 5L)
+      assert(batchRows.sum === 7L)
     } finally { usage.stop(); counts.stop() }
   }
 
