@@ -3,7 +3,9 @@ package graft.core
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
+import org.apache.spark.sql.types.StructType
 
 /** Filesystem access for persistent-store operators, routed through the
   * Hadoop FileSystem API so every path-keyed store (span-dedup ledgers,
@@ -170,4 +172,128 @@ object Fs {
     }
     moved.map(_._2.toString).toSeq
   }
+
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job.
+    * Without a schema, Spark infers one through
+    * `SchemaMergeUtils.mergeSchemasInParallel`, which runs a one-task
+    * Spark job to read a single footer even with `mergeSchema` off. This
+    * reads that same footer on the driver (see [[parquetSchema]]) and
+    * opens the paths under the result, so opening a source runs no job.
+    * Rows, column order and types are those of the plain read; partition
+    * columns are still discovered from `k=v` directories. Where no footer
+    * applies (a missing path, a directory without data files, a glob, a
+    * merged schema) this is the plain read, so errors stay Spark's own.
+    */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    openParquet(spark, Map.empty, paths)
+
+  /** [[readParquet]] with Spark's `basePath` option: partition columns
+    * are discovered from the directories below `basePath`, also when
+    * `paths` name single partitions or files.
+    */
+  def readParquetUnder(
+      spark: SparkSession, basePath: String, paths: String*): DataFrame =
+    openParquet(spark, Map("basePath" -> basePath), paths)
+
+  /** The data schema `spark.read.parquet(paths: _*)` infers, read from
+    * one footer on the driver: no Spark job and no DataFrame. For an
+    * unpartitioned source it equals that read's `.schema`; partition
+    * columns are not part of it. Where no footer applies (see
+    * [[readParquet]]) it is that read's `.schema`, or Spark's error.
+    *
+    * The footer is the one inference would pick: a root's
+    * `_common_metadata`, then its `_metadata`, then the first visible
+    * data file in path order. The walk lists only the directories on
+    * the way to that file. Spark also honours summary files nested below
+    * a root; those are only written when `parquet.summary.metadata.level`
+    * asks for them, and then at the output root, so only a root's are
+    * looked for.
+    */
+  def parquetSchema(spark: SparkSession, paths: String*): StructType =
+    footerSchema(spark, Map.empty, paths)
+      .getOrElse(spark.read.parquet(paths: _*).schema)
+
+  private def openParquet(spark: SparkSession,
+      options: Map[String, String], paths: Seq[String]): DataFrame = {
+    val reader = spark.read.options(options)
+    footerSchema(spark, options, paths).fold(reader)(reader.schema)
+      .parquet(paths: _*)
+  }
+
+  /** None where inference must decide: a merged schema, a glob, a
+    * streaming sink's output (read through its `_spark_metadata` log),
+    * no file to read, a footer that does not parse (Spark raises the
+    * error), or a data column that is also a partition directory's
+    * name (partition inference types it).
+    */
+  private def footerSchema(spark: SparkSession,
+      options: Map[String, String], paths: Seq[String]): Option[StructType] =
+    if (paths.isEmpty || GraftFooterSchema.mergeRequested(spark, options)
+        || paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else try schemaSource(spark, paths).flatMap { file =>
+      val schema = GraftFooterSchema.read(spark, file, options)
+      val partDirs = Iterator.iterate(file.getPath.getParent)(_.getParent)
+        .takeWhile(_ != null).map(_.getName).filter(_.contains("="))
+        .map(_.takeWhile(_ != '=')).toSeq
+      if (schema.fieldNames.exists(f => partDirs.exists(_.equalsIgnoreCase(f))))
+        None
+      else Some(schema)
+    } catch { case NonFatal(_) => None }
+
+  private val CommonMetadata = "_common_metadata"
+  private val Metadata = "_metadata"
+
+  /** Spark's file-source listing filter (`InMemoryFileIndex`): hidden
+    * `_`/`.` names are skipped, except `k=v` directories and the summary
+    * files Parquet reads schemas from.
+    */
+  private def sparkVisible(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")) ||
+      name.startsWith(CommonMetadata) || name.startsWith(Metadata)
+
+  private def isSummary(st: FileStatus): Boolean = {
+    val name = st.getPath.getName
+    name == CommonMetadata || name == Metadata
+  }
+
+  /** The file Parquet inference reads its schema from (mergeSchema off):
+    * a summary file, else the data file whose path sorts first.
+    */
+  private def schemaSource(
+      spark: SparkSession, paths: Seq[String]): Option[FileStatus] = {
+    val roots = paths.map { p =>
+      val fs = apply(spark, p)
+      val st = fs.getFileStatus(fs.makeQualified(new Path(p)))
+      (fs, st, if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Nil)
+    }
+    // Spark's own rules apply to a hidden or summary root file and to a
+    // streaming sink's output directory
+    val opaque = roots.exists { case (_, st, _) =>
+        st.isFile && (!sparkVisible(st.getPath.getName) || isSummary(st))
+      } || (roots.size == 1 &&
+        roots.head._3.exists(_.getPath.getName == "_spark_metadata"))
+    def first(sts: Seq[FileStatus]) = sts.minByOption(_.getPath.toString)
+    def summaries(name: String) =
+      first(roots.flatMap(_._3).filter(c => c.isFile && c.getPath.getName == name))
+    if (opaque) None
+    else summaries(CommonMetadata).orElse(summaries(Metadata)).orElse(
+      first(roots.flatMap { case (fs, st, children) =>
+        if (st.isFile) Some(st) else firstDataFile(fs, children)
+      }))
+  }
+
+  /** Depth-first in full-path order: a directory sorts as its name plus
+    * "/", so siblings are visited in the order their paths sort, and the
+    * walk ends at the first data file.
+    */
+  private def firstDataFile(
+      fs: FileSystem, children: Seq[FileStatus]): Option[FileStatus] =
+    children.filter(c => sparkVisible(c.getPath.getName))
+      .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+      .iterator.flatMap { c =>
+        if (c.isDirectory) firstDataFile(fs, fs.listStatus(c.getPath).toSeq)
+        else if (isSummary(c)) None
+        else Some(c)
+      }.nextOption()
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
 import graft.ops.{Bm25, KMeans, ProductQuantizer}
 
 /** Retrieval serving pipeline over the curated corpus — the query-side
@@ -36,11 +37,11 @@ object RagServingPipeline {
       .createTempDirectory("rag_serving").toString
 
     // ---- offline: build the two indexes --------------------------------
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Fs.readParquet(spark, s"$sfDir/documents.parquet")
     Bm25.buildIndex(docs, "doc_id", "text", s"$base/bm25", nBuckets = 16)
     println(s"bm25 index built over ${docs.count()} docs")
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Fs.readParquet(spark, s"$sfDir/embeddings.parquet")
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Fs
 import graft.ops.Decontaminate
 import graft.streaming.IdempotentSink
 
@@ -50,7 +51,7 @@ object StreamingCurationPipeline {
     val outDir = s"$work/curated"
 
     // simulate arrival: the corpus lands as two file generations
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Fs.readParquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text", "lang")
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(inDir)
 

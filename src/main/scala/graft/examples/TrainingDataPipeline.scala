@@ -3,6 +3,7 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
 import graft.ops.SignatureStore
 
 /** Training-data curation pipeline over the `documents` corpus — the
@@ -55,7 +56,7 @@ object TrainingDataPipeline {
     val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def rec(name: String, v: Long): Long = { counts += name -> v; v }
 
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
+    val raw = Fs.readParquet(spark, s"$sfDir/documents.parquet")
     println(s"corpus: ${rec("corpus", raw.count())} docs")
 
     // 0. cross-run suppression: drop every document whose content
@@ -137,7 +138,7 @@ object TrainingDataPipeline {
     // 3d. semantic dedup on the embedding view of the corpus (SemDeDup):
     //     coarse clusters from frozen centroids, drop near-identical
     //     vectors within each cluster
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Fs.readParquet(spark, s"$sfDir/embeddings.parquet")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
       .withColumn("nrm", expr("dot_product(v, v)"))
@@ -260,7 +261,7 @@ object TrainingDataPipeline {
     //    read nprobe directories of an index ~128× smaller than the
     //    vectors). This is the retrieval index a curated corpus ships
     //    with; StreamIndex appends later arrivals exactly-once.
-    val evec = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val evec = Fs.readParquet(spark, s"$sfDir/embeddings.parquet")
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))

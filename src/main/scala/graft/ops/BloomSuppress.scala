@@ -201,7 +201,7 @@ object BloomSuppress {
     * sketch — bounded model state (mBits/8 bytes), same as every probe.
     */
   def fillReport(spark: SparkSession, dir: String): FillReport = {
-    val meta = spark.read.parquet(dir)
+    val meta = Fs.readParquet(spark, dir)
       .agg(count(lit(1)).as("n_shards"),
         coalesce(sum(col("n_keys")), lit(0L)).as("total_keys"),
         first(col("fpp"), ignoreNulls = true).as("fpp"))
@@ -231,7 +231,7 @@ object BloomSuppress {
     */
   def ledgerSketch(spark: SparkSession, dir: String): Array[Byte] = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val bf = spark.read.parquet(dir)
+    val bf = Fs.readParquet(spark, dir)
       .agg(expr("bloom_merge_agg(sketch)").as("bf"))
       .head().getAs[Array[Byte]]("bf")
     require(bf.length >= graft.functions.BloomBits.headerBytes,

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** BM25 full-text retrieval — the lexical-search leg of the engine,
   * beside the ANN family (`VectorIndex`/`ProductQuantizer`): score
   * documents against a bag-of-terms query with the standard
@@ -249,7 +251,7 @@ object Bm25 {
     * interleaved — last writer won).
     */
   def readStats(spark: SparkSession, path: String): DataFrame = {
-    val base = spark.read.parquet(s"$path/stats")
+    val base = Fs.readParquet(spark, s"$path/stats")
       .agg(sum("n").cast("long").as("n"), sum("sdl").cast("long").as("sdl"),
         max("n_buckets").cast("long").as("n_buckets"))
     // the forget ledger subtracts its banned docs from the corpus
@@ -313,7 +315,7 @@ object Bm25 {
       path: String): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nBuckets = spark.read.parquet(s"$path/stats")
+    val nBuckets = Fs.readParquet(spark, s"$path/stats")
       .agg(max("n_buckets")).as[Long].head()
     // banned ids drop at INGEST (before postings and stats), so a
     // re-appended taken-down document neither serves nor skews the

@@ -146,7 +146,7 @@ object ClusteredStore {
       asOf: Option[Int] = None): DataFrame = {
     val v = asOf.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalStateException(s"no committed manifest under $dir"))
-    spark.read.parquet(versionDir(dir, v))
+    Fs.readParquet(spark, versionDir(dir, v))
   }
 
   // -------------------------------------------------------------------
@@ -563,7 +563,7 @@ object ClusteredStore {
       .sorted.lastOption.getOrElse(
         throw new IllegalStateException(
           s"no committed model <= v$asOf under $dir"))
-    val m = spark.read.parquet(modelVersionDir(dir, mv)).collect()
+    val m = Fs.readParquet(spark, modelVersionDir(dir, mv)).collect()
     val cluster = m.filter(_.getAs[Int]("pos") >= 0)
     val curve = cluster.head.getAs[String]("curve")
     val lo = cluster.map(r =>
@@ -728,7 +728,7 @@ object ClusteredStore {
       .write.mode("overwrite").parquet(dataDir(dir))
     writeAnchor(spark, dir, anchorSt)
     commitManifest(
-      stamp(ledgerRows(spark.read.parquet(dataDir(dir)), m, key,
+      stamp(ledgerRows(Fs.readParquet(spark, dataDir(dir)), m, key,
         batchId = -1L), wm = -1L, clamped = 0L),
       dir, claim)
   }
@@ -974,7 +974,7 @@ object ClusteredStore {
     val fresh =
       if (newFiles.isEmpty) untouched
       else untouched.unionByName(
-        ledgerRows(spark.read.parquet(newFiles: _*), m, key, batchId),
+        ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key, batchId),
         allowMissingColumns = true)
     commitManifest(
       stamp(fresh, wm, priorClamped + clamped), dir, claim)
@@ -1080,7 +1080,7 @@ object ClusteredStore {
     val fresh =
       if (newFiles.isEmpty) untouched
       else untouched.unionByName(
-        ledgerRows(spark.read.parquet(newFiles: _*), m, key,
+        ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
           batchId = -1L),
         allowMissingColumns = true)
     heartbeat(spark, claim, dir)
@@ -1138,7 +1138,7 @@ object ClusteredStore {
     // zero-row manifest instead of reading zero parquet paths
     val rows =
       if (newFiles.isEmpty) cur.limit(0)
-      else ledgerRows(spark.read.parquet(newFiles: _*), m, key,
+      else ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
         batchId = -1L)
     commitManifest(stamp(rows, priorWm, clamped = 0L), dir, claim)
     AppendStats(rewritten = oldFileCount,
@@ -1252,7 +1252,7 @@ object ClusteredStore {
     val fresh =
       if (newFiles.isEmpty) untouched
       else untouched.unionByName(
-        ledgerRows(spark.read.parquet(newFiles: _*), m, key,
+        ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
           batchId = -1L),
         allowMissingColumns = true)
     commitManifest(stamp(fresh, priorWm, priorClamped), dir, claim)
@@ -1340,7 +1340,7 @@ object ClusteredStore {
         val fresh =
           if (newFiles.isEmpty) untouched
           else untouched.unionByName(
-            ledgerRows(spark.read.parquet(newFiles: _*), m, key,
+            ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
               batchId = -1L),
             allowMissingColumns = true)
         commitManifest(stamp(fresh, priorWm, priorClamped), dir, claim)
@@ -1506,7 +1506,7 @@ object ClusteredStore {
           .collect { case (f, _, _, Some(p), _) => (p, f) }
           .groupBy(_._1)
           .map { case (p, fs) =>
-            spark.read.parquet(p)
+            Fs.readParquet(spark, p)
               .filter(col("_dvf").isin(fs.map(_._2): _*))
               .select(col("_dvf").as("_dvf2"), col("_dvk"))
           }
@@ -1650,7 +1650,7 @@ object ClusteredStore {
           val next =
             if (newFiles.isEmpty) kept
             else kept.unionByName(
-              ledgerRows(spark.read.parquet(newFiles: _*), m, key,
+              ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
                 batchId = -1L),
               allowMissingColumns = true)
           (next, foldFiles)
@@ -1714,7 +1714,7 @@ object ClusteredStore {
               prior.get(f).flatMap(_._2).map(sc => (sc, f)) }
             .groupBy(_._1)
             .map { case (sc, fs) =>
-              spark.read.parquet(sc)
+              Fs.readParquet(spark, sc)
                 .filter(col("_dvf").isin(fs.map(_._2): _*))
                 .select("_dvf", "_dvk")
             }
@@ -1881,7 +1881,7 @@ object ClusteredStore {
       else dropCandidates.partition(n => commitAgeMs(n) >= olderThanMs)
     val keep = (keptYoung ++ keepByCount).sorted
     val keptMans = keep.map(n => ensureDvCols(
-      spark.read.parquet(versionDir(dir, n))))
+      Fs.readParquet(spark, versionDir(dir, n))))
     val keptPaths = keptMans.flatMap(
       _.select("file").collect().map(r => normPath(r.getString(0)))).toSet
     // deletion-vector sidecars the kept versions still reference
@@ -2064,11 +2064,11 @@ object ClusteredStore {
       : Option[org.apache.spark.sql.types.StructType] =
     anchorVersion(spark, dir) match {
       case Some(v) =>
-        Some(spark.read.parquet(s"${schemaDir(dir)}/v=$v").schema)
+        Some(Fs.parquetSchema(spark, s"${schemaDir(dir)}/v=$v"))
       case None =>
         val legacy = Fs.list(spark, schemaDir(dir))
           .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        if (legacy) Some(spark.read.parquet(schemaDir(dir)).schema)
+        if (legacy) Some(Fs.parquetSchema(spark, schemaDir(dir)))
         else None
     }
 
@@ -2269,7 +2269,7 @@ object ClusteredStore {
       case Some(st) =>
         ensureFieldIdConfs(spark) // anchor ids resolve renamed columns
         spark.read.schema(st).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
+      case None => Fs.readParquet(spark, files: _*)
     }
 
   // -------------------------------------------------------------------
@@ -2292,7 +2292,7 @@ object ClusteredStore {
       // schema inference from data/ is not an option
       case Some(st) => emptyFrame(spark, st)
       case None => // pre-anchor store: old inference fallback
-        spark.read.parquet(dataDir(dir)).where(lit(false))
+        Fs.readParquet(spark, dataDir(dir)).where(lit(false))
     }
   }
 

@@ -418,7 +418,7 @@ object Forget {
       reqId: String, win: Win): DataFrame = {
     import spark.implicits._
     if (win.staged)
-      spark.read.parquet(idsDir(ledgerDir, reqId, win.tie))
+      Fs.readParquet(spark, idsDir(ledgerDir, reqId, win.tie))
         .select(col("_fg_id").cast("string").as("_fg_id"))
     else win.ids.toDF("_fg_id")
   }

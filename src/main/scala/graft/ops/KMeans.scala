@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Fs
+
 import VectorIndex.Centroid
 
 /** Distributed Lloyd k-means over an embedding column — the trainer that
@@ -96,7 +98,7 @@ object KMeans {
   def load(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Centroid] =
-    spark.read.parquet(path)
+    Fs.readParquet(spark, path)
       .select("id", "v", "nrm").collect()
       .map(r => Centroid(r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_.id).toSeq

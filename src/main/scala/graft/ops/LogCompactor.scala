@@ -56,7 +56,7 @@ object LogCompactor {
       val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
       val report = CompactionReport(p.getPath.getName, files.length, target, bytes)
       if (files.length > target || clusterBy.nonEmpty) {
-        val df0 = spark.read.parquet(pPath).coalesce(target)
+        val df0 = Fs.readParquet(spark, pPath).coalesce(target)
         val df =
           if (clusterBy.isEmpty) df0
           else df0.sortWithinPartitions(clusterBy.map(col): _*)
@@ -64,7 +64,7 @@ object LogCompactor {
         df.write.mode(SaveMode.Overwrite)
           .option("compression", "snappy").parquet(tmp)
         // atomic-ish swap: rewrite into place from the compacted copy
-        val compacted = spark.read.parquet(tmp)
+        val compacted = Fs.readParquet(spark, tmp)
         compacted.coalesce(target).write.mode(SaveMode.Overwrite)
           .option("compression", "snappy").parquet(pPath)
         Fs.delete(spark, tmp)
@@ -99,10 +99,10 @@ object LogCompactor {
         files.length, target, bytes)
       if (files.length > target) {
         val tmp = dir + ".compact"
-        spark.read.parquet(dir).coalesce(target)
+        Fs.readParquet(spark, dir).coalesce(target)
           .write.mode(SaveMode.Overwrite)
           .option("compression", "snappy").parquet(tmp)
-        spark.read.parquet(tmp).coalesce(target)
+        Fs.readParquet(spark, tmp).coalesce(target)
           .write.mode(SaveMode.Overwrite)
           .option("compression", "snappy").parquet(dir)
         Fs.delete(spark, tmp)

@@ -156,7 +156,7 @@ object LogForget {
     // one COLUMN-PRUNED scan (the match column + the two partition
     // columns) finds the hit partitions; everything after touches only
     // those
-    val all = spark.read.option("basePath", storeDir).parquet(storeDir)
+    val all = Fs.readParquetUnder(spark, storeDir, storeDir)
       .select(col(matchCol).cast("string").as("_lf_m"),
         col("date"), col(partCol).cast("string").as("_lf_p"))
     val hits = all.join(k, all("_lf_m") === k("_lf_cid"), "left_semi")
@@ -170,7 +170,7 @@ object LogForget {
     hits.foreach { case (d, p) =>
       Tombstones.rewriteCommitted(spark, s"$storeDir/date=$d",
         s"$partCol=$p", old =>
-          spark.read.parquet(old: _*)
+          Fs.readParquet(spark, old: _*)
             .join(k, col(matchCol).cast("string") === k("_lf_cid"),
               "left_anti"))
     }
@@ -232,7 +232,7 @@ object LogForget {
     val k = shape(keys)
     dateDirs(spark, rollupDir).foreach(d =>
       Tombstones.healAndSweep(spark, d.getPath.toString))
-    val shred = spark.read.option("basePath", shredDir).parquet(shredDir)
+    val shred = Fs.readParquetUnder(spark, shredDir, shredDir)
       .select(col(matchCol).cast("string").as("_lf_m"),
         col("date"), col("src").cast("string").as("_lf_p"))
     val hits = shred.join(k, shred("_lf_m") === k("_lf_cid"),
@@ -303,7 +303,7 @@ object LogForget {
       matchCol: String, k: DataFrame, d: String, s: String): DataFrame = {
     val srcFiles = Fs.listDataFiles(spark, s"$shredDir/date=$d/src=$s")
     if (srcFiles.isEmpty) emptyShred(spark)
-    else spark.read.parquet(srcFiles: _*)
+    else Fs.readParquet(spark, srcFiles: _*)
       .join(k, col(matchCol).cast("string") === k("_lf_cid"),
         "left_anti")
   }
@@ -331,7 +331,7 @@ object LogForget {
     // persisted: unpersisted, every BFS level re-ran the FULL log scan
     // + the edge distinct — work ∝ depth × corpus instead of ∝ corpus.
     // Freed before returning (the result rides its own checkpoints).
-    val edges = spark.read.option("basePath", logDir).parquet(logDir)
+    val edges = Fs.readParquetUnder(spark, logDir, logDir)
       .select(col("run_id").cast("string").as("_rt_id"),
         col("parent_run_id").cast("string").as("_rt_parent"))
       .filter(col("_rt_parent").isNotNull && col("_rt_parent") =!= "")

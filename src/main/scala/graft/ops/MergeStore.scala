@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** Keyed merge/upsert store — the MERGE INTO primitive (CDC apply) on
   * plain parquet: a table of (key, payload) rows maintained by change
   * batches of upserts and deletes, laid out so each merge rewrites ONLY
@@ -101,7 +103,7 @@ object MergeStore {
     // free inside the single shuffle.
     val merged =
       if (!fs.exists(new Path(path))) lww(withKb)
-      else lww(spark.read.parquet(path)
+      else lww(Fs.readParquet(spark, path)
         .filter(col("kb").isin(buckets: _*))
         .select(ordered.map(col): _*)
         .unionByName(withKb.select(ordered.map(col): _*)))
@@ -123,7 +125,7 @@ object MergeStore {
 
   /** Current live table state (tombstones filtered, all buckets). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Fs.readParquet(spark, path)
       .filter(!col("is_delete"))
       .drop("kb", "is_delete")
 
@@ -154,7 +156,7 @@ object MergeStore {
     val kb = Seq(key).toDF(keyCol)
       .select(pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)))
       .as[Long].head()
-    spark.read.parquet(path)
+    Fs.readParquet(spark, path)
       .filter(col("kb") === kb && col(keyCol) === key &&
         !col("is_delete"))
       .drop("kb", "is_delete")
@@ -191,7 +193,7 @@ object MergeStore {
   def purgeTombstones(spark: SparkSession, path: String): Unit = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = spark.read.parquet(path).filter(!col("is_delete"))
+    val live = Fs.readParquet(spark, path).filter(!col("is_delete"))
     val tmp = s"$path/_purge_tmp"
     live.write.mode("overwrite").partitionBy("kb").parquet(tmp)
     fs.listStatus(new Path(path)).iterator

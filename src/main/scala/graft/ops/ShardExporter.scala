@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** Materialized token-balanced shard export — the last step of the
   * curation pipeline: deal documents into `n` shards in
   * longest-processing-time-first order (global rank by weight
@@ -39,7 +41,7 @@ object ShardExporter {
       .drop("__rn")
     sharded.write.mode("overwrite").partitionBy("shard").parquet(path)
     // partition-dir type inference reads shard= back as int
-    val written = df.sparkSession.read.parquet(path)
+    val written = Fs.readParquet(df.sparkSession, path)
       .withColumn("shard", col("shard").cast("long"))
     val total = math.max(1L,
       Option(written.agg(sum(col(weightCol))).head.get(0))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** Materialized MinHash signature table — the production shape of
   * near-dup detection at 100 TB, where signatures are computed ONCE per
   * document and reused by every later dedup run (the in-query `persist`
@@ -112,7 +114,7 @@ object SignatureStore {
       files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
     if (files.size <= n) false
     else Tombstones.rewriteCommitted(spark, path, "",
-      old => spark.read.parquet(old: _*).coalesce(n))
+      old => Fs.readParquet(spark, old: _*).coalesce(n))
   }
 
   /** Append a document batch's signatures to the flat store — banned
@@ -259,7 +261,7 @@ object SignatureStore {
     val stageDir = s"${loc}_purge_stage"
     Tombstones.mask(spark, loc, full, "doc_id")
       .write.mode("overwrite").parquet(stageDir)
-    val staged = spark.read.parquet(stageDir)
+    val staged = Fs.readParquet(spark, stageDir)
     val nSurvivors = staged.count()
     val w = staged.write.mode("overwrite")
       .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
@@ -387,7 +389,7 @@ object SignatureStore {
     val stageRoot = s"$loc/$BandedStage$token"
     val sortCols = spec.sortColumnNames
     val plan = hitFiles.zipWithIndex.map { case (f, i) =>
-      val survivors = spark.read.parquet(f.toString)
+      val survivors = Fs.readParquet(spark, f.toString)
         .join(banned, col("doc_id") === col("_ts_id"), "left_anti")
       val sorted =
         if (sortCols.isEmpty) survivors.coalesce(1)

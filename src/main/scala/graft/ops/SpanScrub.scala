@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** Duplicate-span SCRUBBING — remove repeated spans, keep the document.
   * [[SelfDedup]] answers "drop documents that repeat an earlier span";
   * this operator answers the C4-style question "delete the repeated
@@ -104,7 +106,7 @@ object SpanScrub {
     // ledger row would otherwise EXPAND the membership join
     val seen =
       if (ledgerExists)
-        spark.read.parquet(ledgerPath).select(col("h")).distinct()
+        Fs.readParquet(spark, ledgerPath).select(col("h")).distinct()
           .select(col("h"), lit(true).as("_old"))
       else {
         import spark.implicits._
@@ -154,9 +156,9 @@ object SpanScrub {
       val target =
         math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
       val tmp = ledgerPath + ".compact"
-      spark.read.parquet(ledgerPath).distinct().coalesce(target)
+      Fs.readParquet(spark, ledgerPath).distinct().coalesce(target)
         .write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp).coalesce(target)
+      Fs.readParquet(spark, tmp).coalesce(target)
         .write.mode("overwrite").parquet(ledgerPath)
       graft.core.Fs.delete(spark, tmp)
       Some(LogCompactor.CompactionReport(

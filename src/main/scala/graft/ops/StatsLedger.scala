@@ -51,7 +51,7 @@ object StatsLedger {
 
   /** One distributed scan → (file, min_c, max_c ..., n_rows) per file. */
   def stats(spark: SparkSession, dataDir: String, cols: Seq[String]): DataFrame =
-    spark.read.parquet(dataDir)
+    Fs.readParquet(spark, dataDir)
       .groupBy(input_file_name().as("file"))
       .agg(statCols(cols).head, statCols(cols).tail: _*)
 
@@ -101,7 +101,7 @@ object StatsLedger {
     requireNoBloomMismatch(spark, ledgerDir, bloomCols)
     val aggs = statCols(cols) ++ bloomCols.map(c =>
       expr(s"bloom_agg($c, $mBits, $k)").as(s"bloom_$c"))
-    val batch = spark.read.parquet(batchDir)
+    val batch = Fs.readParquet(spark, batchDir)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
     Fs.stagedAppend(batch.coalesce(1), Nil, ledgerDir)
@@ -115,7 +115,7 @@ object StatsLedger {
   private def requireNoBloomMismatch(
       spark: SparkSession, ledgerDir: String, bloomCols: Seq[String]): Unit = {
     if (!Fs.nonEmptyDir(spark, ledgerDir)) return
-    val existing = spark.read.parquet(ledgerDir).columns
+    val existing = Fs.parquetSchema(spark, ledgerDir).fieldNames
       .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")).toSet
     val appending = bloomCols.toSet
     require(existing == appending,
@@ -149,7 +149,7 @@ object StatsLedger {
     val aggs = statCols(cols) ++ bloomCols.map(c =>
       expr(s"bloom_agg($c, $mBits, $k)").as(s"bloom_$c"))
     // parallel write, same rationale as [[build]]
-    spark.read.parquet(dataDir)
+    Fs.readParquet(spark, dataDir)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(ledgerDir)
@@ -171,15 +171,15 @@ object StatsLedger {
   }
 
   /** Exact point-lookup read: Bloom-pruned file list, `IN` re-applied.
-    * Equals `spark.read.parquet(dataDir).filter(col isin keys)` — no
+    * Equals `Fs.readParquet(spark, dataDir).filter(col isin keys)` — no
     * false negatives (Bloom), no false positives (exact re-filter).
     */
   def readPoint(
       spark: SparkSession, dataDir: String, ledgerDir: String,
       keyCol: String, keys: Seq[Long]): DataFrame = {
     val files = pruneFilesPoint(spark, ledgerDir, keyCol, keys)
-    if (files.isEmpty) spark.read.parquet(dataDir).where(lit(false))
-    else spark.read.parquet(files: _*)
+    if (files.isEmpty) Fs.readParquet(spark, dataDir).where(lit(false))
+    else Fs.readParquet(spark, files: _*)
       .filter(col(keyCol).isin(keys: _*))
   }
 
@@ -202,7 +202,7 @@ object StatsLedger {
     * interior rows.
     */
   private def ledger(spark: SparkSession, ledgerDir: String): DataFrame =
-    spark.read.parquet(ledgerDir).dropDuplicates("file")
+    Fs.readParquet(spark, ledgerDir).dropDuplicates("file")
 
   def pruneFiles(
       spark: SparkSession, ledgerDir: String, boxes: Seq[Box]): Seq[String] = {
@@ -244,8 +244,8 @@ object StatsLedger {
         box.hi.map(v => col(c) <= lit(v)).getOrElse(lit(true))
     val boundary =
       (if (boundaryFiles.isEmpty)
-        spark.read.parquet(dataDir).where(lit(false))
-      else spark.read.parquet(boundaryFiles: _*))
+        Fs.readParquet(spark, dataDir).where(lit(false))
+      else Fs.readParquet(spark, boundaryFiles: _*))
         .filter(exact)
         .agg(count(col(c)).as("n_rows"), min(col(c)).as("min_v"),
           max(col(c)).as("max_v"))
@@ -255,7 +255,7 @@ object StatsLedger {
   }
 
   /** Exact box-predicate read: ledger-pruned file list, predicate
-    * re-applied. Equals `spark.read.parquet(dataDir).filter(boxes)`.
+    * re-applied. Equals `Fs.readParquet(spark, dataDir).filter(boxes)`.
     */
   def readPruned(
       spark: SparkSession, dataDir: String, ledgerDir: String,
@@ -266,8 +266,8 @@ object StatsLedger {
       lo && hi
     }.reduceOption(_ && _).getOrElse(lit(true))
     val files = pruneFiles(spark, ledgerDir, boxes)
-    if (files.isEmpty) spark.read.parquet(dataDir).where(lit(false))
-    else spark.read.parquet(files: _*).filter(exact)
+    if (files.isEmpty) Fs.readParquet(spark, dataDir).where(lit(false))
+    else Fs.readParquet(spark, files: _*).filter(exact)
   }
 }
 

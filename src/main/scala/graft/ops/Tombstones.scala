@@ -67,7 +67,7 @@ object Tombstones {
     */
   def ids(spark: SparkSession, path: String): Option[DataFrame] =
     if (!exists(spark, path)) None
-    else Some(spark.read.parquet(dir(path)).select("_ts_id").distinct())
+    else Some(Fs.readParquet(spark, dir(path)).select("_ts_id").distinct())
 
   /** The banned-id frame with the broadcast hint applied only while the
     * ledger is under the byte bound — shared by [[mask]] and the purge
@@ -144,7 +144,7 @@ object Tombstones {
     */
   def ledger(spark: SparkSession, path: String): Option[DataFrame] =
     if (!exists(spark, path)) None
-    else Some(spark.read.parquet(dir(path)))
+    else Some(Fs.readParquet(spark, dir(path)))
 
   /** `df` with banned ids masked out: an anti-join on `idCol` (cast to
     * bigint — int-keyed stores mask the same ids), broadcast only while
@@ -192,7 +192,7 @@ object Tombstones {
         !f.getPath.getName.startsWith("."))
       .map(_.getPath.toString)
     if (srcs.size <= 1) return false
-    val led = spark.read.parquet(srcs: _*)
+    val led = Fs.readParquet(spark, srcs: _*)
     val payloadCols = led.columns.filter(_ != "_ts_id").toSeq
     val folded = payloadCols match {
       case Nil => led.distinct()
@@ -419,7 +419,7 @@ object Tombstones {
   private def readStoreOnce(
       spark: SparkSession, dataDir: String): DataFrame = {
     val pending = listMarkers(spark, dataDir)
-    if (pending.isEmpty) return spark.read.parquet(dataDir)
+    if (pending.isEmpty) return Fs.readParquet(spark, dataDir)
     val fs = Fs(spark, dataDir)
     // staged survivors first (see ordering note above)
     val stagedFiles = pending.map { p =>
@@ -430,7 +430,7 @@ object Tombstones {
     //              not yet opened)
     val stagedLegs = stagedFiles.flatMap { case (stRoot, files) =>
       if (files.isEmpty) None
-      else Some(spark.read.option("basePath", stRoot).parquet(files: _*))
+      else Some(Fs.readParquetUnder(spark, stRoot, files: _*))
     }
     val excluded: Set[String] = pending.flatMap { p =>
       p.oldNames.map(n =>
@@ -439,9 +439,9 @@ object Tombstones {
     val visible = Fs.listDataFiles(spark, dataDir).filterNot(excluded)
     val mainLeg =
       if (visible.isEmpty) None
-      else Some(spark.read.option("basePath", dataDir).parquet(visible: _*))
+      else Some(Fs.readParquetUnder(spark, dataDir, visible: _*))
     (stagedLegs ++ mainLeg).reduceOption(_.unionByName(_))
-      .getOrElse(spark.read.parquet(dataDir))
+      .getOrElse(Fs.readParquet(spark, dataDir))
   }
 
   /** Physically dispose of tombstoned rows in a `partCol=`-partitioned
@@ -466,7 +466,7 @@ object Tombstones {
     ids(spark, ledgerPath) match {
       case None => 0
       case Some(_) =>
-        val all = spark.read.parquet(dataDir)
+        val all = Fs.readParquet(spark, dataDir)
         val t = boundedIds(spark, ledgerPath, MaskBroadcastMaxBytes).get
         val hitParts = all
           .join(t, all(idCol).cast("long") === t("_ts_id"), "left_semi")
@@ -491,7 +491,7 @@ object Tombstones {
     ids(spark, ledgerPath) match {
       case None => 0
       case Some(_) =>
-        val all = spark.read.parquet(dataDir)
+        val all = Fs.readParquet(spark, dataDir)
         val t = boundedIds(spark, ledgerPath, MaskBroadcastMaxBytes).get
         val hit = all
           .join(t, all(idCol).cast("long") === t("_ts_id"), "left_semi")
@@ -513,7 +513,7 @@ object Tombstones {
       uniqueKey: Seq[String]): Unit = {
     rewriteCommitted(spark, dataDir, partDirName, old =>
       mask(spark, ledgerPath,
-        spark.read.parquet(old: _*).dropDuplicates(uniqueKey), idCol))
+        Fs.readParquet(spark, old: _*).dropDuplicates(uniqueKey), idCol))
     ()
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
 import graft.ops.{Bm25, ClusteredStore, Forget, SignatureStore, Tombstones}
 
 /** Oracle check for the unified takedown orchestrator
@@ -107,7 +108,7 @@ object ForgetQueries {
       primary
         .unionByName(leg("bm25_postings", bm25Docs))
         .unionByName(sigs)
-        .unionByName(s.read.parquet(s"$base/before"))
+        .unionByName(Fs.readParquet(s, s"$base/before"))
         .orderBy("store")
     },
     Some("""WITH d AS (
@@ -230,7 +231,7 @@ object ForgetQueries {
         // zero leg instead of crashing schema inference
         if (graft.core.Fs.listDataFiles(s, s"$base/log").isEmpty)
           Seq(("log_detail", 0L, 0L)).toDF("store", "n_rows", "tok")
-        else s.read.parquet(s"$base/log")
+        else Fs.readParquet(s, s"$base/log")
           .agg(count(lit(1)).cast("long").as("n_rows"),
             coalesce(sum(get_json_object(col("payload"),
                 "$.data.usage_metadata.input_tokens").cast("long")),
@@ -251,7 +252,7 @@ object ForgetQueries {
             .as("tok"))
         .select(lit("rollup").as("store"), col("n_rows"), col("tok"))
       detail.unionByName(rollF).unionByName(shredF)
-        .unionByName(s.read.parquet(s"$base/before"))
+        .unionByName(Fs.readParquet(s, s"$base/before"))
         .orderBy("store")
     },
     Some("""WITH e AS (
@@ -485,7 +486,7 @@ object ForgetQueries {
         ()
       }
       legsOverLog(s, base)
-        .unionByName(s.read.parquet(s"$base/expanded"))
+        .unionByName(Fs.readParquet(s, s"$base/expanded"))
         .orderBy("store")
     },
     Some("""WITH e AS (
@@ -527,7 +528,7 @@ object ForgetQueries {
       import s.implicits._
       if (graft.core.Fs.listDataFiles(s, s"$base/log").isEmpty)
         Seq(("log_detail", 0L, 0L)).toDF("store", "n_rows", "tok")
-      else s.read.parquet(s"$base/log")
+      else Fs.readParquet(s, s"$base/log")
         .agg(count(lit(1)).cast("long").as("n_rows"),
           coalesce(sum(get_json_object(col("payload"),
               "$.data.usage_metadata.input_tokens").cast("long")),
@@ -548,7 +549,7 @@ object ForgetQueries {
           .as("tok"))
       .select(lit("rollup").as("store"), col("n_rows"), col("tok"))
     detail.unionByName(rollF).unionByName(shredF)
-      .unionByName(s.read.parquet(s"$base/before"))
+      .unionByName(Fs.readParquet(s, s"$base/before"))
       .orderBy("store")
   }
 

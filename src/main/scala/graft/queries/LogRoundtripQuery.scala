@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** End-to-end write-path fidelity check, oracle-checked: build log entries
   * from the `events` table (payload = JSON envelope, custom_id from tags,
   * date from event time), write them as a date-partitioned snappy parquet
@@ -52,7 +54,7 @@ object LogRoundtripQuery {
         .write.mode("overwrite").partitionBy("date")
         .option("compression", "snappy").parquet(out)
       // read side: full-directory scan, filter, JSON-parse, aggregate
-      s.read.parquet(out)
+      Fs.readParquet(s, out)
         .filter(col("event_type") === "click")
         .select(col("custom_id"),
           coalesce(get_json_object(col("payload"), "$.data.k").cast("long"),

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 import CurationQueries.{duckRecompute, kmK, kmIters}
 import PqQuery.{dim, m, ds, k, iters}
 
@@ -147,7 +149,7 @@ object PqDriftQuery {
         case None => emptyDrift(s)
         case Some((path, books, _, half)) =>
           val decoded = graft.ops.ProductQuantizer
-            .decodeFromCodes(s.read.parquet(path), books)
+            .decodeFromCodes(Fs.readParquet(s, path), books)
             .select("vec_id", "dv", "dn")
           graft.ops.ProductQuantizer.driftReport(
             decoded.join(corpus(s, dir), "vec_id")

@@ -36,7 +36,7 @@ package object queries {
     // the derived epochs match DuckDB's epoch_us over the same naive values.
     s.conf.set("spark.sql.session.timeZone", "UTC")
     graft.functions.GraftFunctions.ensureRegistered(s)
-    normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(graft.core.Fs.readParquet(s, s"$dir/$name.parquet"))
   }
 
   /** Engine-internal contract: `ts` is a ns-epoch long. The testdata has

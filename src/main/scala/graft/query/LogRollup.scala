@@ -156,7 +156,7 @@ object LogRollup {
       partials(ShreddedLog.shred(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         LogSchema.schema)))
-    else spark.read.parquet(rollupDir)
+    else Fs.readParquet(spark, rollupDir)
 
   /** Serve the rollup at `grain` (any subset of {date, model}, default
     * the full stored grain): final-merge of the partial states — sums of

@@ -170,7 +170,7 @@ object ShreddedLog {
       shred(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         LogSchema.schema)).drop("src")
-    else spark.read.parquet(shredDir).drop("src")
+    else Fs.readParquet(spark, shredDir).drop("src")
 
   /** `src=gen-<N>c` generation partition VALUES whose dirs carry the
     * pipeline's `_FOLDED` commit marker — the only generations a
@@ -242,7 +242,7 @@ object ShreddedLog {
           s"only whole — this store cannot pin a snapshot at $upToBatch")
       val genOk =
         if (committed.isEmpty) lit(false) else col("src").isin(committed: _*)
-      spark.read.parquet(shredDir)
+      Fs.readParquet(spark, shredDir)
         .filter(genOk ||
           regexp_extract(col("src"), "^batch-([0-9]+)$", 1)
             .cast("long") <= upToBatch)

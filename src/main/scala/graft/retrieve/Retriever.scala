@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** Checkpointed background-response retrieval (SURVEY §2.4), re-expressed
   * Spark-first:
   *
@@ -150,7 +152,7 @@ final class CheckpointStore(spark: SparkSession, path: String) {
 
   def load(): DataFrame =
     if (graft.core.Fs.nonEmptyDir(spark, path)) {
-      spark.read.parquet(path)
+      Fs.readParquet(spark, path)
     } else {
       Seq.empty[(String, Boolean, String, Long)]
         .toDF("response_id", "processed", "error", "seq")
@@ -177,7 +179,7 @@ final class CheckpointStore(spark: SparkSession, path: String) {
       .drop("__rn")
     val tmp = path + ".compact"
     deduped.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+    Fs.readParquet(spark, tmp).write.mode("overwrite").parquet(path)
     graft.core.Fs.delete(spark, tmp)
   }
 

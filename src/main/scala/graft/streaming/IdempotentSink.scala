@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.Fs
+
 /** Exactly-once-per-batch parquet sink for `foreachBatch`.
   *
   * Structured Streaming guarantees at-least-once delivery to
@@ -197,8 +199,7 @@ object IdempotentSink {
       .flatMap(s => markerLines(fs, new Path(s.getPath, "_COMMITTED")))
       .toSet
     val content = (names ++ inherited.diff(names.toSet)).sorted
-    spark.read
-      .parquet(sources.map(_.getPath.toString).toIndexedSeq: _*)
+    Fs.readParquet(spark, sources.map(_.getPath.toString).toIndexedSeq: _*)
       .coalesce(target)
       .write.mode("overwrite").parquet(dest.toString)
     // The swap must be ONE atomic operation WITH its content in place:
@@ -283,7 +284,7 @@ object IdempotentSink {
     // dir are invisible even while they still exist (two-phase delete)
     val committed = liveCommitted(fs, root).map(_.getPath.toString)
     if (committed.nonEmpty)
-      spark.read.parquet(committed.toIndexedSeq: _*)
+      Fs.readParquet(spark, committed.toIndexedSeq: _*)
     else schema match {
       case Some(st) =>
         spark.createDataFrame(
@@ -294,7 +295,7 @@ object IdempotentSink {
         val anyFiles = dirs.map(_.getPath.toString)
         if (anyFiles.nonEmpty)
           scala.util.Try {
-            val st = spark.read.parquet(anyFiles.toIndexedSeq: _*).schema
+            val st = Fs.parquetSchema(spark, anyFiles.toIndexedSeq: _*)
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
           }.getOrElse(spark.emptyDataFrame)

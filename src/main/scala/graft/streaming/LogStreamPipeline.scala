@@ -273,7 +273,7 @@ object LogStreamPipeline {
         val n = math.max(1,
           math.ceil(bytes.toDouble / targetFileBytes).toInt)
         // mode(overwrite) clears a crashed attempt's marker-less dest
-        spark.read.parquet(sources.map(s0 => s"$dPath/$s0"): _*)
+        Fs.readParquet(spark, sources.map(s0 => s"$dPath/$s0"): _*)
           .coalesce(n)
           .write.mode("overwrite").option("compression", "snappy")
           .parquet(dest)
@@ -357,7 +357,7 @@ object LogStreamPipeline {
           Fs.list(spark, s"$dPath/$s0").map(_.getLen).sum).sum
         val n = math.max(1,
           math.ceil(bytes.toDouble / targetFileBytes).toInt)
-        merge(spark.read.parquet(sources.map(s0 => s"$dPath/$s0"): _*))
+        merge(Fs.readParquet(spark, sources.map(s0 => s"$dPath/$s0"): _*))
           .coalesce(n)
           .write.mode("overwrite").option("compression", "snappy")
           .parquet(dest)
@@ -541,8 +541,8 @@ object LogStreamPipeline {
       }
     }
     val raw =
-      if (dirs.isEmpty) spark.read.option("basePath", logDir).parquet(logDir)
-      else spark.read.option("basePath", logDir).parquet(dirs: _*)
+      if (dirs.isEmpty) Fs.readParquetUnder(spark, logDir, logDir)
+      else Fs.readParquetUnder(spark, logDir, dirs: _*)
     // committed generation dirs read as non-numeric `batch` values;
     // they hold only batches <= maxFolded <= pin, so they pass whole
     val b = col("batch").cast("string")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.core.Fs
 import graft.ops.{ProductQuantizer, VectorIndex}
 import graft.ops.ProductQuantizer.Codebook
 import graft.ops.VectorIndex.Centroid
@@ -73,7 +74,7 @@ object StreamIndex {
     val probes = ProductQuantizer.probesOf(queries, cents, nProbe)
     val main = ProductQuantizer.candidates(
       ProductQuantizer.decodeFromCodes(
-        spark.read.parquet(mainPath), books), probes)
+        Fs.readParquet(spark, mainPath), books), probes)
     val tail = ProductQuantizer.candidates(
       ProductQuantizer.decodeFromCodes(
         IdempotentSink.readCommitted(spark, tailPath, Some(tailSchema))

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** Phase-level profile of `q_dsir_select` — the r15 verdict's #2 bench
   * line (2.1 s driver), untouched through r15 with only a prose floor
   * claim. The query trains TWO quantized bigram LMs (target on the 1/7
@@ -44,7 +46,7 @@ object DsirProfile {
       .withDefaultValue(Double.MaxValue)
     (1 to reps).foreach { rep =>
       spark.catalog.clearCache()
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Fs.readParquet(spark, s"$sfDir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 7 =!= 0)
       val target = docs.filter(col("doc_id") % 7 === 0)
       val mR = graft.ops.NgramLm.train(corpus, "doc_id", "text")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Fs
 import graft.queries.Registry
 
 /** Empty-input robustness gate: every registry query must run to
@@ -34,7 +35,7 @@ object EmptyInputGate {
     graft.core.Fs.list(spark, template)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .foreach { f =>
-        spark.read.parquet(f.getPath.toString).limit(0)
+        Fs.readParquet(spark, f.getPath.toString).limit(0)
           .coalesce(1).write.parquet(s"$dir/${f.getPath.getName}")
       }
 

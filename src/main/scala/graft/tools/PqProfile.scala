@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Fs
 import graft.queries.Registry
 
 /** Phase-level profile of the PQ bench pair (`q_knn_pq`,
@@ -48,8 +49,7 @@ object PqProfile {
       .withDefaultValue(Double.MaxValue)
     (1 to reps).foreach { rep =>
       spark.catalog.clearCache()
-      val e = spark.read
-        .parquet(s"$sfDir/embeddings.parquet")
+      val e = Fs.readParquet(spark, s"$sfDir/embeddings.parquet")
         .filter(col("embedding").isNotNull)
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("v"))

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
+import graft.core.Fs
+
 /** Testdata schema-contract gate: reads every table in a testdata dir and
   * asserts the engine's ACCEPTED shapes, failing loudly with a diff when
   * the driver regenerates the data with a new physical schema.
@@ -72,7 +74,7 @@ object SchemaContract {
         // same read config as graft.queries.tbl — the gate must see the
         // same post-flag schema the engine sees
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = spark.read.parquet(path).schema
+        val schema = Fs.parquetSchema(spark, path)
         cols.toSeq.sortBy(_._1).flatMap { case (col, accepted) =>
           schema.fields.find(_.name == col) match {
             case None =>
@@ -103,7 +105,7 @@ object SchemaContract {
     val violations = dirs.flatMap(check(spark, _))
     violations.foreach(v => System.err.println(s"SCHEMA-CONTRACT FAIL $v"))
     val tsTypes = dirs.map { d =>
-      val t = spark.read.parquet(s"$d/events.parquet").schema
+      val t = Fs.parquetSchema(spark, s"$d/events.parquet")
         .find(_.name == "ts").map(_.dataType.sql).getOrElse("MISSING")
       s""""$d":"$t""""
     }.mkString("{", ",", "}")

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fs
+
 /** Synthesize a larger scale-factor leg of the driver's testdata, written
   * by the engine itself, so scale curves can be fitted over more than the
   * two shipped decades (VERDICT r7 item 1: "measure the scale story
@@ -92,7 +94,7 @@ object Synth {
     */
   def synth(spark: SparkSession, base: String, out: String,
       factor: Int): Seq[(String, Long)] = {
-    def rd(t: String): DataFrame = spark.read.parquet(s"$base/$t.parquet")
+    def rd(t: String): DataFrame = Fs.readParquet(spark, s"$base/$t.parquet")
     def baseMax(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head.getLong(0) + 1L
 
@@ -203,13 +205,13 @@ object Synth {
     tables.map { case (name, df, nFiles) =>
       val sized = if (nFiles > 1) df.repartition(nFiles) else df.coalesce(1)
       sized.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      name -> spark.read.parquet(s"$out/$name.parquet").count()
+      name -> Fs.readParquet(spark, s"$out/$name.parquet").count()
     }
   }
 
   /** FK closure over the written leg: zero orphans expected. */
   def verify(spark: SparkSession, dir: String): Long = {
-    def rd(t: String): DataFrame = spark.read.parquet(s"$dir/$t.parquet")
+    def rd(t: String): DataFrame = Fs.readParquet(spark, s"$dir/$t.parquet")
     val cust = rd("customer").select(col("c_custkey"))
     val supp = rd("supplier").select(col("s_suppkey"))
     val part = rd("part").select(col("p_partkey"))
