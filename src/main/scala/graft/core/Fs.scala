@@ -136,6 +136,13 @@ object Fs {
       !name.startsWith("_") && !name.startsWith(".")
     }.flatMap(st => if (st.isDirectory) dataFiles(fs, st.getPath) else Seq(st))
 
+  /** `fs.rename`, throwing where Hadoop reports a failed rename by
+    * returning false — a commit step must never read that as success.
+    */
+  def renameOrThrow(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"rename $from to $to failed")
+
   /** Move every DATA file under `srcDir` into `destDir`, preserving
     * relative subpaths (hive `c=v` partition dirs); `_SUCCESS`,
     * `_temporary` and dot-files are skipped. Each file lands via one
@@ -153,20 +160,18 @@ object Fs {
     val fs = apply(spark, srcDir)
     val src = fs.makeQualified(new Path(srcDir))
     val dest = fs.makeQualified(new Path(destDir))
-    def rename(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"rename $from to $to failed")
     val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
     try dataFiles(fs, src).foreach { st =>
       val rel = src.toUri.relativize(st.getPath.toUri).getPath
       val target = new Path(dest, rel)
       fs.mkdirs(target.getParent)
-      rename(st.getPath, target)
+      renameOrThrow(fs, st.getPath, target)
       moved += st.getPath -> target
     } catch {
       case t: Throwable =>
         moved.foreach { case (from, to) =>
-          try rename(to, from) catch { case u: Throwable => t.addSuppressed(u) }
+          try renameOrThrow(fs, to, from)
+          catch { case u: Throwable => t.addSuppressed(u) }
         }
         throw t
     }

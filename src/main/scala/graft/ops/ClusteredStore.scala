@@ -1382,8 +1382,8 @@ object ClusteredStore {
   val DvSpillKeys: Int = 4096
 
   /** Above this many keys, the key-set operations ([[deleteKeysDV]],
-    * [[upsertKeys]], [[readPoint]], [[pruneFilesPoint]]) switch from
-    * literal `IN`-list expressions to broadcast key-frame joins. The
+    * [[upsertKeys]], [[readPoint]]) switch from literal `IN`-list
+    * expressions to broadcast key-frame joins. The
     * literal path is codegen'd and cheapest for real takedowns
     * (tens-to-thousands of keys); past this threshold a literal list
     * stops being a plan and starts being a payload — a 10M-key replace
@@ -2317,57 +2317,28 @@ object ClusteredStore {
     * every file's [min,max] spans the domain and range pruning keeps
     * everything, but the per-file Bloom column ([[init]]`(bloomCols)`)
     * keeps only may-contain files. Exact: no false negatives (Bloom),
-    * no false positives (`IN` re-applied). Files pruned are observable
-    * via [[pruneFilesPoint]].
+    * no false positives (the key filter re-applied). Files pruned are
+    * observable via [[pruneFilesPoint]].
     */
   def readPoint(spark: SparkSession, dir: String, keyCol: String,
       keys: Seq[Long], asOf: Option[Int] = None): DataFrame = {
     val files = pruneFilesPoint(spark, dir, keyCol, keys, asOf)
     if (files.isEmpty) read(spark, dir, asOf).where(lit(false))
-    else if (keys.size <= LiteralKeyMax)
-      readFilesDv(spark, dir, manifest(spark, dir, asOf), files)
-        .filter(col(keyCol).isin(keys: _*))
-    else // bulk probe: keys join as broadcast data, never as a literal
-      filterKeys(readFilesDv(spark, dir, manifest(spark, dir, asOf),
-        files), keyCol, keys, negate = false)
+    else filterKeys(readFilesDv(spark, dir, manifest(spark, dir, asOf),
+      files), keyCol, keys, negate = false)
   }
 
-  /** Manifest files whose Bloom sketch may contain ANY of `keys`.
-    * Below [[LiteralKeyMax]]: a balanced OR of codegen'd
-    * `bloom_contains` probes (a linear reduce would build a
-    * keys-deep expression tree and overflow the stack — first hit: a
-    * 2400-key deleteKeysDV). Above it: the manifest cross-probes a
-    * broadcast key frame — file-count × key-count bloom tests,
-    * DISTRIBUTED, with a plan that stays constant-sized however many
-    * keys a bulk replace carries.
+  /** Manifest files whose Bloom sketch may contain ANY of `keys` —
+    * [[StatsLedger.filesMayContain]] over the manifest at `asOf`, one
+    * plan shape for every key count.
     */
   def pruneFilesPoint(spark: SparkSession, dir: String, keyCol: String,
       keys: Seq[Long], asOf: Option[Int] = None): Seq[String] = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val led = manifest(spark, dir, asOf)
     require(led.columns.contains(s"bloom_$keyCol"),
       s"store at $dir has no Bloom column for $keyCol — init with " +
         s"bloomCols = Seq(${'"'}$keyCol${'"'})")
-    if (keys.size > LiteralKeyMax) {
-      import spark.implicits._
-      val kf = keys.toDF("_kf_k")
-      led.select("file", s"bloom_$keyCol")
-        .join(broadcast(kf),
-          call_function("bloom_contains", col(s"bloom_$keyCol"),
-            col("_kf_k")), "left_semi")
-        .select("file").collect().map(_.getString(0)).toSeq
-    } else {
-      def orAll(cs: Seq[Column]): Column =
-        if (cs.size == 1) cs.head
-        else {
-          val (l, r) = cs.splitAt(cs.size / 2)
-          orAll(l) || orAll(r)
-        }
-      val probes = keys.map(key =>
-        call_function("bloom_contains", col(s"bloom_$keyCol"), lit(key)))
-      val any = if (probes.isEmpty) lit(false) else orAll(probes)
-      led.filter(any).select("file").collect().map(_.getString(0)).toSeq
-    }
+    StatsLedger.filesMayContain(led, keyCol, keys)
   }
 
   /** Health of the snapshot at `asOf` (default current) — one manifest

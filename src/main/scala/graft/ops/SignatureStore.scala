@@ -292,13 +292,14 @@ object SignatureStore {
   private val BandedMarker = "_PURGEB."
   private val BandedStage = ".purgeb-stage-"
 
-  /** Roll a crashed [[purgeBandedPruned]] forward: replay the marker's
-    * rename/delete plan (idempotent — a staged file already renamed is
-    * skipped, an old file already deleted is skipped), then drop the
-    * marker and stage debris. Also sweeps marker-LESS stage dirs (a
-    * crash before the marker write: nothing was committed, the staged
-    * survivors are recomputable debris). Cheap in the always case: one
-    * name filter on a directory listing.
+  /** Roll a committed [[purgeBandedPruned]] forward — its own last step,
+    * and the repair after a crash: replay the marker's rename/delete
+    * plan (idempotent — a staged file already renamed, by an earlier run
+    * or a concurrent healer, is skipped, an old file already deleted is
+    * skipped), then drop the marker and stage debris. Also sweeps
+    * marker-LESS stage dirs (a crash before the marker write: nothing
+    * was committed, the staged survivors are recomputable debris).
+    * Cheap in the always case: one name filter on a directory listing.
     */
   def healBandedPurge(spark: SparkSession, table: String): Unit = {
     val loc = tableLocation(spark, table)
@@ -307,25 +308,26 @@ object SignatureStore {
     val fs = new org.apache.hadoop.fs.Path(loc)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     markers.foreach { m =>
+      import org.apache.hadoop.fs.Path
       val token = m.getPath.getName.stripPrefix(BandedMarker)
       val in = fs.open(m.getPath)
       val plan = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
-      plan.foreach { line =>
-        line.split("\t", -1) match {
+        .getLines().map(_.split("\t", -1)).collect {
           case Array(oldName, stagedRel, finalName) =>
-            val staged = new org.apache.hadoop.fs.Path(
-              s"$loc/$BandedStage$token/$stagedRel")
-            if (finalName.nonEmpty && fs.exists(staged))
-              fs.rename(staged,
-                new org.apache.hadoop.fs.Path(s"$loc/$finalName"))
-            val old = new org.apache.hadoop.fs.Path(s"$loc/$oldName")
-            if (fs.exists(old)) fs.delete(old, false)
-          case _ =>
-        }
+            (oldName, stagedRel, finalName)
+        }.toVector finally in.close()
+      // every survivor lands before any old file goes: a rename that
+      // fails while its staged file is still there throws, and the
+      // marker, the stage and every old file stay for the next heal
+      plan.foreach { case (_, stagedRel, finalName) =>
+        val staged = new Path(s"$loc/$BandedStage$token/$stagedRel")
+        val dest = new Path(s"$loc/$finalName")
+        if (finalName.nonEmpty && fs.exists(staged) &&
+            !fs.rename(staged, dest) && fs.exists(staged))
+          throw new java.io.IOException(s"rename $staged to $dest failed")
       }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$loc/$BandedStage$token"),
-        true)
+      plan.foreach(p => fs.delete(new Path(s"$loc/${p._1}"), false))
+      fs.delete(new Path(s"$loc/$BandedStage$token"), true)
       fs.delete(m.getPath, false)
     }
     // pre-commit debris: stage dirs and temp markers whose token never
@@ -425,19 +427,8 @@ object SignatureStore {
     try out.write(plan.map(p => s"${p._1}\t${p._2}\t${p._3}")
       .mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    require(fs.rename(tmp, marker),
-      s"purgeBandedPruned: marker commit rename failed for $marker")
-
-    // roll forward (identical to the heal path's replay)
-    plan.foreach { case (oldName, stagedRel, finalName) =>
-      if (finalName.nonEmpty)
-        fs.rename(new org.apache.hadoop.fs.Path(s"$stageRoot/$stagedRel"),
-          new org.apache.hadoop.fs.Path(s"$loc/$finalName"))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$loc/$oldName"), false)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stageRoot), true)
-    fs.delete(marker, false)
-    spark.catalog.refreshTable(table)
+    Fs.renameOrThrow(fs, tmp, marker)
+    healBandedPurge(spark, table) // roll forward: replays this plan
     removed
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Fs
+import graft.functions.BloomBits
 
 /** File-level data skipping: a per-file min/max/count ledger plus a
   * pruned read path — the Delta/Iceberg "data skipping" pattern for
@@ -155,20 +156,31 @@ object StatsLedger {
       .write.mode("overwrite").parquet(ledgerDir)
   }
 
-  /** Files whose Bloom sketch may contain ANY of `keys` — the probe runs
-    * distributed over the ledger (one `bloom_contains` per key per row),
-    * and only surviving file NAMES reach the driver.
+  /** Files of `ledger` (one row per file, with a `file` column and a
+    * `bloom_<keyCol>` sketch column) whose sketch may contain ANY of
+    * `keys`. The probe runs distributed over the ledger rows and only
+    * surviving file NAMES reach the driver. The keys ride in the
+    * filter's closure, which Spark ships once per executor with the
+    * task binary, so the plan is the same size at 10 keys and at 10M —
+    * no per-key expression to outgrow codegen or the stack. A null
+    * sketch excludes its file; no keys, no files.
     */
+  def filesMayContain(ledger: DataFrame, keyCol: String,
+      keys: Seq[Long]): Seq[String] = {
+    val spark = ledger.sparkSession
+    import spark.implicits._
+    val ks = keys.toArray
+    ledger.select(col("file"), col(s"bloom_$keyCol"))
+      .as[(String, Array[Byte])]
+      .filter(r => r._2 != null && ks.exists(BloomBits.contains(r._2, _)))
+      .map(_._1).collect().toSeq
+  }
+
+  /** [[filesMayContain]] over the ledger at `ledgerDir`. */
   def pruneFilesPoint(
       spark: SparkSession, ledgerDir: String, keyCol: String,
-      keys: Seq[Long]): Seq[String] = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val any = keys.map(key =>
-        call_function("bloom_contains", col(s"bloom_$keyCol"), lit(key)))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    ledger(spark, ledgerDir).filter(any)
-      .select("file").collect().map(_.getString(0)).toSeq
-  }
+      keys: Seq[Long]): Seq[String] =
+    filesMayContain(ledger(spark, ledgerDir), keyCol, keys)
 
   /** Exact point-lookup read: Bloom-pruned file list, `IN` re-applied.
     * Equals `Fs.readParquet(spark, dataDir).filter(col isin keys)` — no

@@ -292,7 +292,8 @@ object Tombstones {
     }
 
   /** Atomic marker publication: content lands under a dot-name, then
-    * one rename makes the commit visible.
+    * one rename makes the commit visible. A failed rename throws before
+    * the caller deletes anything, leaving only pre-commit debris.
     */
   private def writeMarker(spark: SparkSession, dataDir: String,
       token: String, partDirName: String, oldNames: Seq[String]): Unit = {
@@ -301,8 +302,8 @@ object Tombstones {
     val out = fs.create(tmp, true)
     try out.write(oldNames.mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    fs.rename(tmp, new Path(dataDir, s"$MarkerPrefix$token.$partDirName"))
-    ()
+    Fs.renameOrThrow(fs, tmp,
+      new Path(dataDir, s"$MarkerPrefix$token.$partDirName"))
   }
 
   /** The partition dir a pending purge rewrites — the store root

@@ -16,5 +16,8 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // a stage whose generated code fails to compile fails the test
+    // instead of silently running without whole-stage codegen
+    .config("spark.sql.codegen.fallback", "false")
     .getOrCreate()
 }

@@ -216,4 +216,43 @@ class BandedPurgeSpec extends SparkSpec {
     SignatureStore.healBandedPurge(spark, table)
     assert(spark.read.parquet(s"$loc/$finalName").count() === expect)
   }
+
+  test("a survivor rename that returns false fails the pruned purge " +
+    "before any delete and keeps its marker; the next heal lands " +
+    "exactly the post-purge rows") {
+    // a database located on the refusing filesystem puts the managed
+    // table's files there
+    val db = "banded_rn_db"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    spark.sql(s"CREATE DATABASE $db LOCATION '${FalseRenameFs.dir("brn")}'")
+    val prevDb = spark.catalog.currentDatabase
+    spark.catalog.setCurrentDatabase(db)
+    try {
+      val table = "banded_rn"
+      SignatureStore.buildBanded(docs, table, numBuckets = 4)
+      val loc = spark.sessionState.catalog.defaultTablePath(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).toString
+      def raw() = spark.read.parquet(loc)
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      val want = rows(raw().filter(col("doc_id") =!= 7L))
+      SignatureStore.takedownBanded(spark, table, Seq(7L))
+
+      FalseRenameFs.refuse = _.startsWith("part-purged-")
+      try intercept[java.io.IOException](
+        SignatureStore.purgeBandedPruned(spark, table))
+      finally FalseRenameFs.refuse = _ => false
+      val names = graft.core.Fs.list(spark, loc).map(_.getPath.getName)
+      assert(names.exists(_.startsWith("_PURGEB.")),
+        "the committed marker must stay for the heal")
+      assert(raw().filter(col("doc_id") === 7L).count() > 0L,
+        "no old file may be deleted before every survivor landed")
+
+      SignatureStore.healBandedPurge(spark, table)
+      assert(rows(raw()) === want)
+      assert(!graft.core.Fs.list(spark, loc).exists { f =>
+        val n = f.getPath.getName
+        n.startsWith("_PURGEB.") || n.startsWith(".purgeb-")
+      })
+    } finally spark.catalog.setCurrentDatabase(prevDb)
+  }
 }

@@ -524,6 +524,21 @@ class ClusteredStoreSpec extends SparkSpec {
     val total = ClusteredStore.manifest(spark, dir).count()
     assert(opened.size < total,
       s"bloom should prune: opened ${opened.size} of $total files")
+    // the prune equals a driver-side probe of every manifest sketch, at
+    // small counts and on both sides of the literal-list bound
+    val sketches = ClusteredStore.manifest(spark, dir)
+      .select("file", "bloom_id").collect()
+      .map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
+    Seq(10, ClusteredStore.LiteralKeyMax, ClusteredStore.LiteralKeyMax + 1)
+      .foreach { n =>
+        val ks = (0L until n.toLong).map(_ * 5L + 3L)
+        val want = sketches.collect {
+          case (f, b) if b != null &&
+              ks.exists(graft.functions.BloomBits.contains(b, _)) => f
+        }.toSeq.sorted
+        assert(ClusteredStore.pruneFilesPoint(spark, dir, "id", ks)
+          .sorted === want, s"$n keys")
+      }
     // absent key: zero rows, and typically zero-to-few files opened
     assert(ClusteredStore.readPoint(spark, dir, "id", Seq(999999L))
       .count() === 0L)

@@ -317,6 +317,30 @@ class PurgeCommitSpec extends SparkSpec {
       "a fully-purged store serves the typed empty signature frame")
   }
 
+  test("a marker rename that returns false fails the purge before any " +
+    "delete: the store's rows stay as they were, and a retry purges") {
+    val base = (0 until 40).toDF("id")
+      .select(col("id").cast("long").as("doc_id"))
+      .withColumn("text", concat(lit("the quick fox "), col("doc_id")))
+    val path = FalseRenameFs.dir("pcrn")
+    SignatureStore.build(base, path)
+    SignatureStore.takedown(spark, path, Seq(3L, 9L))
+    def raw() = spark.read.parquet(path).select("doc_id").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    val before = raw()
+    assert(before.contains(3L))
+    FalseRenameFs.refuse = _.startsWith(Tombstones.MarkerPrefix)
+    try intercept[java.io.IOException](SignatureStore.purge(spark, path))
+    finally FalseRenameFs.refuse = _ => false
+    assert(raw() === before, "no data file may move or go")
+    assert(!Fs.list(spark, path)
+      .exists(_.getPath.getName.startsWith(Tombstones.MarkerPrefix)))
+    assert(SignatureStore.purge(spark, path) === 1)
+    assert(raw() === before.filterNot(Set(3L, 9L)))
+    assert(!Fs.list(spark, path).exists(_.getPath.getName.startsWith(".")),
+      "the retry sweeps the failed attempt's stage and temp marker")
+  }
+
   test("BM25 probe and stats stay exact over a crashed postings purge " +
     "and heal on the next compactIndex") {
     val d = (0 until 240).toDF("id")
@@ -364,5 +388,33 @@ class PurgeCommitSpec extends SparkSpec {
       .exists(_.startsWith("_PURGE.")))
     assert(Bm25.probeIndex(spark, path, "doc_id",
       Seq("alpha", "w3"), topK = 240).collect().toSeq === expected)
+  }
+}
+
+/** Local disk under the `graftrn:` scheme whose `rename` returns false,
+  * without renaming, when `refuse` accepts the destination's name —
+  * the failure Hadoop reports by return value instead of by exception.
+  * Top-level so Hadoop can instantiate it.
+  */
+class FalseRenameFs extends graft.core.TestSchemeFs {
+  override def getUri: java.net.URI = java.net.URI.create("graftrn:///")
+
+  override def rename(src: Path, dst: Path): Boolean =
+    !FalseRenameFs.refuse(dst.getName) && super.rename(src, dst)
+}
+
+object FalseRenameFs {
+  @volatile var refuse: String => Boolean = _ => false
+
+  /** A fresh temp directory as a `graftrn:` path. The first call also
+    * caches the filesystem instance, so the session catalog, which
+    * holds its own copy of the Hadoop conf, resolves the scheme too.
+    */
+  def dir(prefix: String): String = {
+    val conf = graft.SparkSpec.session.sparkContext.hadoopConfiguration
+    conf.set("fs.graftrn.impl", classOf[FalseRenameFs].getName)
+    org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("graftrn:///"),
+      conf)
+    "graftrn:" + java.nio.file.Files.createTempDirectory(prefix).toString
   }
 }

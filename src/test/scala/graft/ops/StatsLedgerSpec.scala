@@ -155,6 +155,19 @@ class StatsLedgerSpec extends SparkSpec {
     assert(got === want)
     assert(want.nonEmpty, "lookup keys missing from fixture — weak test")
 
+    // the same exactness at 10 000 keys (every 7th id over a span 140×
+    // the fixture's): one probe shape at any key count
+    val bulk = (0L until 70000L by 7L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "lang", "n_chars").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+        .sortBy(_._1).toSeq
+    val bulkWant = rows(graft.core.Fs.readParquet(spark, s"$dir/d")
+      .filter(col("doc_id").isin(bulk: _*)))
+    assert(rows(StatsLedger.readPoint(spark, s"$dir/d", s"$dir/l",
+      "doc_id", bulk)) === bulkWant)
+    assert(bulk.size === 10000 && bulkWant.nonEmpty)
+
     // a key outside the domain probes to zero files on this small index
     val miss = StatsLedger.pruneFilesPoint(spark, s"$dir/l",
       "doc_id", Seq(987654321L))
