@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.lang.StringBuilder
+
 import scala.collection.immutable.ListMap
 
 /** Minimal deterministic JSON writer for payload construction.
@@ -26,7 +28,10 @@ object Json {
     sb.toString()
   }
 
-  private def any(sb: StringBuilder, v: Any): Unit = v match {
+  /** Appends `v`'s JSON to `sb`: the walk behind [[write]], for callers
+    * that write a fixed frame around generic values.
+    */
+  private[ingest] def any(sb: StringBuilder, v: Any): Unit = v match {
     case null => sb.append("null")
     case None => sb.append("null")
     case Some(x) => any(sb, x)
@@ -69,24 +74,39 @@ object Json {
       str(sb, other.toString)
   }
 
-  private def str(sb: StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case '\b' => sb.append("\\b")
-        case '\f' => sb.append("\\f")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
+  /** Appends `s` as a JSON string literal, or `null` for null. Each run of
+    * chars that needs no escape is copied with one bulk append; only `"`,
+    * `\` and chars below U+0020 are escaped (short forms where JSON has
+    * one, else lowercase `\u00xx`).
+    */
+  private[ingest] def str(sb: StringBuilder, s: String): Unit =
+    if (s == null) sb.append("null")
+    else {
+      sb.append('"')
+      var from = 0
+      var i = 0
+      val n = s.length
+      while (i < n) {
+        val c = s.charAt(i)
+        if (c < ' ' || c == '"' || c == '\\') {
+          sb.append(s, from, i)
+          c match {
+            case '"' => sb.append("\\\"")
+            case '\\' => sb.append("\\\\")
+            case '\n' => sb.append("\\n")
+            case '\r' => sb.append("\\r")
+            case '\t' => sb.append("\\t")
+            case '\b' => sb.append("\\b")
+            case '\f' => sb.append("\\f")
+            case _ =>
+              sb.append("\\u00").append(Hex(c >> 4)).append(Hex(c & 0xf))
+          }
+          from = i + 1
+        }
+        i += 1
       }
-      i += 1
+      sb.append(s, from, n).append('"')
     }
-    sb.append('"')
-  }
+
+  private val Hex = "0123456789abcdef".toCharArray
 }

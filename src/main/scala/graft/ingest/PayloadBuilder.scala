@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.lang.StringBuilder
 import java.sql.Timestamp
 import java.time.Instant
 import java.time.format.DateTimeFormatter
@@ -27,8 +28,6 @@ class ParquetLogger(
 
   /** Serialized once at construction (logger.py:76-79). */
   private val metadataJson: String = Json.write(loggerMetadata)
-
-  private val isoFmt = DateTimeFormatter.ISO_INSTANT
 
   // ---- E1: on_llm_start (logger.py:252-269) -------------------------------
   def onLlmStart(
@@ -197,29 +196,41 @@ class ParquetLogger(
       raw: Map[String, Any],
       customIdOverride: Option[String]): Unit = {
     val nowUs = clock.nowMicros
+    val parent = parentRunId.getOrElse("")
     val customId = customIdOverride.getOrElse(Tagging.extractCustomId(tags))
-    val payload = Json.obj(
-      "event_type" -> eventType,
-      "timestamp" -> isoFmt.format(Instant.ofEpochSecond(
-        nowUs / 1000000, (nowUs % 1000000) * 1000)),
-      "execution" -> Json.obj(
-        "run_id" -> runId,
-        "parent_run_id" -> parentRunId.getOrElse(""),
-        "custom_id" -> customId,
-        "tags" -> tags,
-        "metadata" -> metadata),
-      "data" -> data,
-      "raw" -> raw)
-    val ts = new Timestamp(nowUs / 1000)
-    ts.setNanos(((nowUs % 1000000) * 1000).toInt)
+    // The standard payload, written in its key order straight into one
+    // builder; only data and raw need the generic walk.
+    val sb = new StringBuilder(512)
+    sb.append("{\"event_type\":")
+    Json.str(sb, eventType)
+    sb.append(",\"timestamp\":\"")
+    IsoMicros.appendTo(sb, nowUs)
+    sb.append("\",\"execution\":{\"run_id\":")
+    Json.str(sb, runId)
+    sb.append(",\"parent_run_id\":")
+    Json.str(sb, parent)
+    sb.append(",\"custom_id\":")
+    Json.str(sb, customId)
+    sb.append(",\"tags\":")
+    Json.any(sb, tags)
+    sb.append(",\"metadata\":")
+    Json.any(sb, metadata)
+    sb.append("},\"data\":")
+    Json.any(sb, data)
+    sb.append(",\"raw\":")
+    Json.any(sb, raw)
+    sb.append('}')
+    // floor division keeps the nanos non-negative before 1970
+    val ts = new Timestamp(Math.floorDiv(nowUs, 1000000L) * 1000L)
+    ts.setNanos(Math.floorMod(nowUs, 1000000L).toInt * 1000)
     sink.append(LogEntry(
       timestamp = ts,
       run_id = runId,
-      parent_run_id = parentRunId.getOrElse(""),
+      parent_run_id = parent,
       custom_id = customId,
       event_type = eventType,
       logger_metadata = metadataJson,
-      payload = Json.write(payload)))
+      payload = sb.toString))
   }
 
   /** model name: serialized.kwargs.model_name (logger.py:259). */
@@ -250,4 +261,49 @@ class ParquetLogger(
         }
       case _ => null
     }
+}
+
+/** `DateTimeFormatter.ISO_INSTANT`'s text for a microsecond epoch instant:
+  * the second, then the 0, 3 or 6 fraction digits ISO_INSTANT prints for
+  * a whole second, millisecond or microsecond, then `Z`. The formatter
+  * runs only when the second changes; its text is kept in one slot shared
+  * by every logger. The slot is read and written without a lock: each
+  * value is an immutable pair, so a racing thread sees a whole pair, and
+  * at worst formats its second again.
+  */
+private[ingest] object IsoMicros {
+
+  private final class Second(val epochSecond: Long, val text: String)
+
+  private var last: Second = second(0L)
+
+  private def second(epochSecond: Long): Second = {
+    val iso = DateTimeFormatter.ISO_INSTANT.format(
+      Instant.ofEpochSecond(epochSecond))
+    new Second(epochSecond, iso.substring(0, iso.length - 1)) // drop "Z"
+  }
+
+  def appendTo(sb: StringBuilder, micros: Long): Unit = {
+    val epochSecond = Math.floorDiv(micros, 1000000L)
+    val fraction = Math.floorMod(micros, 1000000L).toInt
+    var s = last
+    if (s.epochSecond != epochSecond) {
+      s = second(epochSecond)
+      last = s
+    }
+    sb.append(s.text)
+    if (fraction % 1000 != 0) digits(sb, fraction, 100000)
+    else if (fraction != 0) digits(sb, fraction / 1000, 100)
+    sb.append('Z')
+  }
+
+  /** '.' then `v` zero-padded to the digits of `unit`'s magnitude. */
+  private def digits(sb: StringBuilder, v: Int, unit: Int): Unit = {
+    sb.append('.')
+    var u = unit
+    while (u > 0) {
+      sb.append(('0' + v / u % 10).toChar)
+      u /= 10
+    }
+  }
 }

@@ -113,11 +113,13 @@ object MergeStore {
     // dynamic overwrite alone would leave its old files live)
     val tmp = s"$path/_merge_tmp"
     merged.write.mode("overwrite").partitionBy("kb").parquet(tmp)
+    // a failed rename throws before the temp dir goes, so the bucket's
+    // merged rows stay under it instead of vanishing
     buckets.foreach { b =>
       val dest = new Path(s"$path/kb=$b")
       val src = new Path(s"$tmp/kb=$b")
       if (fs.exists(dest)) fs.delete(dest, true)
-      if (fs.exists(src)) fs.rename(src, dest)
+      if (fs.exists(src)) Fs.renameOrThrow(fs, src, dest)
     }
     fs.delete(new Path(tmp), true)
     buckets
@@ -199,9 +201,10 @@ object MergeStore {
     fs.listStatus(new Path(path)).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("kb="))
       .foreach(s => fs.delete(s.getPath, true))
+    // as in merge: a failed rename keeps the temp dir and its rows
     fs.listStatus(new Path(tmp)).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("kb="))
-      .foreach(s => fs.rename(s.getPath,
+      .foreach(s => Fs.renameOrThrow(fs, s.getPath,
         new Path(path, s.getPath.getName)))
     fs.delete(new Path(tmp), true)
   }

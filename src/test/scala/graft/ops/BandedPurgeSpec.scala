@@ -237,7 +237,7 @@ class BandedPurgeSpec extends SparkSpec {
       val want = rows(raw().filter(col("doc_id") =!= 7L))
       SignatureStore.takedownBanded(spark, table, Seq(7L))
 
-      FalseRenameFs.refuse = _.startsWith("part-purged-")
+      FalseRenameFs.refuse = _.getName.startsWith("part-purged-")
       try intercept[java.io.IOException](
         SignatureStore.purgeBandedPruned(spark, table))
       finally FalseRenameFs.refuse = _ => false

@@ -96,4 +96,41 @@ class MergeStoreSpec extends SparkSpec {
     MergeStore.merge(spark, path, changes((1L, 5L, false, 9.0)), "k", 4)
     assert(state(path) === Map(1L -> (5L, 9.0), 2L -> (2L, 2.0)))
   }
+
+  /** Makes every rename into a `kb=` dir fail, except Spark's own commit
+    * into the temp dir `stage`, so only the swap into the store fails.
+    */
+  private def refuseSwapIn[A](stage: String)(body: => A): A = {
+    FalseRenameFs.refuse = p =>
+      p.getName.startsWith("kb=") && p.getParent.getName != stage
+    try body finally FalseRenameFs.refuse = _ => false
+  }
+
+  private def rows(path: String): Set[(Long, Long, Boolean, Double)] =
+    spark.read.parquet(path).collect().map(r => (r.getAs[Long]("k"),
+      r.getAs[Long]("seq"), r.getAs[Boolean]("is_delete"),
+      r.getAs[Double]("v"))).toSet
+
+  test("a merge whose swap-in rename returns false throws and keeps the " +
+    "merged rows under _merge_tmp") {
+    val path = FalseRenameFs.dir("msrn") + "/t"
+    MergeStore.merge(spark, path,
+      changes((1L, 1L, false, 1.0), (2L, 2L, false, 2.0)), "k", 1)
+    intercept[java.io.IOException](refuseSwapIn("_merge_tmp")(
+      MergeStore.merge(spark, path, changes((1L, 5L, false, 1.5)), "k", 1)))
+    assert(rows(s"$path/_merge_tmp") ===
+      Set((1L, 5L, false, 1.5), (2L, 2L, false, 2.0)))
+  }
+
+  test("a purge whose swap-in rename returns false throws and keeps the " +
+    "live rows under _purge_tmp") {
+    val path = FalseRenameFs.dir("msrn") + "/t"
+    MergeStore.merge(spark, path, changes((1L, 1L, false, 1.0),
+      (2L, 2L, false, 2.0), (2L, 3L, true, 0.0), (3L, 4L, false, 3.0)),
+      "k", 2)
+    intercept[java.io.IOException](refuseSwapIn("_purge_tmp")(
+      MergeStore.purgeTombstones(spark, path)))
+    assert(rows(s"$path/_purge_tmp") ===
+      Set((1L, 1L, false, 1.0), (3L, 4L, false, 3.0)))
+  }
 }

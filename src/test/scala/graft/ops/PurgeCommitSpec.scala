@@ -329,7 +329,7 @@ class PurgeCommitSpec extends SparkSpec {
       .map(_.getLong(0)).sorted.toSeq
     val before = raw()
     assert(before.contains(3L))
-    FalseRenameFs.refuse = _.startsWith(Tombstones.MarkerPrefix)
+    FalseRenameFs.refuse = _.getName.startsWith(Tombstones.MarkerPrefix)
     try intercept[java.io.IOException](SignatureStore.purge(spark, path))
     finally FalseRenameFs.refuse = _ => false
     assert(raw() === before, "no data file may move or go")
@@ -392,7 +392,7 @@ class PurgeCommitSpec extends SparkSpec {
 }
 
 /** Local disk under the `graftrn:` scheme whose `rename` returns false,
-  * without renaming, when `refuse` accepts the destination's name —
+  * without renaming, when `refuse` accepts the destination path —
   * the failure Hadoop reports by return value instead of by exception.
   * Top-level so Hadoop can instantiate it.
   */
@@ -400,11 +400,11 @@ class FalseRenameFs extends graft.core.TestSchemeFs {
   override def getUri: java.net.URI = java.net.URI.create("graftrn:///")
 
   override def rename(src: Path, dst: Path): Boolean =
-    !FalseRenameFs.refuse(dst.getName) && super.rename(src, dst)
+    !FalseRenameFs.refuse(dst) && super.rename(src, dst)
 }
 
 object FalseRenameFs {
-  @volatile var refuse: String => Boolean = _ => false
+  @volatile var refuse: Path => Boolean = _ => false
 
   /** A fresh temp directory as a `graftrn:` path. The first call also
     * caches the filesystem instance, so the session catalog, which

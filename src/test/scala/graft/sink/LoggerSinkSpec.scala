@@ -91,6 +91,23 @@ class LoggerSinkSpec extends SparkSpec {
     assert(payload.contains(""""raw":{"""))
   }
 
+  test("a pre-1970 clock lands its event with the right instant in the " +
+    "row and the payload") {
+    Seq(-1L -> "1969-12-31T23:59:59.999999Z",
+      -1500000L -> "1969-12-31T23:59:58.500Z").foreach { case (us, iso) =>
+      val dir = Files.createTempDirectory("log").toString
+      val logger = newLogger(dir, bufferSize = 1, types = EventType.All,
+        clock = FixedClock(us))
+      logger.onChainEnd(Map("answer" -> "ok"), s"r$us")
+      val row = readLog(dir).head()
+      assert(row.getAs[java.sql.Timestamp]("timestamp").toInstant ===
+        java.time.Instant.parse(iso))
+      assert(row.getAs[String]("payload")
+        .contains(s""""timestamp":"$iso""""))
+      assert(row.getAs[java.sql.Date]("date").toString === "1969-12-31")
+    }
+  }
+
   test("event-type gate drops unconfigured events " +
     "(test_enhanced_logging.py:19-49)") {
     val dir = Files.createTempDirectory("log").toString
