@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.StructType
   * `gs://`, `abfs://`). A bare `java.io.File` probe of an `s3a://` URI
   * silently answers "doesn't exist", which flips append-mode writers
   * into overwrite mode and discards state — so operator code must never
-  * touch `java.io.File` for data paths. [[graft.ops.MergeStore.merge]]
-  * was the original correct pattern; this object is that pattern shared.
+  * touch `java.io.File` for data paths. Rewrites that replace a store's
+  * files in place commit through [[Commit]], which is built on this
+  * object.
   *
   * Rename caveat: `FileSystem.rename` is atomic on HDFS and local disk
   * but a copy-then-delete on S3-family stores; stage-then-rename callers

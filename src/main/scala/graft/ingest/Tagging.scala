@@ -31,10 +31,13 @@ object Tagging {
     Map("tags" -> (base ++ additionalTags ++ idTags))
   }
 
-  /** Driver/executor-side scalar version (tagging.py:85-98). */
+  /** Driver/executor-side scalar version (tagging.py:85-98). Null tags
+    * are skipped, as in the columnar [[ExtractCustomId]].
+    */
   def extractCustomId(tags: Seq[String]): String =
     tags.collectFirst {
-      case t if t.startsWith(CustomIdPrefix) => t.substring(CustomIdPrefix.length)
+      case t if t != null && t.startsWith(CustomIdPrefix) =>
+        t.substring(CustomIdPrefix.length)
     }.getOrElse("")
 
   /** Columnar version backed by the native Catalyst expression. */

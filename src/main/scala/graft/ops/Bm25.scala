@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** BM25 full-text retrieval — the lexical-search leg of the engine,
   * beside the ANN family (`VectorIndex`/`ProductQuantizer`): score
@@ -189,7 +189,7 @@ object Bm25 {
       idsDf: DataFrame): Unit = {
     val kf = idsDf.select(col(idsDf.columns.head).cast("long").as("_ts_id"))
       .distinct()
-    val p = Tombstones.readStore(spark, s"$path/postings")
+    val p = Commit.read(spark, s"$path/postings")
     // semi-prune the postings to the banned docs BEFORE the distinct,
     // so the dedup shuffles only takedown-sized rows, never the corpus
     val dls = p.select(col(idCol).cast("long").as("_ts_id"), col("dl"))
@@ -231,7 +231,7 @@ object Bm25 {
         val zeroDl = t.groupBy("_ts_id")
           .agg(max("_ts_dl").as("_ts_dl"))
           .filter(col("_ts_dl") === 0L)
-        val p = Tombstones.readStore(spark, s"$path/postings")
+        val p = Commit.read(spark, s"$path/postings")
         val found = p
           .select(col(idCol).cast("long").as("_ts_id"), col("dl"))
           .join(zeroDl.select("_ts_id"), Seq("_ts_id"), "left_semi")
@@ -251,7 +251,7 @@ object Bm25 {
     * interleaved — last writer won).
     */
   def readStats(spark: SparkSession, path: String): DataFrame = {
-    val base = Fs.readParquet(spark, s"$path/stats")
+    val base = Commit.read(spark, s"$path/stats")
       .agg(sum("n").cast("long").as("n"), sum("sdl").cast("long").as("sdl"),
         max("n_buckets").cast("long").as("n_buckets"))
     // the forget ledger subtracts its banned docs from the corpus
@@ -315,7 +315,7 @@ object Bm25 {
       path: String): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nBuckets = Fs.readParquet(spark, s"$path/stats")
+    val nBuckets = Commit.read(spark, s"$path/stats")
       .agg(max("n_buckets")).as[Long].head()
     // banned ids drop at INGEST (before postings and stats), so a
     // re-appended taken-down document neither serves nor skews the
@@ -364,11 +364,9 @@ object Bm25 {
       path: String,
       targetFileBytes: Long = 128L * 1024 * 1024)
       : Seq[LogCompactor.CompactionReport] = {
-    // complete any crashed purge first — compacting a half-swapped
-    // partition would adopt files a pending marker still governs
-    Tombstones.healPurges(spark, s"$path/postings")
     // ride the same maintenance tick to fold the forget ledger's
-    // accumulated takedown files into one deduped generation
+    // accumulated takedown files into one deduped generation (the
+    // compactor itself first completes any crashed purge)
     Tombstones.compact(spark, path)
     LogCompactor.compact(spark, s"$path/postings", targetFileBytes,
       partitionPrefix = "tb=")
@@ -429,7 +427,7 @@ object Bm25 {
     // exists; a pinned exact snapshot while one does (mid-purge or
     // post-crash).
     val p = Tombstones.mask(spark, path,
-      Tombstones.readStore(spark, s"$path/postings")
+      Commit.read(spark, s"$path/postings")
         .filter(col("tb").isin(buckets: _*))
         .drop("tb"),
       idCol)

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** Small-file compaction for buffered log directories.
   *
@@ -17,6 +18,14 @@ import graft.core.Fs
   * All directory listing/deletion goes through [[graft.core.Fs]] (Hadoop
   * FileSystem API), so the same compactor runs against `s3a://`/`hdfs://`
   * log directories — which is where a 100 TB log lives.
+  *
+  * Each rewrite is one [[graft.core.Commit]]: the partition's files are
+  * pinned when listed, the compacted copy is staged once and committed
+  * by one marker, and only the pinned files are deleted — so a file an
+  * appender lands after the listing survives, and a crash at any step
+  * leaves the pre- or the post-compaction files, which the next
+  * compaction rolls forward or sweeps. Every call first completes or
+  * sweeps a crashed earlier rewrite under `dir`.
   */
 object LogCompactor {
 
@@ -43,72 +52,66 @@ object LogCompactor {
       partitions: Option[Seq[String]] = None,
       clusterBy: Seq[String] = Nil,
       partitionPrefix: String = "date="): Seq[CompactionReport] = {
+    Commit.healAndSweep(spark, dir)
     val parts = Fs.list(spark, dir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionPrefix))
       .filter(s => partitions.forall(_.contains(s.getPath.getName)))
       .sortBy(_.getPath.getName)
 
     parts.map { p =>
-      val pPath = p.getPath.toString
-      val files = Fs.list(spark, pPath)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      val bytes = files.map(_.getLen).sum
-      val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      val report = CompactionReport(p.getPath.getName, files.length, target, bytes)
-      if (files.length > target || clusterBy.nonEmpty) {
-        val df0 = Fs.readParquet(spark, pPath).coalesce(target)
-        val df =
-          if (clusterBy.isEmpty) df0
-          else df0.sortWithinPartitions(clusterBy.map(col): _*)
-        val tmp = pPath + ".compact"
-        df.write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy").parquet(tmp)
-        // atomic-ish swap: rewrite into place from the compacted copy
-        val compacted = Fs.readParquet(spark, tmp)
-        compacted.coalesce(target).write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy").parquet(pPath)
-        Fs.delete(spark, tmp)
+      rewrite(spark, dir, p.getPath.getName, targetFileBytes,
+          force = clusterBy.nonEmpty) { df =>
+        if (clusterBy.isEmpty) df
+        else df.sortWithinPartitions(clusterBy.map(col): _*)
       }
-      report
     }
+  }
+
+  /** Rewrite the files directly inside `root/sub` ("" = `root` itself),
+    * pinned as listed, into ⌈bytes / targetFileBytes⌉ files behind one
+    * commit, when they are more files than that or `force` holds;
+    * `shape` sees the coalesced read.
+    */
+  private def rewrite(spark: SparkSession, root: String, sub: String,
+      targetFileBytes: Long, force: Boolean)(
+      shape: DataFrame => DataFrame): CompactionReport = {
+    val dir = if (sub.isEmpty) root else s"$root/$sub"
+    val files = Commit.dataFilesIn(spark, dir)
+    val bytes = files.map(_.getLen).sum
+    val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    if (files.nonEmpty && (files.length > target || force)) {
+      val rel = (f: FileStatus) =>
+        if (sub.isEmpty) f.getPath.getName else s"$sub/${f.getPath.getName}"
+      Commit.rewrite(spark, root, files.map(rel)) { stage =>
+        shape(Fs.readParquet(spark, files.map(_.getPath.toString): _*)
+            .coalesce(target))
+          .write.option("compression", "snappy")
+          .parquet(if (sub.isEmpty) stage else s"$stage/$sub")
+      }
+    }
+    CompactionReport(new Path(dir).getName, files.length, target, bytes)
   }
 
   /** Compact a FLAT (unpartitioned) parquet directory — the shape of the
     * staged-append delta ledgers (span-scrub tile hashes, BM25 corpus
     * stats), which grow one small file set per append
-    * ([[graft.core.Fs.stagedAppend]]). Same rewrite recipe as
+    * ([[graft.core.Fs.stagedAppend]]). Same committed rewrite as
     * [[compact]] applied to the directory itself; rows are preserved
     * exactly (duplicate rows included — the BM25 stats ledger SUMS its
     * delta rows, so a compactor must never dedupe; set-semantic stores
-    * dedupe in their own wrapper, [[SpanScrub.compactLedger]]). Not
-    * concurrency-safe against in-flight appenders — run it from the
-    * same maintenance window as partition compaction. `None` when the
-    * directory is missing or empty.
+    * dedupe in their own wrapper, [[SpanScrub.compactLedger]]). Safe
+    * against in-flight appenders: their files are not in the pinned
+    * list, so they survive the swap. Readers must open the directory
+    * through [[graft.core.Commit.read]]. `None` when the directory is
+    * missing or empty.
     */
   def compactFlat(
       spark: SparkSession,
       dir: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Option[CompactionReport] = {
-    val files = Fs.list(spark, dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (files.isEmpty) None else {
-      val bytes = files.map(_.getLen).sum
-      val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      val report = CompactionReport(
-        new org.apache.hadoop.fs.Path(dir).getName,
-        files.length, target, bytes)
-      if (files.length > target) {
-        val tmp = dir + ".compact"
-        Fs.readParquet(spark, dir).coalesce(target)
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy").parquet(tmp)
-        Fs.readParquet(spark, tmp).coalesce(target)
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy").parquet(dir)
-        Fs.delete(spark, tmp)
-      }
-      Some(report)
-    }
+    Commit.healAndSweep(spark, dir)
+    Some(rewrite(spark, dir, "", targetFileBytes, force = false)(identity))
+      .filter(_.filesBefore > 0)
   }
 
   /** Retention: delete `date=` partitions strictly older than `cutoff`

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Fs, LogSchema}
+import graft.core.{Commit, Fs, LogSchema}
 import graft.query.{LogRollup, ShreddedLog}
 import graft.streaming.LogStreamPipeline
 
@@ -22,7 +22,7 @@ import graft.streaming.LogStreamPipeline
   * Unlike the serving indexes, the log stores get NO standing mask
   * ledger: a compliance delete here is physical disposal of the rows,
   * executed as PARTITION-PRUNED marker-committed rewrites
-  * ([[Tombstones.rewriteCommitted]] — the r13 purge protocol) over the
+  * ([[graft.core.Commit.rewrite]] — the r13 purge protocol) over the
   * stores' own batch-keyed hive layouts:
   *
   *  - DETAIL ([[purgeDetail]] / [[purgeDetailByRun]]): one
@@ -104,17 +104,26 @@ object LogForget {
     * source dir a crashed purge left half-swapped). The always case
     * (no marker anywhere) costs one name filter on a listing; healing
     * is idempotent and commutes with concurrent healers, the same
-    * any-reader contract as [[Tombstones.healPurges]]. Returns markers
+    * any-reader contract as [[graft.core.Commit.heal]]. Returns markers
     * processed.
     */
   def healStore(spark: SparkSession, storeDir: String): Int =
-    dateDirs(spark, storeDir).map { d =>
-      val p = d.getPath.toString
-      if (Fs.list(spark, p).exists(
-          _.getPath.getName.startsWith(Tombstones.MarkerPrefix)))
-        Tombstones.healPurges(spark, p)
-      else 0
-    }.sum
+    dateDirs(spark, storeDir).map(d => Commit.heal(spark, d.getPath.toString))
+      .sum
+
+  /** One partition's committed rewrite: `replacement` maps the pinned
+    * old files of `root/part` to the frame that replaces them. False
+    * when the partition holds no data files.
+    */
+  private def rewritePart(spark: SparkSession, root: String, part: String)(
+      replacement: Seq[String] => DataFrame): Boolean = {
+    val old = Commit.dataFilesIn(spark, s"$root/$part").map(_.getPath)
+    if (old.nonEmpty)
+      Commit.rewrite(spark, root, old.map(p => s"$part/${p.getName}"))(
+        stage => replacement(old.map(_.toString))
+          .write.parquet(s"$stage/$part"))
+    old.nonEmpty
+  }
 
   /** Physically remove every detail-log row of the given custom ids —
     * partition-pruned marker-committed rewrites over the landed
@@ -152,7 +161,7 @@ object LogForget {
     if (Fs.listDataFiles(spark, storeDir).isEmpty) return 0
     val k = shape(keys)
     dateDirs(spark, storeDir).foreach(d =>
-      Tombstones.healAndSweep(spark, d.getPath.toString))
+      Commit.healAndSweep(spark, d.getPath.toString))
     // one COLUMN-PRUNED scan (the match column + the two partition
     // columns) finds the hit partitions; everything after touches only
     // those
@@ -168,11 +177,10 @@ object LogForget {
       .distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
     hits.foreach { case (d, p) =>
-      Tombstones.rewriteCommitted(spark, s"$storeDir/date=$d",
-        s"$partCol=$p", old =>
-          Fs.readParquet(spark, old: _*)
-            .join(k, col(matchCol).cast("string") === k("_lf_cid"),
-              "left_anti"))
+      rewritePart(spark, s"$storeDir/date=$d", s"$partCol=$p")(old =>
+        Fs.readParquet(spark, old: _*)
+          .join(k, col(matchCol).cast("string") === k("_lf_cid"),
+            "left_anti"))
     }
     hits.size
   }
@@ -231,7 +239,7 @@ object LogForget {
     if (Fs.listDataFiles(spark, shredDir).isEmpty) return 0
     val k = shape(keys)
     dateDirs(spark, rollupDir).foreach(d =>
-      Tombstones.healAndSweep(spark, d.getPath.toString))
+      Commit.healAndSweep(spark, d.getPath.toString))
     val shred = Fs.readParquetUnder(spark, shredDir, shredDir)
       .select(col(matchCol).cast("string").as("_lf_m"),
         col("date"), col("src").cast("string").as("_lf_p"))
@@ -262,8 +270,8 @@ object LogForget {
           val genDir = s"$rollupDir/date=$d/src=$s"
           val stale = staleUnder(spark, s"$rollupDir/date=$d", n.toLong)
           if (LogStreamPipeline.folded(spark, genDir) && stale.isEmpty) {
-            require(Tombstones.rewriteCommitted(spark,
-                s"$rollupDir/date=$d", s"src=$s", recompute),
+            require(rewritePart(spark,
+                s"$rollupDir/date=$d", s"src=$s")(recompute),
               s"rollup generation $genDir is committed but holds no " +
                 "data files — refusing to ack a re-fold that subtracted " +
                 "nothing")
@@ -291,8 +299,7 @@ object LogForget {
           // rollup appends — there is no contribution to subtract, and
           // the batch-keyed replay will rebuild it from the already-
           // purged source)
-          Tombstones.rewriteCommitted(spark, s"$rollupDir/date=$d",
-            s"src=$s", recompute)
+          rewritePart(spark, s"$rollupDir/date=$d", s"src=$s")(recompute)
           ()
       }
     }

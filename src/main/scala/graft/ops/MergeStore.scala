@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** Keyed merge/upsert store — the MERGE INTO primitive (CDC apply) on
   * plain parquet: a table of (key, payload) rows maintained by change
@@ -22,7 +21,12 @@ import graft.core.Fs
   *   4. unions stored rows with the winners and keeps, per key, the row
   *      with the highest seq — so replaying an old or already-applied
   *      batch is a no-op (LWW by total per-key sequence),
-  *   5. overwrites only those partition directories.
+  *   5. replaces only those partitions' files, in one staged write
+  *      partitioned by `kb` behind one [[graft.core.Commit]] marker —
+  *      readers ([[read]], [[readOrEmpty]], [[lookup]]) open through its
+  *      gate, so a crash at any step serves the pre- or the post-merge
+  *      state, never a bucket missing or doubled, and the next merge
+  *      rolls a committed one forward or sweeps an uncommitted one.
   *
   * Deletes persist as TOMBSTONES (`is_delete = true`): without them, a
   * late replay of an upsert older than the delete would silently
@@ -68,6 +72,7 @@ object MergeStore {
       keyCol: String,
       nBuckets: Int): Seq[Long] = {
     import spark.implicits._
+    Commit.healAndSweep(spark, path)
     val payload = changes.columns
       .filterNot(c => c == keyCol || c == "is_delete" || c == "seq")
       .toSeq
@@ -93,41 +98,29 @@ object MergeStore {
       .sorted.toSeq
     if (buckets.isEmpty) return buckets
 
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // LWW is associative and idempotent, so the stored rows and the raw
     // change batch fold in ONE aggregate — the old shape pre-reduced the
     // batch (lww(changes)) and then re-aggregated the union
     // (lww(stored ∪ winner)): two chained exchanges where one suffices.
     // Map-side partial aggregation performs the batch pre-reduction for
-    // free inside the single shuffle.
+    // free inside the single shuffle. The store has one writer, so the
+    // pruned directory read sees exactly the pinned old files.
+    val old = buckets.flatMap(b => Commit.dataFilesIn(spark, s"$path/kb=$b")
+      .map(f => s"kb=$b/${f.getPath.getName}"))
     val merged =
-      if (!fs.exists(new Path(path))) lww(withKb)
+      if (!Fs.nonEmptyDir(spark, path)) lww(withKb)
       else lww(Fs.readParquet(spark, path)
         .filter(col("kb").isin(buckets: _*))
         .select(ordered.map(col): _*)
         .unionByName(withKb.select(ordered.map(col): _*)))
-
-    // overwrite exactly the touched partition dirs (a bucket whose rows
-    // all disappeared — possible only via purge — deletes explicitly;
-    // dynamic overwrite alone would leave its old files live)
-    val tmp = s"$path/_merge_tmp"
-    merged.write.mode("overwrite").partitionBy("kb").parquet(tmp)
-    // a failed rename throws before the temp dir goes, so the bucket's
-    // merged rows stay under it instead of vanishing
-    buckets.foreach { b =>
-      val dest = new Path(s"$path/kb=$b")
-      val src = new Path(s"$tmp/kb=$b")
-      if (fs.exists(dest)) fs.delete(dest, true)
-      if (fs.exists(src)) Fs.renameOrThrow(fs, src, dest)
-    }
-    fs.delete(new Path(tmp), true)
+    Commit.rewrite(spark, path, old)(
+      merged.write.partitionBy("kb").parquet(_))
     buckets
   }
 
   /** Current live table state (tombstones filtered, all buckets). */
   def read(spark: SparkSession, path: String): DataFrame =
-    Fs.readParquet(spark, path)
+    Commit.read(spark, path)
       .filter(!col("is_delete"))
       .drop("kb", "is_delete")
 
@@ -139,9 +132,7 @@ object MergeStore {
     */
   def readOrEmpty(
       spark: SparkSession, path: String, like: DataFrame): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(path))) read(spark, path)
+    if (Fs.exists(spark, path)) read(spark, path)
     else like.limit(0).drop("is_delete")
   }
 
@@ -158,7 +149,7 @@ object MergeStore {
     val kb = Seq(key).toDF(keyCol)
       .select(pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)))
       .as[Long].head()
-    Fs.readParquet(spark, path)
+    Commit.read(spark, path)
       .filter(col("kb") === kb && col(keyCol) === key &&
         !col("is_delete"))
       .drop("kb", "is_delete")
@@ -170,10 +161,11 @@ object MergeStore {
     * BY ALGEBRA: idempotent (a replayed batch's rows tie on stored seq
     * and change nothing) and commutative (LWW is an associative
     * lattice), so any re-delivery after a crash converges to the same
-    * state. A crash mid-merge (some bucket dirs renamed, some not) heals
-    * the same way: the replay re-applies — updated buckets no-op,
-    * missing ones apply. This is the table-format CDC-apply loop with
-    * the transaction log replaced by lattice algebra.
+    * state. A crash mid-merge needs no replay: the merge's one marker
+    * commit either landed (the next merge rolls it forward) or did not
+    * (the store is unchanged and the re-delivered batch applies). This
+    * is the table-format CDC-apply loop with the transaction log
+    * replaced by lattice algebra.
     */
   def streamApply(
       changes: DataFrame,
@@ -193,19 +185,13 @@ object MergeStore {
     * once no change batch older than any tombstone's seq can replay.
     */
   def purgeTombstones(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = Fs.readParquet(spark, path).filter(!col("is_delete"))
-    val tmp = s"$path/_purge_tmp"
-    live.write.mode("overwrite").partitionBy("kb").parquet(tmp)
-    fs.listStatus(new Path(path)).iterator
+    Commit.healAndSweep(spark, path)
+    val old = Fs.list(spark, path)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("kb="))
-      .foreach(s => fs.delete(s.getPath, true))
-    // as in merge: a failed rename keeps the temp dir and its rows
-    fs.listStatus(new Path(tmp)).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("kb="))
-      .foreach(s => Fs.renameOrThrow(fs, s.getPath,
-        new Path(path, s.getPath.getName)))
-    fs.delete(new Path(tmp), true)
+      .flatMap(d => Commit.dataFilesIn(spark, d.getPath.toString)
+        .map(f => s"${d.getPath.getName}/${f.getPath.getName}"))
+    Commit.rewrite(spark, path, old)(
+      Fs.readParquet(spark, path).filter(!col("is_delete"))
+        .write.partitionBy("kb").parquet(_))
   }
 }

@@ -202,17 +202,17 @@ object ProductQuantizer {
   /** Per-bucket small-file compaction of an appended IVF-PQ store —
     * the ONE maintenance entry point, and (r13 verdict item: every
     * store's maintenance tick must heal, so no store relies on a PROBE
-    * to converge a crashed purge) it runs the same preamble pair as
-    * [[Bm25.compactIndex]] / [[VectorIndex.compactIvf]]: complete any
-    * crashed marker-committed purge first (compacting a half-swapped
-    * partition would adopt files a pending marker still governs), then
-    * fold the forget ledger's accumulated takedown files.
+    * to converge a crashed purge) it runs the same steps as
+    * [[Bm25.compactIndex]] / [[VectorIndex.compactIvf]]: fold the forget
+    * ledger's accumulated takedown files, then compact through
+    * [[LogCompactor.compact]], which first completes or sweeps any
+    * crashed purge (compacting a half-swapped partition would adopt
+    * files a pending marker still governs).
     */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
       path: String,
       targetFileBytes: Long = 128L * 1024 * 1024)
       : Seq[LogCompactor.CompactionReport] = {
-    Tombstones.healPurges(spark, path)
     Tombstones.compact(spark, path)
     LogCompactor.compact(spark, path, targetFileBytes,
       partitionPrefix = "bucket=")
@@ -354,7 +354,7 @@ object ProductQuantizer {
     }
     // purge gate: plain partitioned scan when no purge marker exists
     // (the always case); pinned exact snapshot while one does
-    val idx = decodeFromCodes(Tombstones.readStore(spark, path), books)
+    val idx = decodeFromCodes(graft.core.Commit.read(spark, path), books)
     // forget-ledger mask above the bucket join (same placement rationale
     // as VectorIndex.probe: answers = complement rebuild, pruning kept)
     rankTopK(

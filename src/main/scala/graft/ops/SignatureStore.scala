@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** Materialized MinHash signature table — the production shape of
   * near-dup detection at 100 TB, where signatures are computed ONCE per
@@ -80,8 +80,7 @@ object SignatureStore {
     }
     // purge gate: plain scan when no purge marker exists (the always
     // case); pinned exact snapshot while one does
-    Tombstones.mask(spark, path, Tombstones.readStore(spark, path),
-      "doc_id")
+    Tombstones.mask(spark, path, Commit.read(spark, path), "doc_id")
   }
 
   /** Physically dispose of tombstoned signatures — the flat store's
@@ -94,27 +93,30 @@ object SignatureStore {
     Tombstones.purgeFlat(spark, path, path, "doc_id", Seq("doc_id"))
 
   /** Small-file compaction for the FLAT signature store — the store's
-    * maintenance entry point, running the uniform heal pair first (r13
-    * verdict item: no store may rely on a probe to converge a crashed
-    * purge): roll crashed purges forward, fold the forget ledger, then
-    * fold the store's accumulated append files. The data fold itself
-    * rides [[Tombstones.rewriteCommitted]] — NOT a delete-then-write
-    * overwrite — because signature rows are data, not a dedupable
-    * ledger: a mid-fold reader must see exactly-once rows, which the
-    * purge gate's pinned snapshot guarantees at every step and across
-    * a crash at any step. Returns true when a fold ran.
+    * maintenance entry point: roll crashed purges forward and sweep
+    * their debris, fold the forget ledger, then fold the store's
+    * accumulated append files. The data fold is a [[Commit.rewrite]] —
+    * NOT a delete-then-write overwrite — because signature rows are
+    * data, not a dedupable ledger: a mid-fold reader must see
+    * exactly-once rows, which the gate's pinned snapshot guarantees at
+    * every step and across a crash at any step. Returns true when a
+    * fold ran.
     */
   def compactStore(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Boolean = {
-    Tombstones.healAndSweep(spark, path)
+    Commit.healAndSweep(spark, path)
     Tombstones.compact(spark, path)
-    val files = graft.core.Fs.list(spark, path)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val files = Commit.dataFilesIn(spark, path)
     val n = math.max(1, math.ceil(
       files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
     if (files.size <= n) false
-    else Tombstones.rewriteCommitted(spark, path, "",
-      old => Fs.readParquet(spark, old: _*).coalesce(n))
+    else {
+      Commit.rewrite(spark, path, files.map(_.getPath.getName)) { stage =>
+        Fs.readParquet(spark, files.map(_.getPath.toString): _*)
+          .coalesce(n).write.parquet(stage)
+      }
+      true
+    }
   }
 
   /** Append a document batch's signatures to the flat store — banned
@@ -289,83 +291,28 @@ object SignatureStore {
   // rebuild stays as the fallback for stores that want the ledger
   // cleared and the file count re-normalized.) -----------------------
 
-  private val BandedMarker = "_PURGEB."
-  private val BandedStage = ".purgeb-stage-"
-
-  /** Roll a committed [[purgeBandedPruned]] forward — its own last step,
-    * and the repair after a crash: replay the marker's rename/delete
-    * plan (idempotent — a staged file already renamed, by an earlier run
-    * or a concurrent healer, is skipped, an old file already deleted is
-    * skipped), then drop the marker and stage debris. Also sweeps
-    * marker-LESS stage dirs (a crash before the marker write: nothing
-    * was committed, the staged survivors are recomputable debris).
-    * Cheap in the always case: one name filter on a directory listing.
-    */
-  def healBandedPurge(spark: SparkSession, table: String): Unit = {
-    val loc = tableLocation(spark, table)
-    val entries = graft.core.Fs.list(spark, loc)
-    val markers = entries.filter(_.getPath.getName.startsWith(BandedMarker))
-    val fs = new org.apache.hadoop.fs.Path(loc)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    markers.foreach { m =>
-      import org.apache.hadoop.fs.Path
-      val token = m.getPath.getName.stripPrefix(BandedMarker)
-      val in = fs.open(m.getPath)
-      val plan = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().map(_.split("\t", -1)).collect {
-          case Array(oldName, stagedRel, finalName) =>
-            (oldName, stagedRel, finalName)
-        }.toVector finally in.close()
-      // every survivor lands before any old file goes: a rename that
-      // fails while its staged file is still there throws, and the
-      // marker, the stage and every old file stay for the next heal
-      plan.foreach { case (_, stagedRel, finalName) =>
-        val staged = new Path(s"$loc/$BandedStage$token/$stagedRel")
-        val dest = new Path(s"$loc/$finalName")
-        if (finalName.nonEmpty && fs.exists(staged) &&
-            !fs.rename(staged, dest) && fs.exists(staged))
-          throw new java.io.IOException(s"rename $staged to $dest failed")
-      }
-      plan.foreach(p => fs.delete(new Path(s"$loc/${p._1}"), false))
-      fs.delete(new Path(s"$loc/$BandedStage$token"), true)
-      fs.delete(m.getPath, false)
-    }
-    // pre-commit debris: stage dirs and temp markers whose token never
-    // reached a committed marker
-    val live = markers.map(_.getPath.getName.stripPrefix(BandedMarker)).toSet
-    entries.filter { e =>
-      val n = e.getPath.getName
-      (n.startsWith(BandedStage) && !live(n.stripPrefix(BandedStage))) ||
-        n.startsWith(".purgeb-tmp-")
-    }.foreach(e => fs.delete(e.getPath, true))
-    if (markers.nonEmpty) spark.catalog.refreshTable(table)
-  }
-
   /** Physical disposal for the banded bucketed store with work ∝ HITS:
     * one scan finds the bucket files still holding banned rows; each is
-    * rewritten to its anti-joined survivors and swapped in under a new
-    * name carrying the SAME bucket-id suffix — so the catalog's
-    * file-to-bucket assignment (and with it the shuffle-free candidate
-    * join) survives, and unaffected bucket files are never read again,
-    * let alone rewritten. Commit discipline: all survivor files stage
-    * under a dot-prefixed dir (invisible to the table's file index),
-    * then ONE marker file lists the rename/delete plan — the commit
-    * point — then the plan executes and the marker drops. A crash
-    * before the marker loses nothing (debris swept); after it,
-    * [[healBandedPurge]] (run by this method and by
-    * [[bucketedNearDups]] before reading) replays the plan forward.
-    * Mid-swap raw `spark.table` readers can observe a survivor file
-    * next to its not-yet-deleted source (transient duplicates) — the
-    * same torn window every raw directory reader has against any
-    * compaction; the masked query path heals first and the candidate
-    * pairs dedupe by construction. Unlike [[purgeBanded]] the ledger
-    * stays IN FORCE afterwards (appends must keep dropping banned
-    * ids — the [[Tombstones.purgeFlat]] contract). Returns banned rows
-    * physically removed.
+    * rewritten to its anti-joined survivors under a new name carrying
+    * the SAME bucket-id suffix — so the catalog's file-to-bucket
+    * assignment (and with it the shuffle-free candidate join) survives,
+    * and unaffected bucket files are never read again, let alone
+    * rewritten. The swap is one [[Commit.rewrite]] of the table
+    * location: survivors are written and renamed to their final names
+    * inside the stage, then one marker commits the whole file set. A
+    * crash before the marker loses nothing (the next purge sweeps the
+    * stage); after it, [[Commit.heal]] — run by [[bucketedNearDups]]
+    * before reading — rolls it forward. Mid-swap raw `spark.table`
+    * readers can observe a survivor file next to its not-yet-deleted
+    * source (transient duplicates) — the same torn window every raw
+    * directory reader has against any compaction. Unlike
+    * [[purgeBanded]] the ledger stays IN FORCE afterwards (appends must
+    * keep dropping banned ids — the [[Tombstones.purgeFlat]] contract).
+    * Returns banned rows physically removed.
     */
   def purgeBandedPruned(spark: SparkSession, table: String): Long = {
-    healBandedPurge(spark, table)
     val loc = tableLocation(spark, table)
+    if (Commit.healAndSweep(spark, loc) > 0) spark.catalog.refreshTable(table)
     val idsOpt = Tombstones.ids(spark, loc)
     if (idsOpt.isEmpty) return 0L
     val banned = idsOpt.get.select(col("_ts_id"))
@@ -373,8 +320,6 @@ object SignatureStore {
       org.apache.spark.sql.catalyst.TableIdentifier(table))
     val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
       s"purgeBandedPruned: table '$table' carries no bucket spec"))
-    val fs = new org.apache.hadoop.fs.Path(loc)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // ONE column-pruned scan finds the hit files (and the exact count
     // of rows to remove); everything after touches only those files
@@ -383,53 +328,38 @@ object SignatureStore {
       .join(banned, col("doc_id") === col("_ts_id"), "left_semi")
       .groupBy("_f").agg(count(lit(1)).as("n")).collect()
     if (hitRows.isEmpty) return 0L
-    val removed = hitRows.map(_.getLong(1)).sum
     val hitFiles = hitRows.map(r => new org.apache.hadoop.fs.Path(
         new java.net.URI(r.getString(0)))).sortBy(_.getName)
-
-    val token = java.util.UUID.randomUUID.toString
-    val stageRoot = s"$loc/$BandedStage$token"
-    val sortCols = spec.sortColumnNames
-    val plan = hitFiles.zipWithIndex.map { case (f, i) =>
-      val survivors = Fs.readParquet(spark, f.toString)
-        .join(banned, col("doc_id") === col("_ts_id"), "left_anti")
-      val sorted =
-        if (sortCols.isEmpty) survivors.coalesce(1)
-        else survivors.coalesce(1)
-          .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      sorted.write.mode("overwrite").parquet(s"$stageRoot/$i")
-      val part = graft.core.Fs.listDataFiles(spark, s"$stageRoot/$i")
-        .headOption.map(p => new org.apache.hadoop.fs.Path(p).getName)
-      // the survivor file inherits its SOURCE's bucket-id suffix
-      // (`..._00007.c000.snappy.parquet`), which is all Spark's
-      // bucketed scan reads the bucket from; an all-banned file stages
-      // nothing and its plan line is delete-only
+    // the survivor file inherits its SOURCE's bucket-id suffix
+    // (`..._00007.c000.snappy.parquet`), which is all Spark's bucketed
+    // scan reads the bucket from
+    val suffixes = hitFiles.map { f =>
       val cut = f.getName.lastIndexOf("_")
       require(cut > 0 && f.getName.drop(cut + 1).takeWhile(_.isDigit)
           .nonEmpty,
         s"purgeBandedPruned: '${f.getName}' carries no bucket-id " +
           "suffix — not a bucketed table file")
-      val finalName = part match {
-        case Some(_) => s"part-purged-$token-$i${f.getName.substring(cut)}"
-        case None => ""
-      }
-      (f.getName, part.map(p => s"$i/$p").getOrElse(""), finalName)
+      f.getName.substring(cut)
     }
-
-    // the COMMIT POINT: one marker file carrying the whole plan —
-    // written to a dot-prefixed temp name and RENAMED into place, so
-    // the marker is atomically either absent (nothing committed, stage
-    // debris swept on the next heal) or complete (a torn half-plan can
-    // never replay a truncated rename)
-    val marker = new org.apache.hadoop.fs.Path(s"$loc/$BandedMarker$token")
-    val tmp = new org.apache.hadoop.fs.Path(s"$loc/.purgeb-tmp-$token")
-    val out = fs.create(tmp, false)
-    try out.write(plan.map(p => s"${p._1}\t${p._2}\t${p._3}")
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    Fs.renameOrThrow(fs, tmp, marker)
-    healBandedPurge(spark, table) // roll forward: replays this plan
-    removed
+    val sortCols = spec.sortColumnNames
+    val tag = java.util.UUID.randomUUID.toString
+    Commit.rewrite(spark, loc, hitFiles.map(_.getName).toSeq) { stage =>
+      hitFiles.zip(suffixes).zipWithIndex.foreach { case ((f, sfx), i) =>
+        val survivors = Fs.readParquet(spark, f.toString)
+          .join(banned, col("doc_id") === col("_ts_id"), "left_anti")
+          .coalesce(1)
+        // written under a hidden dir, so only the renamed file is staged
+        val tmp = s"$stage/.w$i"
+        (if (sortCols.isEmpty) survivors
+         else survivors.sortWithinPartitions(sortCols.head, sortCols.tail: _*))
+          .write.parquet(tmp)
+        // an all-banned file stages nothing: the commit only deletes it
+        Fs.listDataFiles(spark, tmp).foreach(part =>
+          Commit.renameStaged(spark, part, s"$stage/part-purged-$tag-$i$sfx"))
+      }
+    }
+    spark.catalog.refreshTable(table)
+    hitRows.map(_.getLong(1)).sum
   }
 
   def bucketedNearDups(
@@ -438,10 +368,10 @@ object SignatureStore {
       freshDocs: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    // a crashed pruned purge must not serve a half-swapped file set
-    // (one name filter on a listing in the always case)
-    healBandedPurge(spark, table)
     val loc = tableLocation(spark, table)
+    // a crashed pruned purge must not serve a half-swapped file set
+    // (one listing in the always case); a reader heals but never sweeps
+    if (Commit.heal(spark, loc) > 0) spark.catalog.refreshTable(table)
     nearDupsAgainstBanded(
       Tombstones.mask(spark, loc, spark.table(table), "doc_id"),
       Tombstones.mask(spark, loc, freshDocs, "doc_id"),

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** Duplicate-span SCRUBBING — remove repeated spans, keep the document.
   * [[SelfDedup]] answers "drop documents that repeat an earlier span";
@@ -106,7 +106,7 @@ object SpanScrub {
     // ledger row would otherwise EXPAND the membership join
     val seen =
       if (ledgerExists)
-        Fs.readParquet(spark, ledgerPath).select(col("h")).distinct()
+        Commit.read(spark, ledgerPath).select(col("h")).distinct()
           .select(col("h"), lit(true).as("_old"))
       else {
         import spark.implicits._
@@ -139,28 +139,26 @@ object SpanScrub {
     * duplicate hashes a crash-replayed append leaves behind into a
     * compact distinct rewrite. The ledger is semantically a SET (reads
     * are `distinct()`), so deduping at compaction time changes no
-    * answer — it only shrinks the membership join's build side. Like
-    * [[LogCompactor.compactFlat]], not concurrency-safe against
-    * in-flight appenders: run from the maintenance window between
-    * batches. No-op (`None`) when the ledger does not exist yet.
+    * answer — it only shrinks the membership join's build side. One
+    * [[graft.core.Commit]] rewrite of the pinned files, so an append
+    * landing mid-compaction survives and a crash at any step leaves a
+    * ledger the gate reads exactly. No-op (`None`) when the ledger does
+    * not exist yet.
     */
   def compactLedger(
       spark: org.apache.spark.sql.SparkSession,
       ledgerPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024)
       : Option[LogCompactor.CompactionReport] = {
-    if (!graft.core.Fs.nonEmptyDir(spark, ledgerPath)) None else {
-      val files = graft.core.Fs.list(spark, ledgerPath)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    Commit.healAndSweep(spark, ledgerPath)
+    val files = Commit.dataFilesIn(spark, ledgerPath)
+    if (files.isEmpty) None else {
       val bytes = files.map(_.getLen).sum
       val target =
         math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      val tmp = ledgerPath + ".compact"
-      Fs.readParquet(spark, ledgerPath).distinct().coalesce(target)
-        .write.mode("overwrite").parquet(tmp)
-      Fs.readParquet(spark, tmp).coalesce(target)
-        .write.mode("overwrite").parquet(ledgerPath)
-      graft.core.Fs.delete(spark, tmp)
+      Commit.rewrite(spark, ledgerPath, files.map(_.getPath.getName))(
+        Fs.readParquet(spark, files.map(_.getPath.toString): _*)
+          .distinct().coalesce(target).write.parquet(_))
       Some(LogCompactor.CompactionReport(
         new org.apache.hadoop.fs.Path(ledgerPath).getName,
         files.length, target, bytes))

@@ -161,11 +161,9 @@ object VectorIndex {
       path: String,
       targetFileBytes: Long = 128L * 1024 * 1024)
       : Seq[LogCompactor.CompactionReport] = {
-    // complete any crashed purge first — compacting a half-swapped
-    // partition would adopt files a pending marker still governs
-    Tombstones.healPurges(spark, path)
     // ride the same maintenance tick to fold the forget ledger's
-    // accumulated takedown files into one deduped generation
+    // accumulated takedown files into one deduped generation (the
+    // compactor itself first completes any crashed purge)
     Tombstones.compact(spark, path)
     LogCompactor.compact(spark, path, targetFileBytes,
       partitionPrefix = "bucket=")
@@ -201,7 +199,7 @@ object VectorIndex {
     // the purge gate: the plain partitioned scan (partition discovery,
     // DPP and all) when no purge marker exists — the always case — and
     // a pinned exact snapshot while one does (mid-purge or post-crash)
-    val idx = Tombstones.readStore(spark, path)
+    val idx = graft.core.Commit.read(spark, path)
     val probes = queries.select(col("query_id"), col("qv"), col("qn"),
       explode(slice(
         sort_array(centroidTerms(cents, "qv", "qn"), asc = false),

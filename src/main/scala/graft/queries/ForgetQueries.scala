@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 import graft.ops.{Bm25, ClusteredStore, Forget, SignatureStore, Tombstones}
 
 /** Oracle check for the unified takedown orchestrator
@@ -102,7 +102,7 @@ object ForgetQueries {
       val bm25Docs =
         if (!hasPostings) s.range(0).select(col("id").as("doc_id"))
         else Tombstones.mask(s, s"$base/bm25",
-          Tombstones.readStore(s, s"$base/bm25/postings"), "doc_id")
+          Commit.read(s, s"$base/bm25/postings"), "doc_id")
           .select("doc_id").distinct()
       val sigs = leg("sigs", SignatureStore.load(s, s"$base/sigs"))
       primary

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** Checkpointed background-response retrieval (SURVEY §2.4), re-expressed
   * Spark-first:
@@ -152,7 +152,7 @@ final class CheckpointStore(spark: SparkSession, path: String) {
 
   def load(): DataFrame =
     if (graft.core.Fs.nonEmptyDir(spark, path)) {
-      Fs.readParquet(spark, path)
+      Commit.read(spark, path)
     } else {
       Seq.empty[(String, Boolean, String, Long)]
         .toDF("response_id", "processed", "error", "seq")
@@ -170,17 +170,21 @@ final class CheckpointStore(spark: SparkSession, path: String) {
 
   /** A8: compaction — keep the last row per response_id (explicit order by
     * seq desc; the window shuffles on the key, no driver involvement).
+    * One committed rewrite of the files listed now ([[graft.core.Commit]]),
+    * so a batch appended meanwhile survives and [[load]] stays exact
+    * across a crash at any step.
     */
   def compact(): Unit = {
+    Commit.healAndSweep(spark, path)
+    val files = Commit.dataFilesIn(spark, path).map(_.getPath)
     val w = Window.partitionBy("response_id").orderBy(col("seq").desc)
-    val deduped = load()
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    val tmp = path + ".compact"
-    deduped.write.mode("overwrite").parquet(tmp)
-    Fs.readParquet(spark, tmp).write.mode("overwrite").parquet(path)
-    graft.core.Fs.delete(spark, tmp)
+    if (files.nonEmpty)
+      Commit.rewrite(spark, path, files.map(_.getName))(
+        Fs.readParquet(spark, files.map(_.toString): _*)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1)
+          .drop("__rn")
+          .write.parquet(_))
   }
 
   /** A9: summary counts by status. */

@@ -1,9 +1,5 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the one Parquet read idiom: a `spark.read…parquet(…)` without a
@@ -16,47 +12,7 @@ class SchemaLessReadGuardSpec extends AnyFunSuite {
   /** `file:line` sites allowed to read Parquet without a schema. */
   private val allowed = Set.empty[String]
 
-  private val exempt = Paths.get("graft", "core", "Fs.scala")
-
-  /** Source with comments and string literal contents blanked (newlines
-    * kept), so neither can fake or hide a call.
-    */
-  private def codeOnly(src: String): String = {
-    val out = new StringBuilder(src.length)
-    var i = 0
-    def blank(c: Char): Unit = out += (if (c == '\n') '\n' else ' ')
-    while (i < src.length) {
-      if (src.startsWith("//", i)) {
-        while (i < src.length && src(i) != '\n') { blank(src(i)); i += 1 }
-      } else if (src.startsWith("/*", i)) {
-        var depth = 0
-        var done = false
-        while (i < src.length && !done) {
-          if (src.startsWith("/*", i)) { depth += 1; blank(' '); blank(' '); i += 2 }
-          else if (src.startsWith("*/", i)) {
-            depth -= 1; blank(' '); blank(' '); i += 2; done = depth == 0
-          } else { blank(src(i)); i += 1 }
-        }
-      } else if (src.startsWith("\"\"\"", i)) {
-        out ++= "\"\"\""; i += 3
-        while (i < src.length && !src.startsWith("\"\"\"", i)) { blank(src(i)); i += 1 }
-        if (i < src.length) { out ++= "\"\"\""; i += 3 }
-      } else if (src(i) == '"') {
-        out += '"'; i += 1
-        while (i < src.length && src(i) != '"' && src(i) != '\n') {
-          if (src(i) == '\\' && i + 1 < src.length) { blank(' '); i += 1 }
-          blank(src(i)); i += 1
-        }
-        if (i < src.length) { out += src(i); i += 1 }
-      } else if (src(i) == '\'' && i + 2 < src.length && src(i + 2) == '\'') {
-        out ++= "' '"; i += 3 // a char literal such as '(' or '"'
-      } else if (src.startsWith("'\\", i) && i + 3 < src.length &&
-          src(i + 3) == '\'') {
-        out ++= "'  '"; i += 4 // an escaped one such as '\n' or '\''
-      } else { out += src(i); i += 1 }
-    }
-    out.toString
-  }
+  private val exempt = "graft/core/Fs.scala"
 
   private val ParquetCall = """\.parquet\s*\(""".r
   private val Stage = """\.(readStream|writeStream|read|write)\b""".r
@@ -68,7 +24,7 @@ class SchemaLessReadGuardSpec extends AnyFunSuite {
     * neither (a reader held in a variable) cannot be checked and fails.
     */
   def schemaLessReads(src: String): Seq[Int] = {
-    val code = codeOnly(src)
+    val code = SourceScan.codeOnly(src)
     ParquetCall.findAllMatchIn(code).toSeq.flatMap { m =>
       var i = m.start - 1
       var depth = 0
@@ -114,16 +70,10 @@ class SchemaLessReadGuardSpec extends AnyFunSuite {
   }
 
   test("src/main reads Parquet without a schema only through core/Fs") {
-    val root = Paths.get("src", "main", "scala")
-    assert(Files.isDirectory(root), s"run from the project root: $root missing")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 100)
-    val found = files.filterNot(_.endsWith(exempt)).flatMap { f: Path =>
-      val rel = root.relativize(f).toString
-      schemaLessReads(new String(Files.readAllBytes(f), "UTF-8"))
-        .map(line => s"$rel:$line")
-    }.filterNot(allowed)
+    val found = SourceScan.mainSources().filterNot(_._1 == exempt)
+      .flatMap { case (rel, src) =>
+        schemaLessReads(src).map(line => s"$rel:$line")
+      }.filterNot(allowed)
     assert(found.isEmpty, "schema-less Parquet reads (open them with " +
       "Fs.readParquet or declare a schema):\n" + found.mkString("\n"))
   }

@@ -23,6 +23,18 @@ class TaggingSpec extends SparkSpec {
     assert(Tagging.extractCustomId(Nil) === "")
   }
 
+  test("a null tag is skipped, not thrown on: scalar and callback path") {
+    assert(Tagging.extractCustomId(Seq(null, "logger_custom_id:x")) === "x")
+    import spark.implicits._
+    val col = Seq(Tuple1(Seq(null, "logger_custom_id:x"))).toDF("tags")
+      .select(Tagging.extractCustomIdCol($"tags")).as[String].head()
+    assert(col === "x", "the scalar and columnar forms agree")
+    val sink = new graft.batch.CollectingSink
+    new ParquetLogger(sink, graft.core.EventType.All)
+      .onChainEnd("x", "r1", tags = Seq(null, "x"))
+    assert(sink.entries.size === 1, "the event must land, not be lost")
+  }
+
   test("ExtractCustomId expression: eval, codegen, null safety") {
     import spark.implicits._
     val df = Seq(

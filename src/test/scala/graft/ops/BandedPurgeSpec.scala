@@ -176,44 +176,48 @@ class BandedPurgeSpec extends SparkSpec {
       .filter(col("doc_id") === 5L).count()
     val totalBanned = spark.read.parquet(loc)
       .filter(col("doc_id") === 5L).count()
-    val token = "fabricated-crash"
+    // the one commit's names: survivors renamed to their final name
+    // inside `.purge.<token>`, the `_PURGE.<token>.` marker listing the
+    // old files (paths relative to the table location)
+    val token = java.util.UUID.randomUUID.toString
+    val stage = s"$loc/.purge.$token"
     spark.read.parquet(victim.toString).filter(col("doc_id") =!= 5L)
-      .coalesce(1).write.parquet(s"$loc/.purgeb-stage-$token/0")
-    val stagedPart = graft.core.Fs
-      .listDataFiles(spark, s"$loc/.purgeb-stage-$token/0")
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).head
+      .coalesce(1).write.parquet(s"$stage/.w0")
     val suffix = victim.getName.substring(victim.getName.lastIndexOf("_"))
     val finalName = s"part-purged-$token-0$suffix"
+    graft.core.Commit.renameStaged(spark,
+      graft.core.Fs.listDataFiles(spark, s"$stage/.w0").head,
+      s"$stage/$finalName")
     val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$loc/_PURGEB.$token"), false)
-    // a second, delete-only line for a file that no longer exists
-    // (the all-banned shape) must replay as a no-op
-    out.write((s"${victim.getName}\t0/$stagedPart\t$finalName\n" +
-      "already-gone-file.parquet\t\t").getBytes("UTF-8"))
+      new org.apache.hadoop.fs.Path(s"$loc/_PURGE.$token."), false)
+    // a second old file that no longer exists (an all-banned source
+    // file whose deletion already ran) must replay as a no-op
+    out.write(s"${victim.getName}\nalready-gone-file.parquet"
+      .getBytes("UTF-8"))
     out.close()
 
     // the read path heals first: banned rows gone, survivors exact,
-    // marker and stage swept, bucketing intact
+    // marker and stage retired, bucketing intact
     SignatureStore.takedownBanded(spark, table, Seq(5L))
     val pairs = SignatureStore.bucketedNearDups(spark, table,
       docs.filter(col("doc_id") =!= 5L))
     pairs.collect()
     assert(!graft.core.Fs.list(spark, loc)
-      .exists(f => f.getPath.getName.startsWith("_PURGEB.") ||
-        f.getPath.getName.startsWith(".purgeb-")),
+      .exists(f => f.getPath.getName.startsWith("_PURGE.") ||
+        f.getPath.getName.startsWith(".purge.")),
       "heal must retire the marker and the stage dir")
     assert(!graft.core.Fs.exists(spark, victim.toString),
       "heal must finish deleting the source file")
     assert(graft.core.Fs.exists(spark, s"$loc/$finalName"))
     assert(spark.read.parquet(s"$loc/$finalName").count() === expect)
-    // exactly the crashed plan's scope was disposed: the victim file's
+    // exactly the crashed commit's scope was disposed: the victim file's
     // banned rows are gone, other files' banned rows remain (masked by
     // the still-in-force ledger) until their own purge runs
     assert(spark.read.parquet(loc).filter(col("doc_id") === 5L)
       .count() === totalBanned - victimBanned)
     assert(victimBanned > 0)
     // healing is idempotent under a second call
-    SignatureStore.healBandedPurge(spark, table)
+    assert(graft.core.Commit.heal(spark, loc) === 0)
     assert(spark.read.parquet(s"$loc/$finalName").count() === expect)
   }
 
@@ -237,22 +241,55 @@ class BandedPurgeSpec extends SparkSpec {
       val want = rows(raw().filter(col("doc_id") =!= 7L))
       SignatureStore.takedownBanded(spark, table, Seq(7L))
 
-      FalseRenameFs.refuse = _.getName.startsWith("part-purged-")
+      // refuse the move of a survivor into the table location (the
+      // roll-forward), not its rename inside the stage
+      FalseRenameFs.refuse = p => p.getName.startsWith("part-purged-") &&
+        !p.getParent.getName.startsWith(".purge.")
       try intercept[java.io.IOException](
         SignatureStore.purgeBandedPruned(spark, table))
       finally FalseRenameFs.refuse = _ => false
       val names = graft.core.Fs.list(spark, loc).map(_.getPath.getName)
-      assert(names.exists(_.startsWith("_PURGEB.")),
+      assert(names.exists(_.startsWith("_PURGE.")),
         "the committed marker must stay for the heal")
       assert(raw().filter(col("doc_id") === 7L).count() > 0L,
         "no old file may be deleted before every survivor landed")
 
-      SignatureStore.healBandedPurge(spark, table)
+      assert(graft.core.Commit.heal(spark, loc) === 1)
       assert(rows(raw()) === want)
       assert(!graft.core.Fs.list(spark, loc).exists { f =>
         val n = f.getPath.getName
-        n.startsWith("_PURGEB.") || n.startsWith(".purgeb-")
+        n.startsWith("_PURGE.") || n.startsWith(".purge.")
       })
+    } finally spark.catalog.setCurrentDatabase(prevDb)
+  }
+
+  test("a reader never sweeps: a marker-less stage survives " +
+    "bucketedNearDups") {
+    val db = "banded_stage_db"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    spark.sql(s"CREATE DATABASE $db LOCATION '${FalseRenameFs.dir("bst")}'")
+    val prevDb = spark.catalog.currentDatabase
+    spark.catalog.setCurrentDatabase(db)
+    try {
+      val table = "banded_stage"
+      SignatureStore.buildBanded(docs, table, numBuckets = 4)
+      val loc = spark.sessionState.catalog.defaultTablePath(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).toString
+      SignatureStore.takedownBanded(spark, table, Seq(7L))
+      // a purge stopped before its marker — the state a live purge is
+      // in while it stages: survivors written, no commit yet
+      FalseRenameFs.refuse = _.getName.startsWith("_PURGE")
+      try intercept[java.io.IOException](
+        SignatureStore.purgeBandedPruned(spark, table))
+      finally FalseRenameFs.refuse = _ => false
+      def staged() = graft.core.Fs.list(spark, loc)
+        .filter(f => f.isDirectory && f.getPath.getName.startsWith("."))
+        .flatMap(d => graft.core.Fs.listDataFiles(spark, d.getPath.toString))
+      val before = staged()
+      assert(before.nonEmpty, "fixture: the purge staged nothing")
+      SignatureStore.bucketedNearDups(spark, table, docs).collect()
+      assert(staged() === before,
+        "a reader deleted a live purge's staged survivors")
     } finally spark.catalog.setCurrentDatabase(prevDb)
   }
 }

@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** r13 verdict item 6 (uniform heal-on-maintenance) and wrong #2
   * (gate retry against concurrent healers): every store's maintenance
   * entry point must converge a crashed marker-committed purge — no
-  * store may rely on a PROBE to heal — and the [[Tombstones.readStore]]
+  * store may rely on a PROBE to heal — and the [[graft.core.Commit.read]]
   * gate must absorb a healer finishing mid-gate with a bounded retry
   * instead of surfacing a spurious FileNotFound.
   */
@@ -101,17 +101,17 @@ class MaintenanceHealSpec extends SparkSpec {
     fabricateCrashedPurge(path, path, "", "doc_id", "doc_id")
 
     var healed = 0
-    Tombstones.onGateList = () => { healed += Tombstones.healPurges(
+    Commit.onGateList = () => { healed += Commit.heal(
       spark, path) }
     try {
       // first attempt lists the staged files, the "concurrent" healer
       // then moves them; the gate must retry, relist (no marker left),
       // and serve the plain post-heal scan — exactly once each row
-      val served = Tombstones.readStore(spark, path)
+      val served = Commit.read(spark, path)
       assert(served.count() === 38L)
       assert(served.filter(col("doc_id").isin(5L, 15L)).count() === 0L)
       assert(healed === 1, "the injected healer must have run once")
-    } finally Tombstones.onGateList = () => ()
+    } finally Commit.onGateList = () => ()
     assert(!Fs.list(spark, path).map(_.getPath.getName)
       .exists(_.startsWith("_PURGE.")))
   }

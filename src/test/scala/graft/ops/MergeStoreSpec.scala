@@ -97,40 +97,52 @@ class MergeStoreSpec extends SparkSpec {
     assert(state(path) === Map(1L -> (5L, 9.0), 2L -> (2L, 2.0)))
   }
 
-  /** Makes every rename into a `kb=` dir fail, except Spark's own commit
-    * into the temp dir `stage`, so only the swap into the store fails.
+  /** Makes every rename into a live `kb=` dir fail — the roll-forward
+    * of a committed merge or purge — while renames inside its stage
+    * (Spark's own commit of the staged write) still pass.
     */
-  private def refuseSwapIn[A](stage: String)(body: => A): A = {
-    FalseRenameFs.refuse = p =>
-      p.getName.startsWith("kb=") && p.getParent.getName != stage
+  private def refuseRollForward[A](body: => A): A = {
+    FalseRenameFs.refuse = p => p.getParent.getName.startsWith("kb=") &&
+      !p.toString.contains("/.purge.")
     try body finally FalseRenameFs.refuse = _ => false
   }
 
-  private def rows(path: String): Set[(Long, Long, Boolean, Double)] =
+  private def rows(path: String): Seq[(Long, Long, Boolean, Double)] =
     spark.read.parquet(path).collect().map(r => (r.getAs[Long]("k"),
       r.getAs[Long]("seq"), r.getAs[Boolean]("is_delete"),
-      r.getAs[Double]("v"))).toSet
+      r.getAs[Double]("v"))).toSeq.sorted
 
-  test("a merge whose swap-in rename returns false throws and keeps the " +
-    "merged rows under _merge_tmp") {
+  private def debris(path: String): Seq[String] =
+    graft.core.Fs.list(spark, path).map(_.getPath.getName)
+      .filter(n => n.startsWith("_PURGE.") || n.startsWith("."))
+
+  test("a merge whose roll-forward rename fails heals to its merge") {
     val path = FalseRenameFs.dir("msrn") + "/t"
     MergeStore.merge(spark, path,
       changes((1L, 1L, false, 1.0), (2L, 2L, false, 2.0)), "k", 1)
-    intercept[java.io.IOException](refuseSwapIn("_merge_tmp")(
+    intercept[java.io.IOException](refuseRollForward(
       MergeStore.merge(spark, path, changes((1L, 5L, false, 1.5)), "k", 1)))
-    assert(rows(s"$path/_merge_tmp") ===
-      Set((1L, 5L, false, 1.5), (2L, 2L, false, 2.0)))
+    assert(debris(path).exists(_.startsWith("_PURGE.")),
+      "the committed marker stays for the heal")
+    // the gate already serves the committed merge; the next merge call
+    // (an empty batch) rolls it forward with no row lost or doubled
+    assert(state(path) === Map(1L -> (5L, 1.5), 2L -> (2L, 2.0)))
+    MergeStore.merge(spark, path, changes(), "k", 1)
+    assert(rows(path) === Seq((1L, 5L, false, 1.5), (2L, 2L, false, 2.0)))
+    assert(debris(path).isEmpty)
   }
 
-  test("a purge whose swap-in rename returns false throws and keeps the " +
-    "live rows under _purge_tmp") {
+  test("a purge whose roll-forward rename fails heals to its purge") {
     val path = FalseRenameFs.dir("msrn") + "/t"
     MergeStore.merge(spark, path, changes((1L, 1L, false, 1.0),
       (2L, 2L, false, 2.0), (2L, 3L, true, 0.0), (3L, 4L, false, 3.0)),
       "k", 2)
-    intercept[java.io.IOException](refuseSwapIn("_purge_tmp")(
+    intercept[java.io.IOException](refuseRollForward(
       MergeStore.purgeTombstones(spark, path)))
-    assert(rows(s"$path/_purge_tmp") ===
-      Set((1L, 1L, false, 1.0), (3L, 4L, false, 3.0)))
+    assert(debris(path).exists(_.startsWith("_PURGE.")))
+    assert(MergeStore.read(spark, path).count() === 2L)
+    MergeStore.merge(spark, path, changes(), "k", 2)
+    assert(rows(path) === Seq((1L, 1L, false, 1.0), (3L, 4L, false, 3.0)))
+    assert(debris(path).isEmpty)
   }
 }

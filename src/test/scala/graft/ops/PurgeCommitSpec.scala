@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.core.Fs
+import graft.core.{Commit, Fs}
 
 /** The marker-committed physical purge (r12 verdict item 1: the r12
   * purge staged survivors INTO the live partition before deleting the
@@ -13,13 +13,15 @@ import graft.core.Fs
   * partition — PERSISTENTLY until a manual re-run, and rows landed by a
   * concurrent append were silently duplicated into the survivors).
   *
-  * Contract under test: a purge commits per partition via an atomic
-  * `_PURGE.<token>.<part>` marker; the [[Tombstones.readStore]] gate
-  * serves exactly-once rows at EVERY protocol step — staged-not-moved,
-  * the old r12 double-count window (staged moved in, old files still
-  * present), partial old-file deletion — and after a crash at any of
-  * them, with NO manual re-run; concurrent appends commute; healing
-  * converges the directory to a clean state with no phantom partitions.
+  * Contract under test: a purge commits via an atomic `_PURGE.<token>.`
+  * marker (the crash fixtures below write the one-partition
+  * `_PURGE.<token>.<part>` form, which heals through the same code);
+  * the [[graft.core.Commit.read]] gate serves exactly-once rows at EVERY
+  * protocol step — staged-not-moved, the old r12 double-count window
+  * (staged moved in, old files still present), partial old-file
+  * deletion — and after a crash at any of them, with NO manual re-run;
+  * concurrent appends commute; healing converges the directory to a
+  * clean state with no phantom partitions.
   */
 class PurgeCommitSpec extends SparkSpec {
   import spark.implicits._
@@ -80,14 +82,14 @@ class PurgeCommitSpec extends SparkSpec {
     val totalAlive = 400L - banned.size
 
     val (hit, oldNames, token) = stageAndCommitOnly(path, path, banned)
-    val hitAlive = Tombstones.readStore(spark, path)
+    val hitAlive = Commit.read(spark, path)
       .filter(col("bucket") === hit).count()
 
     // STEP 1: committed, survivors still staged. The gate must count
     // each surviving row once and the probe must answer exactly.
-    assert(Tombstones.readStore(spark, path)
+    assert(Commit.read(spark, path)
       .filter(!col("vec_id").isin(banned: _*)).count() === totalAlive)
-    assert(Tombstones.readStore(spark, path)
+    assert(Commit.read(spark, path)
       .filter(col("bucket") === hit)
       .filter(col("vec_id").isin(banned: _*)).count() === 0L,
       "the committed partition's staged generation has already shed " +
@@ -100,7 +102,7 @@ class PurgeCommitSpec extends SparkSpec {
     // every surviving row in the partition.
     Fs.moveDataFiles(spark, s"$path/.purge.$token/bucket=$hit",
       s"$path/bucket=$hit")
-    assert(Tombstones.readStore(spark, path)
+    assert(Commit.read(spark, path)
       .filter(col("bucket") === hit).count() === hitAlive,
       "survivors visible TWICE on disk must still read exactly once")
     assert(probeKey(VectorIndex.probe(spark, path, q, cents, 3, 10)) ===
@@ -113,7 +115,7 @@ class PurgeCommitSpec extends SparkSpec {
 
     // Healing converges the directory; answers unchanged; no marker,
     // no staging debris, no phantom partition, banned rows gone.
-    assert(Tombstones.healPurges(spark, path) === 1)
+    assert(Commit.heal(spark, path) === 1)
     assert(probeKey(VectorIndex.probe(spark, path, q, cents, 3, 10)) ===
       expected)
     val names = Fs.list(spark, path).map(_.getPath.getName)
@@ -126,7 +128,7 @@ class PurgeCommitSpec extends SparkSpec {
       .filter(col("bucket") === hit).count() === 0L)
     // and a plain directory read now agrees with the gate
     assert(spark.read.parquet(path).count() ===
-      Tombstones.readStore(spark, path).count())
+      Commit.read(spark, path).count())
   }
 
   test("a crashed purge self-heals at the next maintenance call — no " +
@@ -161,7 +163,7 @@ class PurgeCommitSpec extends SparkSpec {
     VectorIndex.appendToIvf(fresh, cents, path)
 
     // gate: appended rows exactly once, survivors exactly once
-    val gated = Tombstones.readStore(spark, path)
+    val gated = Commit.read(spark, path)
     assert(gated.filter(col("vec_id") >= 1000L).count() === nFresh)
     assert(gated.filter(!col("vec_id").isin(banned: _*)).count() ===
       300L - banned.size + nFresh)
@@ -290,7 +292,7 @@ class PurgeCommitSpec extends SparkSpec {
 
     assert(key() === expected,
       "load over the crashed flat purge — exactly-once, no re-run")
-    assert(Tombstones.healPurges(spark, path) === 1)
+    assert(Commit.heal(spark, path) === 1)
     assert(key() === expected)
     assert(spark.read.parquet(path)
       .filter(col("doc_id").isin(banned: _*)).count() === 0L,
@@ -329,12 +331,12 @@ class PurgeCommitSpec extends SparkSpec {
       .map(_.getLong(0)).sorted.toSeq
     val before = raw()
     assert(before.contains(3L))
-    FalseRenameFs.refuse = _.getName.startsWith(Tombstones.MarkerPrefix)
+    FalseRenameFs.refuse = _.getName.startsWith(Commit.MarkerPrefix)
     try intercept[java.io.IOException](SignatureStore.purge(spark, path))
     finally FalseRenameFs.refuse = _ => false
     assert(raw() === before, "no data file may move or go")
     assert(!Fs.list(spark, path)
-      .exists(_.getPath.getName.startsWith(Tombstones.MarkerPrefix)))
+      .exists(_.getPath.getName.startsWith(Commit.MarkerPrefix)))
     assert(SignatureStore.purge(spark, path) === 1)
     assert(raw() === before.filterNot(Set(3L, 9L)))
     assert(!Fs.list(spark, path).exists(_.getPath.getName.startsWith(".")),
