@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.core.Fs
 
@@ -130,24 +131,37 @@ object ClusteredStore {
   private def claimPath(dir: String, v: Int) = s"$dir/ledger/claim-v=$v"
   private def hbPath(dir: String, v: Int) = s"$dir/ledger/hb-v=$v"
 
+  /** The `v=N` version numbers under `base` (`ledger/`, `model/` or
+    * `schema/`), ascending: the COMMITTED ones, which carry Spark's
+    * `_SUCCESS` marker, or with `all` every one, crashed writes included.
+    */
+  private def versionsUnder(spark: SparkSession, base: String,
+      all: Boolean = false): Seq[Int] =
+    Fs.list(spark, base).map(_.getPath.getName)
+      .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toInt)
+      .filter(n => all || Fs.exists(spark, s"$base/v=$n/_SUCCESS"))
+      .sorted
+
   /** Highest COMMITTED manifest version (has Spark's `_SUCCESS` marker);
     * None before init. Uncommitted (crashed) version dirs are ignored.
     */
   def currentVersion(spark: SparkSession, dir: String): Option[Int] =
-    Fs.list(spark, ledgerDir(dir))
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("v="))
-      .filter(p => Fs.exists(spark, s"$p/_SUCCESS"))
-      .map(_.getName.stripPrefix("v=").toInt)
-      .sorted.lastOption
+    versionsUnder(spark, ledgerDir(dir)).lastOption
+
+  /** The committed version `op` works on: `asOf`, else the current one;
+    * throws before init.
+    */
+  private def requireVersion(spark: SparkSession, dir: String, op: String,
+      asOf: Option[Int] = None): Int =
+    asOf.orElse(currentVersion(spark, dir)).getOrElse(
+      throw new IllegalStateException(
+        s"$op before init: no committed manifest under $dir"))
 
   /** The manifest snapshot at `asOf` (default: current). */
   def manifest(spark: SparkSession, dir: String,
-      asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $dir"))
-    Fs.readParquet(spark, versionDir(dir, v))
-  }
+      asOf: Option[Int] = None): DataFrame =
+    Fs.readParquet(spark,
+      versionDir(dir, requireVersion(spark, dir, "read", asOf)))
 
   // -------------------------------------------------------------------
   // Claim protocol
@@ -237,11 +251,8 @@ object ClusteredStore {
     *     maintainer would be broken under `staleClaimMs`. When
     *     `setTimes` fails, liveness moves to a heartbeat SIDECAR
     *     (`hb-v=N`: token + millis); [[breakStaleClaim]] reads
-    *     `max(claim mtime, sidecar millis)` with the sidecar honored
-    *     only when its token matches the claim's. Sidecar rewrites are
-    *     not atomic — a torn read just falls back to the claim mtime,
-    *     which errs toward "staler", i.e. toward the verify-then-break
-    *     path that the commit-point token check already guards.
+    *     `max(claim mtime, sidecar time)` with the sidecar honored
+    *     only when its token matches the claim's (see [[livenessTime]]).
     *
     * Maintainers that opted into takeover (`staleClaimMs` finite) keep
     * their lease fresh THROUGHOUT staging via [[withLease]]'s keeper
@@ -275,9 +286,13 @@ object ClusteredStore {
   }
 
   /** Best liveness evidence for the claim on `v`: its mtime, advanced
-    * by a heartbeat sidecar whose token matches (see [[heartbeat]]).
-    * Torn/mismatched sidecars are ignored — staler reads are the safe
-    * direction.
+    * by a heartbeat sidecar written under the claim's token (see
+    * [[heartbeat]]) to the later of the sidecar's own mtime and the
+    * millis it records. A sidecar rewrite is not atomic, so a read can
+    * catch it truncated — empty, or cut inside the token or the millis;
+    * such a torn sidecar still counts by its mtime, which the rewrite
+    * just advanced (falling back to the claim's frozen mtime would break
+    * a live lease). A sidecar under another token is ignored.
     */
   private def livenessTime(spark: SparkSession, dir: String, v: Int,
       claimTok: String, claimMtime: Long): Long = {
@@ -287,14 +302,16 @@ object ClusteredStore {
         val p = new org.apache.hadoop.fs.Path(hbPath(dir, v))
         if (!fs.exists(p)) None
         else {
+          val mtime = fs.getFileStatus(p).getModificationTime
           val in = fs.open(p)
           val txt =
             try scala.io.Source.fromInputStream(in, "UTF-8").mkString
             finally in.close()
-          val lines = txt.split('\n')
-          if (lines.length >= 2 && lines(0) == claimTok)
-            scala.util.Try(lines(1).trim.toLong).toOption
-          else None
+          val head = claimTok + "\n"
+          if (head.startsWith(txt)) Some(mtime) // torn inside the token
+          else if (!txt.startsWith(head)) None // another holder's
+          else Some(math.max(mtime, scala.util.Try(
+            txt.stripPrefix(head).trim.toLong).getOrElse(Long.MinValue)))
         }
       } catch { case _: java.io.IOException => None }
     math.max(claimMtime, hb.getOrElse(Long.MinValue))
@@ -371,7 +388,9 @@ object ClusteredStore {
             val got =
               try scala.io.Source.fromInputStream(in, "UTF-8").mkString
               finally in.close()
-            if (got != tok) { fs.rename(aside, src); false } // changed hands
+            if (got != tok) { // changed hands: restore, or fail loudly
+              Fs.renameOrThrow(fs, aside, src); false
+            }
             else {
               if (Fs.exists(spark, versionDir(dir, v)))
                 Fs.delete(spark, versionDir(dir, v))
@@ -554,15 +573,9 @@ object ClusteredStore {
     */
   private def loadModel(
       spark: SparkSession, dir: String, asOf: Int): Model = {
-    val mv = Fs.list(spark, modelDir(dir))
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("v=") &&
-        Fs.exists(spark, s"$p/_SUCCESS"))
-      .map(_.getName.stripPrefix("v=").toInt)
-      .filter(_ <= asOf)
-      .sorted.lastOption.getOrElse(
-        throw new IllegalStateException(
-          s"no committed model <= v$asOf under $dir"))
+    val mv = versionsUnder(spark, modelDir(dir)).filter(_ <= asOf)
+      .lastOption.getOrElse(throw new IllegalStateException(
+        s"no committed model <= v$asOf under $dir"))
     val m = Fs.readParquet(spark, modelVersionDir(dir, mv)).collect()
     val cluster = m.filter(_.getAs[Int]("pos") >= 0)
     val curve = cluster.head.getAs[String]("curve")
@@ -606,8 +619,7 @@ object ClusteredStore {
     */
   private val VersionConstCols = Seq("wm_batch", "clamped_total")
 
-  private def ledgerRows(
-      df: DataFrame, m: Model, key: Column, batchId: Long): DataFrame = {
+  private def ledgerRows(df: DataFrame, m: Model, batchId: Long): DataFrame = {
     val aggs = m.cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
       max(col(c)).as(s"max_$c"))) ++
       Seq(count(lit(1)).as("n_rows"), min(col("_z")).as("z_lo"),
@@ -617,7 +629,7 @@ object ClusteredStore {
         // readPoint probes with Long keys — int key columns just work
         expr(s"bloom_agg(CAST($c AS BIGINT), $mBits, $k)").as(s"bloom_$c")
       }
-    df.withColumn("_z", key)
+    df.withColumn("_z", curveKey(m))
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("batch_id", lit(batchId))
@@ -664,6 +676,40 @@ object ClusteredStore {
       .parquet(versionDir(dir, claim.v))
   }
 
+  /** Stage `df` into `data/` as `parts` curve-sorted, range-split files
+    * stamped with `anchor`'s field ids — every maintainer's rewrite.
+    * Returns the staged paths: the commit's lineage (rule 1 above).
+    */
+  private def stageSorted(dir: String, df: DataFrame, key: Column,
+      parts: Int, anchor: Option[StructType]): Seq[String] =
+    Fs.stagedAppend(
+      withIds(df.withColumn("_z", key)
+        .repartitionByRange(parts, col("_z"))
+        .sortWithinPartitions("_z")
+        .select(df.columns.map(col).toSeq: _*), anchor),
+      Nil, dataDir(dir))
+
+  /** Output files for `n` rows at `target` rows per file (at least 1). */
+  private def filesFor(n: Long, target: Long): Int =
+    math.max(1L, (n + target - 1) / target).toInt
+
+  /** Commit version `claim.v`: the `untouched` manifest rows plus one
+    * ledger row per file in `newFiles` (under model `m`, read only when
+    * there are new files), stamped with the version constants — every
+    * maintainer's tail.
+    */
+  private def commitNext(spark: SparkSession, dir: String, claim: Claim,
+      untouched: DataFrame, newFiles: Seq[String], m: => Model,
+      batchId: Long, wm: Long, clamped: Long): Unit = {
+    val next =
+      if (newFiles.isEmpty) untouched
+      else untouched.unionByName(
+        ledgerRows(Fs.readParquet(spark, newFiles: _*), m, batchId),
+        allowMissingColumns = true)
+    heartbeat(spark, claim, dir)
+    commitManifest(stamp(next, wm, clamped), dir, claim)
+  }
+
   // -------------------------------------------------------------------
   // Maintenance operations
   // -------------------------------------------------------------------
@@ -708,7 +754,6 @@ object ClusteredStore {
     val bloom = bloomCols.map(c => (c, bloomBits, bloomK))
     writeModel(spark, dir, 1, cols, curve, lo, hi, bloom)
     val m = Model(cols, curve, lo, hi, bloom)
-    val key = curveKey(m)
     // the store OWNS its schema, versioned and marker-gated — and every
     // field gets a STABLE PARQUET FIELD ID (its init ordinal), stamped
     // into every data file this store ever writes, so a later
@@ -716,19 +761,19 @@ object ClusteredStore {
     // reads honor across pre- and post-evolution files. Vacuum keeps
     // the newest committed anchor, so typed empty frames survive even
     // after every data file of an empty store is legally reclaimed.
-    val anchorSt = org.apache.spark.sql.types.StructType(
+    val anchorSt = StructType(
       df.schema.fields.zipWithIndex.map { case (f, i) =>
         withFieldId(f, i + 1L)
       })
     ensureFieldIdConfs(spark)
-    withIds(df.withColumn("_z", key)
+    withIds(df.withColumn("_z", curveKey(m))
         .repartitionByRange(nFiles, col("_z"))
         .sortWithinPartitions("_z")
         .select(df.columns.map(col).toSeq: _*), Some(anchorSt))
       .write.mode("overwrite").parquet(dataDir(dir))
     writeAnchor(spark, dir, anchorSt)
     commitManifest(
-      stamp(ledgerRows(Fs.readParquet(spark, dataDir(dir)), m, key,
+      stamp(ledgerRows(Fs.readParquet(spark, dataDir(dir)), m,
         batchId = -1L), wm = -1L, clamped = 0L),
       dir, claim)
   }
@@ -758,8 +803,7 @@ object ClusteredStore {
       mergeSchema: Boolean = false,
       replaceKeys: Option[String] = None): AppendStats = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"append before init under $dir"))
+    val v = requireVersion(spark, dir, "append")
 
     // Schema contract BEFORE the claim: the rewrite stages
     // `select(incoming's columns)` over the touched files, so a batch
@@ -820,9 +864,7 @@ object ClusteredStore {
             .filter(_._2 != kc).map(_._1).toSet
           val mayContain =
             if (conflictNames.isEmpty || ks.isEmpty) Set.empty[String]
-            else if (cur.columns.contains(s"bloom_$kc"))
-              pruneFilesPoint(spark, dir, kc, ks, Some(v)).toSet
-            else allFiles.toSet
+            else mayHoldKeys(spark, dir, cur, v, kc, ks, allFiles).toSet
           (ks, allFiles.filter(f =>
             conflictNames.contains(baseName(f)) && mayContain.contains(f)))
       }
@@ -849,10 +891,10 @@ object ClusteredStore {
             if (maxId > 0) withFieldId(f, maxId + 1 + i) else f
           }
         writeAnchor(spark, dir,
-          org.apache.spark.sql.types.StructType(st.fields ++ addedFields))
+          StructType(st.fields ++ addedFields))
       case _ => ()
     }
-    val anchorNow = anchorSchema(spark, dir)
+    val anchor = anchorSchema(spark, dir)
     ensureFieldIdConfs(spark)
     val inc = aligned.withColumn("_z", key).localCheckpoint()
 
@@ -904,13 +946,7 @@ object ClusteredStore {
 
     def staged(df: DataFrame, n: Long): Seq[String] =
       if (n == 0) Nil
-      else Fs.stagedAppend(
-        withIds(df.withColumn("_z", key)
-          .repartitionByRange(math.max(1L, (n + target - 1) / target).toInt,
-            col("_z"))
-          .sortWithinPartitions("_z")
-          .select(outCols: _*), anchorNow),
-        Nil, dataDir(dir))
+      else stageSorted(dir, df, key, filesFor(n, target), anchor)
 
     val base0 =
       if (touchedFiles.isEmpty)
@@ -939,45 +975,22 @@ object ClusteredStore {
     val newFiles =
       staged(merged, if (touchedFiles.isEmpty) 0L else merged.count()) ++
         staged(freshRows.select(outCols: _*), freshRows.count())
-    heartbeat(spark, claim, dir) // staging was the long part
 
     val untouched0 = cur.filter(!col("file").isin(touchedFiles.toSeq: _*))
     // upsert: mask the replaced keys' LIVE rows in untouched files —
     // same Bloom-bounded scan + manifest mask rows as deleteKeysDV
     val (untouched, maskedReplaced) = replaceKeys match {
       case Some(kc) if upsertKeySet.nonEmpty =>
-        val untouchedFiles = led.map(_.getAs[String]("file"))
-          .filterNot(touchedFiles).toSeq
-        val candidates =
-          if (cur.columns.contains(s"bloom_$kc"))
-            pruneFilesPoint(spark, dir, kc, upsertKeySet, Some(v))
-              .filterNot(touchedFiles)
-          else untouchedFiles
-        if (candidates.isEmpty) (untouched0, 0L)
-        else {
-          val hits = filterKeys(
-              readFilesDv(spark, dir, cur, candidates)
-                .withColumn("_f",
-                  element_at(split(input_file_name(), "/"), -1)),
-              kc, upsertKeySet, negate = false)
-            .groupBy(col("_f"))
-            .agg(count(lit(1)).as("n"),
-              collect_set(col(kc).cast("long")).as("ks"))
-            .collect()
-            .map(r => (r.getString(0), r.getAs[Long]("n"),
-              r.getSeq[Long](2))).toSeq
-          (maskManifest(spark, dir, untouched0, kc, hits),
-            hits.map(_._2).sum)
-        }
+        val candidates = mayHoldKeys(spark, dir, cur, v, kc, upsertKeySet,
+          led.map(_.getAs[String]("file")).toSeq).filterNot(touchedFiles)
+        val hits =
+          if (candidates.isEmpty) Nil
+          else keyHits(spark, dir, cur, candidates, kc, upsertKeySet)
+        (maskManifest(spark, dir, untouched0, kc, hits), hits.map(_._2).sum)
       case _ => (untouched0, 0L)
     }
-    val fresh =
-      if (newFiles.isEmpty) untouched
-      else untouched.unionByName(
-        ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key, batchId),
-        allowMissingColumns = true)
-    commitManifest(
-      stamp(fresh, wm, priorClamped + clamped), dir, claim)
+    commitNext(spark, dir, claim, untouched, newFiles, m, batchId, wm,
+      priorClamped + clamped)
 
     AppendStats(rewritten = touchedFiles.size, created = newFiles.size,
       untouched = led.length - touchedFiles.size, clamped = clamped,
@@ -1004,6 +1017,31 @@ object ClusteredStore {
     append(spark, dir, batch, targetRowsPerFile, batchId = -1L,
       staleClaimMs, mergeSchema = false, replaceKeys = Some(keyCol))
 
+  /** One manifest file's size: physical rows and the rows its deletion
+    * vector masks.
+    */
+  private final case class FileSize(file: String, rows: Long, masked: Long) {
+    def live: Long = rows - masked
+  }
+
+  private def fileSizes(man: DataFrame): Seq[FileSize] =
+    ensureDvCols(man).select(col("file"), col("n_rows"),
+        coalesce(col("dv_rows"), lit(0L))).collect()
+      .map(r => FileSize(r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+
+  private def meanLive(files: Seq[FileSize]): Long =
+    math.max(1L, files.map(_.live).sum / math.max(1, files.length))
+
+  /** The files [[compact]] folds: LIVE rows (physical minus masked) under
+    * `floor`, plus mostly-dead files (the mask covers at least half the
+    * physical rows) whatever their size. A file whose deletion vector
+    * hides half its rows IS a small file in every way that matters, and
+    * folding it is where merge-on-read masks get physically disposed.
+    * [[maintain]] counts the same files to decide whether to compact.
+    */
+  private def foldTargets(files: Seq[FileSize], floor: Long): Seq[FileSize] =
+    files.filter(f => f.live < floor || f.masked > 0 && f.masked * 2 >= f.rows)
+
   /** Small-file compaction: merge every manifest file under
     * `minRowsPerFile` (default: half the store's mean file size) into
     * full-size, curve-sorted files, committed as a new manifest version
@@ -1021,35 +1059,20 @@ object ClusteredStore {
       minRowsPerFile: Long = 0L,
       staleClaimMs: Long = Long.MaxValue): AppendStats = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"compact before init under $dir"))
+    val v = requireVersion(spark, dir, "compact")
     val cur = manifest(spark, dir, Some(v))
-    // LIVE rows (physical minus DV-masked) drive every sizing decision:
-    // a file whose deletion vector hides half its rows IS a small file
-    // in every way that matters, and folding it here is exactly where
-    // merge-on-read masks get physically disposed
-    val led = ensureDvCols(cur).select(col("file"), col("n_rows"),
-        coalesce(col("dv_rows"), lit(0L)).as("dv_rows")).collect()
-    def live(r: org.apache.spark.sql.Row): Long =
-      r.getAs[Long]("n_rows") - r.getAs[Long]("dv_rows")
+    val led = fileSizes(cur)
     val (priorWm, priorClamped) = versionConsts(cur)
-    val mean = math.max(1L,
-      led.map(live).sum / math.max(1, led.length))
+    val mean = meanLive(led)
     val floor = if (minRowsPerFile > 0) minRowsPerFile else mean / 2
-    // fold targets: live-small files, plus mostly-dead files (mask
-    // covers >= half the physical rows) regardless of size
-    val smalls = led.filter(r => live(r) < floor ||
-        r.getAs[Long]("dv_rows") * 2 >= r.getAs[Long]("n_rows") &&
-          r.getAs[Long]("dv_rows") > 0)
-      .map(_.getAs[String]("file"))
+    val smalls = foldTargets(led, floor).map(_.file)
     if (smalls.length < 2)
       return AppendStats(0, 0, led.length, 0L, version = v)
     val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
     withLease(spark, dir, claim, staleClaimMs) {
     val m = loadModel(spark, dir, v)
-    val key = curveKey(m)
 
-    val rows = readFilesDv(spark, dir, cur, smalls.toSeq)
+    val rows = readFilesDv(spark, dir, cur, smalls)
     val n = rows.count()
     // size outputs at the HEALTHY files' mean (the overall mean is
     // dragged down by the very files being merged) but never below 2×
@@ -1062,30 +1085,15 @@ object ClusteredStore {
     // bounded by the rows ingested since the last one. Also always
     // emit strictly fewer files than were merged — compaction that
     // breaks even on file count is not compaction.
-    val healthy = led.filter(live(_) >= floor).map(live)
+    val healthy = led.map(_.live).filter(_ >= floor)
     val target = math.max(
       if (healthy.nonEmpty) healthy.sum / healthy.length else mean,
       2 * floor)
-    val nNew = math.min(smalls.length - 1,
-      math.max(1L, (n + target - 1) / target).toInt)
-    val dropCols = rows.columns.toSeq
-    val newFiles = Fs.stagedAppend(
-      withIds(rows.withColumn("_z", key)
-        .repartitionByRange(nNew, col("_z"))
-        .sortWithinPartitions("_z")
-        .select(dropCols.map(col): _*), anchorSchema(spark, dir)),
-      Nil, dataDir(dir))
-
-    val untouched = cur.filter(!col("file").isin(smalls.toSeq: _*))
-    val fresh =
-      if (newFiles.isEmpty) untouched
-      else untouched.unionByName(
-        ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
-          batchId = -1L),
-        allowMissingColumns = true)
-    heartbeat(spark, claim, dir)
-    commitManifest(
-      stamp(fresh, priorWm, priorClamped), dir, claim)
+    val nNew = math.min(smalls.length - 1, filesFor(n, target))
+    val newFiles = stageSorted(dir, rows, curveKey(m), nNew,
+      anchorSchema(spark, dir))
+    commitNext(spark, dir, claim, cur.filter(!col("file").isin(smalls: _*)),
+      newFiles, m, batchId = -1L, priorWm, priorClamped)
     AppendStats(rewritten = smalls.length, created = newFiles.size,
       untouched = led.length - smalls.length, clamped = 0L,
       version = v + 1)
@@ -1112,8 +1120,7 @@ object ClusteredStore {
       curve: Option[String] = None,
       staleClaimMs: Long = Long.MaxValue): AppendStats = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"recluster before init under $dir"))
+    val v = requireVersion(spark, dir, "recluster")
     val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
     withLease(spark, dir, claim, staleClaimMs) {
     val old = loadModel(spark, dir, v)
@@ -1124,23 +1131,13 @@ object ClusteredStore {
     val (lo, hi) = bounds(snapshot, old.cols)
     val m = Model(old.cols, curve.getOrElse(old.curve), lo, hi, old.bloom)
     writeModel(spark, dir, v + 1, m.cols, m.curve, lo, hi, m.bloom)
-    val key = curveKey(m)
-    val newFiles = Fs.stagedAppend(
-      withIds(snapshot.withColumn("_z", key)
-        .repartitionByRange(nFiles, col("_z"))
-        .sortWithinPartitions("_z")
-        .select(snapshot.columns.map(col).toSeq: _*),
-        anchorSchema(spark, dir)),
-      Nil, dataDir(dir))
-    heartbeat(spark, claim, dir)
-    // an EMPTY snapshot stages no files (legal: recluster of a store
-    // whose rows were all in vacuumed versions) — commit a typed
-    // zero-row manifest instead of reading zero parquet paths
-    val rows =
-      if (newFiles.isEmpty) cur.limit(0)
-      else ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
-        batchId = -1L)
-    commitManifest(stamp(rows, priorWm, clamped = 0L), dir, claim)
+    val newFiles = stageSorted(dir, snapshot, curveKey(m), nFiles,
+      anchorSchema(spark, dir))
+    // every file is new and unmasked; an EMPTY snapshot stages none
+    // (legal: recluster of a store whose rows were all in vacuumed
+    // versions) and commits a typed zero-row manifest
+    commitNext(spark, dir, claim, cur.limit(0).drop(DvCols: _*), newFiles,
+      m, batchId = -1L, priorWm, clamped = 0L)
     AppendStats(rewritten = oldFileCount,
       created = newFiles.size, untouched = 0, clamped = 0L,
       version = v + 1)
@@ -1187,22 +1184,38 @@ object ClusteredStore {
       pruneBoxes: Seq[StatsLedger.Box] = Nil,
       keyIn: Option[(String, Seq[Long])] = None,
       targetRowsPerFile: Long = 0L,
-      staleClaimMs: Long = Long.MaxValue): DeleteStats = {
+      staleClaimMs: Long = Long.MaxValue): DeleteStats =
+    deleteRewrite(spark, dir, targetRowsPerFile, staleClaimMs)(
+      pick = (v, cur, all) => {
+        val boxSurvivors =
+          if (pruneBoxes.isEmpty) all
+          else StatsLedger.pruneFiles(spark, versionDir(dir, v), pruneBoxes)
+        // no sketch for the key → no Bloom pruning
+        val bloomSurvivors = keyIn.fold(boxSurvivors) { case (kc, ks) =>
+          mayHoldKeys(spark, dir, cur, v, kc, ks, boxSurvivors) }
+        boxSurvivors.intersect(bloomSurvivors).distinct
+      },
+      hit = _.filter(predicate),
+      // survivors = NOT deleted: rows where the predicate is FALSE or
+      // NULL — a bare !predicate filter would silently drop null-eval
+      // rows too (deleted + counted nowhere), the classic tri-state trap
+      keep = _.filter(!coalesce(predicate, lit(false))))
+
+  /** The copy-on-write delete behind [[delete]] and [[deleteKeysFrame]]:
+    * `pick` narrows the current version's files (`v`, its manifest, the
+    * file list) to candidates; `hit` keeps a candidate's matching rows,
+    * `keep` a hit file's survivors.
+    */
+  private def deleteRewrite(spark: SparkSession, dir: String,
+      targetRowsPerFile: Long, staleClaimMs: Long)(
+      pick: (Int, DataFrame, Seq[String]) => Seq[String],
+      hit: DataFrame => DataFrame,
+      keep: DataFrame => DataFrame): DeleteStats = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"delete before init under $dir"))
+    val v = requireVersion(spark, dir, "delete")
     val cur = manifest(spark, dir, Some(v))
     val all = cur.select("file", "n_rows").collect()
-    val boxSurvivors =
-      if (pruneBoxes.isEmpty) all.map(_.getString(0)).toSet
-      else StatsLedger.pruneFiles(spark, versionDir(dir, v), pruneBoxes)
-        .toSet
-    val bloomSurvivors = keyIn match {
-      case Some((kc, ks)) if cur.columns.contains(s"bloom_$kc") =>
-        pruneFilesPoint(spark, dir, kc, ks, Some(v)).toSet
-      case _ => boxSurvivors // no sketch for this key → no Bloom pruning
-    }
-    val candidates = boxSurvivors.intersect(bloomSurvivors).toSeq.sorted
+    val candidates = pick(v, cur, all.map(_.getString(0)).toSeq).sorted
     if (candidates.isEmpty)
       return DeleteStats(0, all.length, 0L, v)
 
@@ -1210,11 +1223,11 @@ object ClusteredStore {
     // real hit are rewritten; a pruning false-positive costs one scan,
     // never a rewrite. Deletion vectors apply first: an already-masked
     // row can neither re-count as deleted nor force a rewrite
-    val hitRows = readFilesDv(spark, dir, cur, candidates)
-      .withColumn("_f", input_file_name())
-      .filter(predicate)
-      .groupBy(col("_f")).agg(count(lit(1)).as("n"))
-      .collect()
+    val hitRows =
+      hit(readFilesDv(spark, dir, cur, candidates)
+          .withColumn("_f", input_file_name()))
+        .groupBy(col("_f")).agg(count(lit(1)).as("n"))
+        .collect()
     val hits = hitRows.map(r => normPath(r.getString(0))).toSet
     val nDeleted = hitRows.map(_.getLong(1)).sum
     if (hits.isEmpty)
@@ -1223,39 +1236,19 @@ object ClusteredStore {
     val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
     withLease(spark, dir, claim, staleClaimMs) {
     val m = loadModel(spark, dir, v)
-    val key = curveKey(m)
     val (priorWm, priorClamped) = versionConsts(cur)
     val hitFiles = candidates.filter(f => hits.contains(normPath(f)))
-    // survivors = NOT deleted: rows where the predicate is FALSE or
-    // NULL — a bare !predicate filter would silently drop null-eval
-    // rows too (deleted + counted nowhere), the classic tri-state trap
-    val survivors = readFilesDv(spark, dir, cur, hitFiles)
-      .filter(!coalesce(predicate, lit(false)))
-    val outCols = survivors.columns.map(col).toSeq
+    val survivors = keep(readFilesDv(spark, dir, cur, hitFiles))
     val n = survivors.count()
     val target =
       if (targetRowsPerFile > 0) targetRowsPerFile
-      else math.max(1L, all.map(_.getAs[Long]("n_rows")).sum /
-        math.max(1, all.length))
+      else math.max(1L, all.map(_.getLong(1)).sum / math.max(1, all.length))
     val newFiles =
       if (n == 0) Nil
-      else Fs.stagedAppend(
-        withIds(survivors.withColumn("_z", key)
-          .repartitionByRange(
-            math.max(1L, (n + target - 1) / target).toInt, col("_z"))
-          .sortWithinPartitions("_z")
-          .select(outCols: _*), anchorSchema(spark, dir)),
-        Nil, dataDir(dir))
-    heartbeat(spark, claim, dir)
-
-    val untouched = cur.filter(!col("file").isin(hitFiles: _*))
-    val fresh =
-      if (newFiles.isEmpty) untouched
-      else untouched.unionByName(
-        ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
-          batchId = -1L),
-        allowMissingColumns = true)
-    commitManifest(stamp(fresh, priorWm, priorClamped), dir, claim)
+      else stageSorted(dir, survivors, curveKey(m), filesFor(n, target),
+        anchorSchema(spark, dir))
+    commitNext(spark, dir, claim, cur.filter(!col("file").isin(hitFiles: _*)),
+      newFiles, m, batchId = -1L, priorWm, priorClamped)
     DeleteStats(rewritten = hitFiles.length,
       untouched = all.length - hitFiles.length,
       deleted = nDeleted, version = v + 1)
@@ -1292,63 +1285,14 @@ object ClusteredStore {
   def deleteKeysFrame(spark: SparkSession, dir: String, keyCol: String,
       keys: DataFrame, targetRowsPerFile: Long = 0L,
       staleClaimMs: Long = Long.MaxValue): DeleteStats = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"delete before init under $dir"))
-    val cur = manifest(spark, dir, Some(v))
-    val all = cur.select("file", "n_rows").collect()
     val k = keys.select(col(keys.columns.head).cast("long")
       .as("_fg_del_key")).na.drop().distinct().persist()
-    try {
-      val candidates = all.map(_.getString(0)).toSeq.sorted
-      val hitRows = readFilesDv(spark, dir, cur, candidates)
-        .withColumn("_f", input_file_name())
-        .join(k, col(keyCol) === col("_fg_del_key"), "left_semi")
-        .groupBy(col("_f")).agg(count(lit(1)).as("n"))
-        .collect()
-      val hits = hitRows.map(r => normPath(r.getString(0))).toSet
-      val nDeleted = hitRows.map(_.getLong(1)).sum
-      if (hits.isEmpty)
-        return DeleteStats(0, all.length, 0L, v)
-
-      val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
-      withLease(spark, dir, claim, staleClaimMs) {
-        val m = loadModel(spark, dir, v)
-        val key = curveKey(m)
-        val (priorWm, priorClamped) = versionConsts(cur)
-        val hitFiles = candidates.filter(f => hits.contains(normPath(f)))
-        val survivors = readFilesDv(spark, dir, cur, hitFiles)
-          .join(k, col(keyCol) === col("_fg_del_key"), "left_anti")
-        val outCols = survivors.columns.map(col).toSeq
-        val n = survivors.count()
-        val target =
-          if (targetRowsPerFile > 0) targetRowsPerFile
-          else math.max(1L, all.map(_.getAs[Long]("n_rows")).sum /
-            math.max(1, all.length))
-        val newFiles =
-          if (n == 0) Nil
-          else Fs.stagedAppend(
-            withIds(survivors.withColumn("_z", key)
-              .repartitionByRange(
-                math.max(1L, (n + target - 1) / target).toInt, col("_z"))
-              .sortWithinPartitions("_z")
-              .select(outCols: _*), anchorSchema(spark, dir)),
-            Nil, dataDir(dir))
-        heartbeat(spark, claim, dir)
-
-        val untouched = cur.filter(!col("file").isin(hitFiles: _*))
-        val fresh =
-          if (newFiles.isEmpty) untouched
-          else untouched.unionByName(
-            ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
-              batchId = -1L),
-            allowMissingColumns = true)
-        commitManifest(stamp(fresh, priorWm, priorClamped), dir, claim)
-        DeleteStats(rewritten = hitFiles.length,
-          untouched = all.length - hitFiles.length,
-          deleted = nDeleted, version = v + 1)
-      } // withLease
-    } finally { k.unpersist(); () }
+    def byKey(how: String)(df: DataFrame) =
+      df.join(k, col(keyCol) === col("_fg_del_key"), how)
+    try deleteRewrite(spark, dir, targetRowsPerFile, staleClaimMs)(
+      pick = (_, _, all) => all,
+      hit = byKey("left_semi"), keep = byKey("left_anti"))
+    finally { k.unpersist(); () }
   }
 
   // -------------------------------------------------------------------
@@ -1554,6 +1498,35 @@ object ClusteredStore {
         if (negate) "left_anti" else "left_semi")
     }
 
+  /** Files of manifest `cur` (version `v`) that may hold any of `keys`:
+    * the Bloom prune where the manifest sketches `keyCol`, else `all`.
+    */
+  private def mayHoldKeys(spark: SparkSession, dir: String, cur: DataFrame,
+      v: Int, keyCol: String, keys: Seq[Long], all: Seq[String])
+      : Seq[String] =
+    if (cur.columns.contains(s"bloom_$keyCol"))
+      pruneFilesPoint(spark, dir, keyCol, keys, Some(v))
+    else all
+
+  /** (file basename, live hit count, hit keys) for every file of `files`
+    * holding any of `keys` — one column-pruned scan, existing masks
+    * applied first so an already-masked key never double-counts. The
+    * mask input of [[deleteKeysDV]] and of [[append]]'s upsert leg.
+    */
+  private def keyHits(spark: SparkSession, dir: String, man: DataFrame,
+      files: Seq[String], keyCol: String, keys: Seq[Long])
+      : Seq[(String, Long, Seq[Long])] =
+    filterKeys(
+        readFilesDv(spark, dir, man, files)
+          .withColumn("_f", element_at(split(input_file_name(), "/"), -1)),
+        keyCol, keys, negate = false)
+      .groupBy(col("_f"))
+      .agg(count(lit(1)).as("n"),
+        collect_set(col(keyCol).cast("long")).as("ks"))
+      .collect()
+      .map(r => (r.getString(0), r.getAs[Long]("n"), r.getSeq[Long](2)))
+      .toSeq
+
   /** Merge-on-read point takedown — [[deleteKeys]] without the
     * rewrite: rows whose `keyCol` is in `keys` are masked by a per-file
     * deletion vector committed IN THE MANIFEST ROW, and ZERO data files
@@ -1582,29 +1555,13 @@ object ClusteredStore {
   def deleteKeysDV(spark: SparkSession, dir: String, keyCol: String,
       keys: Seq[Long], staleClaimMs: Long = Long.MaxValue): DeleteStats = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"delete before init under $dir"))
+    val v = requireVersion(spark, dir, "delete")
     val cur = manifest(spark, dir, Some(v))
-    val all = cur.select("file").collect().map(_.getString(0))
-    val candidates =
-      if (cur.columns.contains(s"bloom_$keyCol"))
-        pruneFilesPoint(spark, dir, keyCol, keys, Some(v))
-      else all.toSeq
+    val all = cur.select("file").collect().map(_.getString(0)).toSeq
+    val candidates = mayHoldKeys(spark, dir, cur, v, keyCol, keys, all)
     if (candidates.isEmpty) return DeleteStats(0, all.length, 0L, v)
 
-    // column-pruned LIVE hit count + exact per-file key sets (existing
-    // masks applied first: an already-masked key must not double-count)
-    val hits = filterKeys(
-        readFilesDv(spark, dir, cur, candidates)
-          .withColumn("_f",
-            element_at(split(input_file_name(), "/"), -1)),
-        keyCol, keys, negate = false)
-      .groupBy(col("_f"))
-      .agg(count(lit(1)).as("n"),
-        collect_set(col(keyCol).cast("long")).as("ks"))
-      .collect()
-      .map(r => (r.getString(0), r.getAs[Long]("n"), r.getSeq[Long](2)))
-      .toSeq
+    val hits = keyHits(spark, dir, cur, candidates, keyCol, keys)
     if (hits.isEmpty) return DeleteStats(0, all.length, 0L, v)
     val nDeleted = hits.map(_._2).sum
 
@@ -1627,39 +1584,23 @@ object ClusteredStore {
     val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
     withLease(spark, dir, claim, staleClaimMs) {
       val (priorWm, priorClamped) = versionConsts(cur)
-      val (masked, rewritten) =
-        if (foldFiles.isEmpty) (cur, Seq.empty[String])
+      lazy val m = loadModel(spark, dir, v) // only a fold needs the model
+      val newFiles =
+        if (foldFiles.isEmpty) Nil
         else {
-          val m = loadModel(spark, dir, v)
-          val key = curveKey(m)
           val survivors = filterKeys(
             readFilesDv(spark, dir, cur, foldFiles),
             keyCol, keys, negate = true)
-          val outCols = survivors.columns.map(col).toSeq
-          val n = survivors.count()
-          val newFiles =
-            if (n == 0) Nil
-            else Fs.stagedAppend(
-              withIds(survivors.withColumn("_z", key)
-                .repartitionByRange(math.max(1,
-                  math.min(foldFiles.size, 200)), col("_z"))
-                .sortWithinPartitions("_z")
-                .select(outCols: _*), anchorSchema(spark, dir)),
-              Nil, dataDir(dir))
-          val kept = cur.filter(!col("file").isin(foldFiles: _*))
-          val next =
-            if (newFiles.isEmpty) kept
-            else kept.unionByName(
-              ledgerRows(Fs.readParquet(spark, newFiles: _*), m, key,
-                batchId = -1L),
-              allowMissingColumns = true)
-          (next, foldFiles)
+          if (survivors.count() == 0) Nil
+          else stageSorted(dir, survivors, curveKey(m),
+            math.min(foldFiles.size, 200), anchorSchema(spark, dir))
         }
-      heartbeat(spark, claim, dir)
-      val updated = maskManifest(spark, dir, masked, keyCol, maskHits)
-      commitManifest(stamp(updated, priorWm, priorClamped), dir, claim)
-      DeleteStats(rewritten = rewritten.size,
-        untouched = all.length - rewritten.size,
+      val kept = cur.filter(!col("file").isin(foldFiles: _*))
+      commitNext(spark, dir, claim,
+        maskManifest(spark, dir, kept, keyCol, maskHits), newFiles, m,
+        batchId = -1L, priorWm, priorClamped)
+      DeleteStats(rewritten = foldFiles.size,
+        untouched = all.length - foldFiles.size,
         deleted = nDeleted, version = v + 1)
     }
   }
@@ -1856,11 +1797,7 @@ object ClusteredStore {
     val lockedAtMs = System.currentTimeMillis()
     // committed set RE-LISTED under the claim: nothing can commit while
     // we hold it, so keptPaths is exact for this snapshot
-    val committed = Fs.list(spark, ledgerDir(dir))
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toInt)
-      .filter(n => Fs.exists(spark, s"${versionDir(dir, n)}/_SUCCESS"))
-      .sorted
+    val committed = versionsUnder(spark, ledgerDir(dir))
     if (committed.isEmpty) return (0, Nil)
     // retention is the AND of both clocks: a version survives if it is
     // within the newest keepLast OR its commit is younger than
@@ -1929,9 +1866,7 @@ object ClusteredStore {
     // drop any model version strictly below the oldest kept manifest's
     // governing model
     val oldestKept = keep.head
-    val models = Fs.list(spark, modelDir(dir))
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toInt).sorted
+    val models = versionsUnder(spark, modelDir(dir), all = true)
     val governing = models.filter(_ <= oldestKept).lastOption.getOrElse(1)
     models.filter(_ < governing).foreach { n =>
       Fs.delete(spark, modelVersionDir(dir, n)); removed += 1
@@ -1941,11 +1876,8 @@ object ClusteredStore {
     // crashed anchor write — is debris. (No in-flight anchor write can
     // exist here: anchor writers hold the claim we hold.) The newest
     // committed anchor is always kept: it is the empty-store serve path.
-    anchorVersion(spark, dir).foreach { latest =>
-      Fs.list(spark, schemaDir(dir)).map(_.getPath.getName)
-        .filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toInt)
-        .filter(_ != latest)
+    versionsUnder(spark, schemaDir(dir)).lastOption.foreach { latest =>
+      versionsUnder(spark, schemaDir(dir), all = true).filter(_ != latest)
         .foreach { n =>
           Fs.delete(spark, s"${schemaDir(dir)}/v=$n"); removed += 1
         }
@@ -1985,14 +1917,12 @@ object ClusteredStore {
 
   private val FieldIdKey = "parquet.field.id"
 
-  private def fieldId(f: org.apache.spark.sql.types.StructField)
-      : Option[Long] =
+  private def fieldId(f: StructField): Option[Long] =
     if (f.metadata.contains(FieldIdKey))
       Some(f.metadata.getLong(FieldIdKey))
     else None
 
-  private def withFieldId(f: org.apache.spark.sql.types.StructField,
-      id: Long): org.apache.spark.sql.types.StructField =
+  private def withFieldId(f: StructField, id: Long): StructField =
     f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
       .withMetadata(f.metadata).putLong(FieldIdKey, id).build())
 
@@ -2012,8 +1942,7 @@ object ClusteredStore {
     * parquet writer stamps them (a batch arriving from outside carries
     * no metadata). No-op for columns the anchor has no id for.
     */
-  private def withIds(df: DataFrame,
-      anchor: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+  private def withIds(df: DataFrame, anchor: Option[StructType]): DataFrame =
     anchor match {
       case None => df
       case Some(st) =>
@@ -2025,16 +1954,6 @@ object ClusteredStore {
         }.toSeq: _*)
     }
 
-  /** Highest COMMITTED anchor version (marker-gated, like manifests);
-    * None on legacy flat anchors and pre-anchor stores.
-    */
-  private def anchorVersion(spark: SparkSession, dir: String): Option[Int] =
-    Fs.list(spark, schemaDir(dir)).map(_.getPath)
-      .filter(p => p.getName.startsWith("v=") &&
-        Fs.exists(spark, s"$p/_SUCCESS"))
-      .map(_.getName.stripPrefix("v=").toInt)
-      .sorted.lastOption
-
   /** Publish a new anchor version: a zero-row typed parquet under
     * `schema/v=N+1`, committed by its `_SUCCESS` marker. NEVER an
     * overwrite (r10 advice: the old `mode("overwrite")` on the flat
@@ -2044,25 +1963,25 @@ object ClusteredStore {
     * version, so a crashed write leaves a markerless dir the old anchor
     * simply outranks; vacuum sweeps it.
     */
-  private def writeAnchor(spark: SparkSession, dir: String,
-      st: org.apache.spark.sql.types.StructType): Unit = {
+  private def writeAnchor(
+      spark: SparkSession, dir: String, st: StructType): Unit = {
     ensureFieldIdConfs(spark)
-    val next = Fs.list(spark, schemaDir(dir)).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toInt)
-      .foldLeft(0)(math.max) + 1
+    val next = versionsUnder(spark, schemaDir(dir), all = true)
+      .lastOption.getOrElse(0) + 1
     spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
       .coalesce(1).write.parquet(s"${schemaDir(dir)}/v=$next")
   }
 
   /** The store-owned schema: the highest committed `schema/v=N` anchor
-    * (carrying stable parquet field ids since init), falling back to
-    * the legacy flat `schema/` anchor of older stores (names only),
-    * then None on stores that predate anchors entirely.
+    * (marker-gated like manifests, carrying stable parquet field ids
+    * since init), falling back to the legacy flat `schema/` anchor of
+    * older stores (names only), then None on stores that predate anchors
+    * entirely.
     */
-  private def anchorSchema(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    anchorVersion(spark, dir) match {
+  private def anchorSchema(
+      spark: SparkSession, dir: String): Option[StructType] =
+    versionsUnder(spark, schemaDir(dir)).lastOption match {
       case Some(v) =>
         Some(Fs.parquetSchema(spark, s"${schemaDir(dir)}/v=$v"))
       case None =>
@@ -2075,18 +1994,9 @@ object ClusteredStore {
   /** A typed ZERO-ROW frame under the anchor schema — the empty-store
     * serve path (data/ may legally hold no files after a vacuum).
     */
-  private def emptyFrame(spark: SparkSession,
-      st: org.apache.spark.sql.types.StructType): DataFrame =
+  private def emptyFrame(spark: SparkSession, st: StructType): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-
-  /** Committed manifest versions still retained in the ledger. */
-  private def committedVersions(spark: SparkSession, dir: String): Seq[Int] =
-    Fs.list(spark, ledgerDir(dir))
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toInt)
-      .filter(n => Fs.exists(spark, s"${versionDir(dir, n)}/_SUCCESS"))
-      .sorted
 
   /** Retained versions whose manifests carry a live deletion-vector
     * mask keyed on `colName`. DV masks are key LISTS bound to their
@@ -2100,7 +2010,7 @@ object ClusteredStore {
     */
   private def dvKeyedVersions(spark: SparkSession, dir: String,
       colName: String): Seq[Int] =
-    committedVersions(spark, dir).filter { n =>
+    versionsUnder(spark, ledgerDir(dir)).filter { n =>
       val man = manifest(spark, dir, Some(n))
       man.columns.contains("dv_col") &&
         !ensureDvCols(man)
@@ -2124,38 +2034,12 @@ object ClusteredStore {
     * ([[dvKeyedVersions]] — masks are name-bound).
     */
   def renameColumn(spark: SparkSession, dir: String, from: String,
-      to: String, staleClaimMs: Long = Long.MaxValue): Unit = {
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"rename before init under $dir"))
-    val st = anchorSchema(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"rename($dir): store has no schema anchor — rebuild via init"))
-    require(st.fields.forall(f => fieldId(f).isDefined),
-      s"rename($dir): anchor carries no field ids (pre-field-id " +
-        "store) — renames need id-resolved reads; recluster to migrate")
-    require(st.fieldNames.contains(from),
-      s"rename($dir): no column $from in ${st.fieldNames.toSeq}")
-    require(!st.fieldNames.contains(to),
-      s"rename($dir): column $to already exists — ambiguous evolution")
-    val m = loadModel(spark, dir, v)
-    require(!m.cols.contains(from),
-      s"rename($dir): $from is a clustering column (manifest min_/max_ " +
-        "stats are name-keyed) — recluster under new columns instead")
-    require(!m.bloom.exists(_._1 == from),
-      s"rename($dir): $from carries a manifest Bloom sketch column — " +
-        "re-init/recluster to re-key the sketch")
-    val dvVs = dvKeyedVersions(spark, dir, from)
-    require(dvVs.isEmpty,
-      s"rename($dir): retained versions $dvVs carry deletion-vector " +
-        s"masks keyed on $from (masks bind to the column by NAME — " +
-        "every read of a masked file would break after the rename) — " +
-        "fold the masks first (compact/recluster), then vacuum the " +
-        "masked versions out of retention")
-    val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
-    try writeAnchor(spark, dir, org.apache.spark.sql.types.StructType(
-      st.map(f => if (f.name == from) f.copy(name = to) else f)))
-    finally releaseClaim(spark, dir, claim)
-  }
+      to: String, staleClaimMs: Long = Long.MaxValue): Unit =
+    evolveAnchor(spark, dir, "rename", from, staleClaimMs) { st =>
+      require(!st.fieldNames.contains(to),
+        s"rename($dir): column $to already exists — ambiguous evolution")
+      StructType(st.map(f => if (f.name == from) f.copy(name = to) else f))
+    }
 
   /** Drop a data column — a metadata commit, a pure projection on
     * every read: the anchor loses the field, so no read path requests
@@ -2166,36 +2050,12 @@ object ClusteredStore {
     * serialization as [[renameColumn]].
     */
   def dropColumn(spark: SparkSession, dir: String, name: String,
-      staleClaimMs: Long = Long.MaxValue): Unit = {
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"drop before init under $dir"))
-    val st = anchorSchema(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"drop($dir): store has no schema anchor — rebuild via init"))
-    require(st.fields.forall(f => fieldId(f).isDefined),
-      s"drop($dir): anchor carries no field ids (pre-field-id store) " +
-        "— recluster to migrate first")
-    require(st.fieldNames.contains(name),
-      s"drop($dir): no column $name in ${st.fieldNames.toSeq}")
-    require(st.fields.length > 1, s"drop($dir): cannot drop the last column")
-    val m = loadModel(spark, dir, v)
-    require(!m.cols.contains(name),
-      s"drop($dir): $name is a clustering column — recluster instead")
-    require(!m.bloom.exists(_._1 == name),
-      s"drop($dir): $name carries a manifest Bloom sketch — " +
-        "re-init/recluster instead")
-    val dvVs = dvKeyedVersions(spark, dir, name)
-    require(dvVs.isEmpty,
-      s"drop($dir): retained versions $dvVs carry deletion-vector " +
-        s"masks keyed on $name (masks bind to the column by NAME — " +
-        "every read of a masked file would break after the drop) — " +
-        "fold the masks first (compact/recluster), then vacuum the " +
-        "masked versions out of retention")
-    val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
-    try writeAnchor(spark, dir, org.apache.spark.sql.types.StructType(
-      st.filterNot(_.name == name)))
-    finally releaseClaim(spark, dir, claim)
-  }
+      staleClaimMs: Long = Long.MaxValue): Unit =
+    evolveAnchor(spark, dir, "drop", name, staleClaimMs) { st =>
+      require(st.fields.length > 1,
+        s"drop($dir): cannot drop the last column")
+      StructType(st.filterNot(_.name == name))
+    }
 
   /** Widen a data column's type — a METADATA COMMIT, zero data files
     * touched, the third leg of schema evolution next to [[renameColumn]]
@@ -2222,38 +2082,67 @@ object ClusteredStore {
     * (old snapshots serve under the LATEST schema, i.e. widened).
     */
   def widenColumnType(spark: SparkSession, dir: String, name: String,
-      to: org.apache.spark.sql.types.DataType,
+      to: DataType,
       staleClaimMs: Long = Long.MaxValue): Unit = {
     import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType}
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"widen before init under $dir"))
+    evolveAnchor(spark, dir, "widen", name, staleClaimMs,
+        nameBound = false) { st =>
+      val from = st(name).dataType
+      val supported = (from, to) match {
+        case (IntegerType, LongType) => true
+        case (FloatType, DoubleType) => true
+        case _ => false
+      }
+      require(supported,
+        s"widen($dir): ${from.simpleString} -> ${to.simpleString} is not " +
+          "a supported widening (int -> bigint and float -> double only " +
+          "— the promotions parquet readers serve losslessly from " +
+          "narrow footers)")
+      StructType(st.map(f => if (f.name == name) f.copy(dataType = to) else f))
+    }
+  }
+
+  /** The metadata commit behind [[renameColumn]], [[dropColumn]] and
+    * [[widenColumnType]]: refuse unless the store has a field-id anchor
+    * and `name` is one of its columns but not a clustering column (the
+    * frozen rank model and the manifest `min_`/`max_` stats are keyed
+    * and typed at init). A `nameBound` evolution also refuses Bloom
+    * columns and columns keying a retained deletion-vector mask, which
+    * bind to the column by name. Then `edit` — its own checks plus the
+    * new schema — is published as the next anchor under the claim.
+    */
+  private def evolveAnchor(spark: SparkSession, dir: String, op: String,
+      name: String, staleClaimMs: Long, nameBound: Boolean = true)(
+      edit: StructType => StructType): Unit = {
+    val v = requireVersion(spark, dir, op)
     val st = anchorSchema(spark, dir).getOrElse(
       throw new IllegalStateException(
-        s"widen($dir): store has no schema anchor — rebuild via init"))
+        s"$op($dir): store has no schema anchor — rebuild via init"))
     require(st.fields.forall(f => fieldId(f).isDefined),
-      s"widen($dir): anchor carries no field ids (pre-field-id store) " +
-        "— recluster to migrate first")
+      s"$op($dir): anchor carries no field ids (pre-field-id store) — " +
+        "evolution needs id-resolved reads; recluster to migrate first")
     require(st.fieldNames.contains(name),
-      s"widen($dir): no column $name in ${st.fieldNames.toSeq}")
+      s"$op($dir): no column $name in ${st.fieldNames.toSeq}")
     val m = loadModel(spark, dir, v)
     require(!m.cols.contains(name),
-      s"widen($dir): $name is a clustering column (the frozen rank " +
-        "model and manifest min_/max_ stats are typed at init) — " +
+      s"$op($dir): $name is a clustering column (the frozen rank model " +
+        "and manifest min_/max_ stats are keyed and typed at init) — " +
         "recluster instead")
-    val from = st(name).dataType
-    val supported = (from, to) match {
-      case (IntegerType, LongType) => true
-      case (FloatType, DoubleType) => true
-      case _ => false
+    if (nameBound) {
+      require(!m.bloom.exists(_._1 == name),
+        s"$op($dir): $name carries a manifest Bloom sketch column — " +
+          "re-init/recluster to re-key the sketch")
+      val dvVs = dvKeyedVersions(spark, dir, name)
+      require(dvVs.isEmpty,
+        s"$op($dir): retained versions $dvVs carry deletion-vector " +
+          s"masks keyed on $name (masks bind to the column by NAME — " +
+          s"every read of a masked file would break after the $op) — " +
+          "fold the masks first (compact/recluster), then vacuum the " +
+          "masked versions out of retention")
     }
-    require(supported,
-      s"widen($dir): ${from.simpleString} -> ${to.simpleString} is not " +
-        "a supported widening (int -> bigint and float -> double only " +
-        "— the promotions parquet readers serve losslessly from " +
-        "narrow footers)")
+    val next = edit(st)
     val claim = claimOrThrow(spark, dir, v + 1, staleClaimMs)
-    try writeAnchor(spark, dir, org.apache.spark.sql.types.StructType(
-      st.map(f => if (f.name == name) f.copy(dataType = to) else f)))
+    try writeAnchor(spark, dir, next)
     finally releaseClaim(spark, dir, claim)
   }
 
@@ -2304,8 +2193,7 @@ object ClusteredStore {
       val hiP = b.hi.map(v => col(b.col) <= lit(v)).getOrElse(lit(true))
       loP && hiP
     }.reduceOption(_ && _).getOrElse(lit(true))
-    val v = asOf.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $dir"))
+    val v = requireVersion(spark, dir, "read", asOf)
     val files = StatsLedger.pruneFiles(spark, versionDir(dir, v), boxes)
     if (files.isEmpty) read(spark, dir, asOf).where(lit(false))
     else readFilesDv(spark, dir, manifest(spark, dir, Some(v)), files)
@@ -2346,8 +2234,7 @@ object ClusteredStore {
     */
   def stats(spark: SparkSession, dir: String,
       asOf: Option[Int] = None): StoreStats = {
-    val v = asOf.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $dir"))
+    val v = requireVersion(spark, dir, "stats", asOf)
     // n_rows is LIVE rows: physical minus deletion-vector-masked — the
     // row count every read path actually serves
     val r = ensureDvCols(manifest(spark, dir, Some(v)))
@@ -2371,12 +2258,7 @@ object ClusteredStore {
     * the table's lifetime commit count.
     */
   def history(spark: SparkSession, dir: String): DataFrame = {
-    val vs = Fs.list(spark, ledgerDir(dir))
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toInt)
-      .filter(n => Fs.exists(spark, s"${versionDir(dir, n)}/_SUCCESS"))
-      .sorted
-    val rows = vs.map { v =>
+    val rows = versionsUnder(spark, ledgerDir(dir)).map { v =>
       val s = stats(spark, dir, Some(v))
       (s.version, s.nFiles, s.nRows, s.wmBatch, s.clampedTotal,
         s.clampRate)
@@ -2400,8 +2282,9 @@ object ClusteredStore {
     * publishes, so maintenance is policy on measurements, not a
     * schedule guessed in advance.
     *
-    *  1. [[compact]] when the small-file FRACTION (manifest files under
-    *     half the mean size) is at least `smallFileFrac`;
+    *  1. [[compact]] when the FRACTION of files its default pass would
+    *     fold ([[foldTargets]] at half the mean live size) is at least
+    *     `smallFileFrac`;
     *  2. [[recluster]] (at the current file count) when the
     *     accumulated clamp rate is at least `clampRateMax` — the drift
     *     counter says the frozen bounds stopped fitting the data;
@@ -2418,11 +2301,9 @@ object ClusteredStore {
       maxVersions: Int = 10, keepLast: Int = 5,
       staleClaimMs: Long = Long.MaxValue): MaintainReport = {
     val s0 = stats(spark, dir)
-    val led = manifest(spark, dir, Some(s0.version))
-      .select("n_rows").collect().map(_.getLong(0))
-    val mean = math.max(1L, led.sum / math.max(1, led.length))
-    val smallFrac =
-      led.count(_ < mean / 2).toDouble / math.max(1, led.length)
+    val led = fileSizes(manifest(spark, dir, Some(s0.version)))
+    val smallFrac = foldTargets(led, meanLive(led) / 2).size.toDouble /
+      math.max(1, led.length)
     val compacted =
       if (smallFrac >= smallFileFrac)
         compact(spark, dir, staleClaimMs = staleClaimMs).rewritten
@@ -2431,10 +2312,7 @@ object ClusteredStore {
     if (reclustered)
       recluster(spark, dir, nFiles = math.max(1, s0.nFiles.toInt),
         staleClaimMs = staleClaimMs)
-    val retained = Fs.list(spark, ledgerDir(dir))
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .count(n => Fs.exists(spark,
-        s"${versionDir(dir, n.stripPrefix("v=").toInt)}/_SUCCESS"))
+    val retained = versionsUnder(spark, ledgerDir(dir)).size
     val vacuumed =
       if (retained > maxVersions) vacuum(spark, dir, keepLast, staleClaimMs)
       else 0

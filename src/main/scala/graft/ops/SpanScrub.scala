@@ -190,8 +190,9 @@ object SpanScrub {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        scrubIncremental(batch, idCol, textCol, tileWords, ledgerPath)
-          .write.mode("append").parquet(outPath)
+        Fs.stagedAppend(
+          scrubIncremental(batch, idCol, textCol, tileWords, ledgerPath),
+          Nil, outPath)
         ()
       }
       .start()

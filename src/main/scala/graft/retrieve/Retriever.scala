@@ -163,9 +163,9 @@ final class CheckpointStore(spark: SparkSession, path: String) {
     */
   def append(rows: Seq[(String, Boolean, String)]): Unit = {
     val seq = System.nanoTime()
-    rows.toDF("response_id", "processed", "error")
-      .withColumn("seq", lit(seq))
-      .write.mode("append").parquet(path)
+    Fs.stagedAppend(rows.toDF("response_id", "processed", "error")
+      .withColumn("seq", lit(seq)), Nil, path)
+    ()
   }
 
   /** A8: compaction — keep the last row per response_id (explicit order by

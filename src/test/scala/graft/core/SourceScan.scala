@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Shared scanner of the source guards ([[SchemaLessReadGuardSpec]],
-  * [[RenameGuardSpec]]).
+  * [[RenameGuardSpec]], [[RawAppendGuardSpec]]).
   */
 object SourceScan {
 
