@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Commit, Fs, LogSchema}
-import graft.query.{LogRollup, ShreddedLog}
-import graft.streaming.LogStreamPipeline
+import graft.query.{Generations, LogRollup, ShreddedLog}
 
 /** Forget a `custom_id` — or a `run_id` SUBTREE — across the LOG
   * pipeline's three stores: the landed detail log, the shredded typed
@@ -29,9 +28,9 @@ import graft.streaming.LogStreamPipeline
   *    column-pruned scan (the match column + partition columns only)
   *    finds the `date=/batch=` partitions still holding the ids; each
   *    is rewritten to its anti-joined survivors behind its own `_PURGE`
-  *    marker commit. Compacted `batch=<N>c` generations rewrite the
-  *    same way — their `_FOLDED` markers are underscore-prefixed and
-  *    survive the swap in place, so the fold horizon never moves.
+  *    marker commit. Compacted generations rewrite the same way —
+  *    their fold markers survive the swap in place, so the fold horizon
+  *    never moves ([[graft.query.Generations]]).
   *  - SHRED ([[purgeShred]] / [[purgeShredByRun]]): identical recipe
   *    over `date=/src=`.
   *  - ROLLUP ([[refoldRollup]] / [[refoldRollupByRun]]): aggregates
@@ -41,16 +40,14 @@ import graft.streaming.LogStreamPipeline
   *    shred store's SAME partition with the banned ids masked out,
   *    which subtracts the contribution exactly — proven cross-engine by
   *    `q_forget_log` / `q_forget_run`. When a crashed pipeline tick
-  *    left the two layouts MISALIGNED (shred folded to `src=gen-<N>c`
-  *    while the rollup still holds the pre-fold `src=batch-<k>` dirs —
+  *    left the two layouts MISALIGNED (shred folded to a generation
+  *    while the rollup still holds the pre-fold batch dirs —
   *    r14 advice: the old code silently ignored the miss, acked, and
   *    the later shred purge destroyed the only recompute evidence), the
   *    re-fold now REALIGNS the date partition: it completes the crashed
-  *    fold itself, recomputing the generation from the shred's
-  *    surviving rows and then retiring the stale pre-fold dirs the
-  *    generation covers — same write→`_FOLDED`-marker→delete-sources
-  *    commit discipline as the tick's own fold, idempotent under
-  *    replay-at-any-crash-point.
+  *    fold itself through [[graft.query.Generations]]' sweep and commit,
+  *    with the generation recomputed from the shred's surviving rows,
+  *    idempotent under replay-at-any-crash-point.
   *
   * ORDER CONTRACT (encoded in [[Forget.logTargets]] /
   * [[Forget.logRunTargets]]): the rollup re-fold detects its affected
@@ -212,28 +209,6 @@ object LogForget {
       shredDir: String, rids: DataFrame): Int =
     refoldRollupBy(spark, rollupDir, shredDir, "run_id", rids)
 
-  private val SrcBatchRe = "^batch-([0-9]+)$".r
-  private val SrcGenRe = "^gen-([0-9]+)c$".r
-
-  /** Rollup `src=` dirs under one date that a committed `gen-<n>c`
-    * generation supersedes: pre-fold `batch-<b>` dirs with b <= n−1
-    * (the fold's source set) and older generations — committed ones
-    * are strict subsets of the new generation's coverage, marker-less
-    * ones are crashed fold attempts whose sources the new generation
-    * also covers.
-    */
-  private def staleUnder(spark: SparkSession, dateDir: String,
-      n: Long): Seq[String] =
-    Fs.list(spark, dateDir).map(_.getPath.getName).filter {
-      case s if s.startsWith("src=") =>
-        s.stripPrefix("src=") match {
-          case SrcBatchRe(b) => b.toLong <= n - 1
-          case SrcGenRe(m) => m.toLong < n
-          case _ => false
-        }
-      case _ => false
-    }
-
   private def refoldRollupBy(spark: SparkSession, rollupDir: String,
       shredDir: String, matchCol: String, keys: DataFrame): Int = {
     if (Fs.listDataFiles(spark, shredDir).isEmpty) return 0
@@ -256,10 +231,9 @@ object LogForget {
         if (d == "__HIVE_DEFAULT_PARTITION__") None else Some(d)
       val recompute = (_: Seq[String]) =>
         LogRollup.partialsOfSlice(survivors, dOpt, s)
-      s match {
-        case SrcGenRe(n)
-            if LogStreamPipeline.folded(spark,
-              s"$shredDir/date=$d/src=$s") =>
+      Generations.Src.genOf(s"src=$s") match {
+        case Some(n)
+            if Generations.isCommitted(spark, s"$shredDir/date=$d/src=$s") =>
           // a committed shred generation: the rollup must hold the SAME
           // committed generation with no stale pre-fold dirs next to it
           // — otherwise a crashed tick left the layouts misaligned and
@@ -267,28 +241,24 @@ object LogForget {
           // (or a missing) partition while the stale dirs keep serving
           // the banned contribution (r14 advice). Realign = complete
           // the crashed fold with the recompute as its fold body.
-          val genDir = s"$rollupDir/date=$d/src=$s"
-          val stale = staleUnder(spark, s"$rollupDir/date=$d", n.toLong)
-          if (LogStreamPipeline.folded(spark, genDir) && stale.isEmpty) {
-            require(rewritePart(spark,
-                s"$rollupDir/date=$d", s"src=$s")(recompute),
+          val dateDir = s"$rollupDir/date=$d"
+          val genDir = s"$dateDir/src=$s"
+          val stale = Generations.sweep(spark, dateDir, Generations.Src, n)
+          if (Generations.isCommitted(spark, genDir) && stale.isEmpty) {
+            require(rewritePart(spark, dateDir, s"src=$s")(recompute),
               s"rollup generation $genDir is committed but holds no " +
                 "data files — refusing to ack a re-fold that subtracted " +
                 "nothing")
           } else {
-            // write → _FOLDED marker → retire stale sources: the same
-            // commit discipline as the tick's own fold, idempotent at
-            // every crash point (a marker-less generation never serves;
-            // a marked one with stale dirs re-enters this branch and
-            // overwrites with identical recomputed content)
-            recompute(Nil)
-              .write.mode("overwrite").option("compression", "snappy")
-              .parquet(genDir)
-            LogStreamPipeline.markFolded(spark, genDir)
-            staleUnder(spark, s"$rollupDir/date=$d", n.toLong)
-              .foreach(sd => Fs.delete(spark, s"$rollupDir/date=$d/$sd"))
+            // idempotent at every crash point: a marker-less generation
+            // never serves, and a committed one with stale dirs
+            // re-enters this branch and rewrites identical content
+            Generations.commit(spark, dateDir, Generations.Src, n, stale)(
+              recompute(Nil)
+                .write.mode("overwrite").option("compression", "snappy")
+                .parquet(_))
           }
-        case SrcGenRe(_) =>
+        case Some(_) =>
           // a marker-less shred generation is a crashed fold ATTEMPT:
           // its rows are torn and its surviving sources are their own
           // hits — recomputing from it would fold garbage forward

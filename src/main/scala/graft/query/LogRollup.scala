@@ -92,7 +92,7 @@ object LogRollup {
     */
   def appendBatch(batch: DataFrame, batchId: Long, rollupDir: String): Unit =
     partials(ShreddedLog.shred(batch)
-        .withColumn("src", lit(s"batch-$batchId")))
+        .withColumn("src", lit(Generations.Src.batchValue(batchId))))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date", "src")
@@ -149,14 +149,22 @@ object LogRollup {
   }
 
   /** The partial table, typed even when the store is empty (the empty
-    * Sunday batch must not become a schema-inference crash).
+    * Sunday batch must not become a schema-inference crash); with
+    * `upToBatch`, only the directories [[Generations.pinned]] selects.
     */
-  private def partialTable(spark: SparkSession, rollupDir: String): DataFrame =
-    if (ShreddedLog.processedSrcs(spark, rollupDir).isEmpty)
-      partials(ShreddedLog.shred(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        LogSchema.schema)))
-    else Fs.readParquet(spark, rollupDir)
+  private def partialTable(spark: SparkSession, rollupDir: String,
+      upToBatch: Option[Long]): DataFrame = {
+    upToBatch.map(Generations.pinned(spark, rollupDir, Generations.Src, _))
+    match {
+      case None if exists(spark, rollupDir) => Fs.readParquet(spark, rollupDir)
+      case Some(dirs) if dirs.nonEmpty =>
+        Fs.readParquetUnder(spark, rollupDir, dirs: _*)
+      case _ =>
+        partials(ShreddedLog.shred(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          LogSchema.schema)))
+    }
+  }
 
   /** Serve the rollup at `grain` (any subset of {date, model}, default
     * the full stored grain): final-merge of the partial states — sums of
@@ -164,41 +172,17 @@ object LogRollup {
     * estimate (approximate BY CONTRACT; the exact columns are exact).
     * A `date`-bounded filter on the result prunes the store's hive
     * partitions before any partial row is read (plan-asserted in
-    * LogRollupSpec).
+    * LogRollupSpec). `upToBatch` pins the merge to the batches up to
+    * that id — the rollup leg of
+    * [[graft.streaming.LogStreamPipeline.readConsistent]]'s cross-store
+    * snapshot, with [[ShreddedLog.readAsOf]]'s contract.
     */
   def read(spark: SparkSession, rollupDir: String,
       grain: Seq[String] = Seq("date", "model"),
       upToBatch: Option[Long] = None): DataFrame = {
     require(grain.nonEmpty && grain.forall(Set("date", "model")),
       s"rollup grain must be a non-empty subset of {date, model}: $grain")
-    // upToBatch pins the merge to `src=batch-<k>` partials with
-    // k <= id — the rollup leg of LogStreamPipeline.readConsistent's
-    // cross-store snapshot (pipeline-maintained stores only; see
-    // ShreddedLog.readAsOf). Partition-value pruning, no extra I/O.
-    val base = partialTable(spark, rollupDir)
-    // COMMITTED `gen-<N>c` generations hold only batches below the fold
-    // horizon, which readConsistent gates upToBatch against — pass
-    // whole; a marker-less gen dir is a crashed fold attempt whose
-    // partial rows must not serve (its sources still do)
-    upToBatch.fold(base) { id =>
-      val committed =
-        ShreddedLog.committedGenSrcs(spark, rollupDir).toSeq
-      // generations pass whole (their partials lost batch identity in
-      // the fold merge) — legal only at or above this store's own fold
-      // horizon, refused otherwise (standalone-safe, same bound
-      // readConsistent enforces from the log side)
-      val horizon = committed
-        .map(_.stripPrefix("gen-").stripSuffix("c").toLong - 1)
-        .foldLeft(-1L)(math.max)
-      require(id >= horizon,
-        s"batches <= $horizon are folded into generations that serve " +
-          s"only whole — this rollup cannot pin a snapshot at $id")
-      val genOk =
-        if (committed.isEmpty) lit(false) else col("src").isin(committed: _*)
-      base.filter(genOk ||
-        regexp_extract(col("src"), "^batch-([0-9]+)$", 1)
-          .cast("long") <= id)
-    }
+    partialTable(spark, rollupDir, upToBatch)
       .groupBy(grain.map(col): _*)
       .agg(
         sum(col("n_events")).cast("long").as("n_events"),

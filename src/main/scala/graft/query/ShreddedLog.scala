@@ -146,7 +146,8 @@ object ShreddedLog {
     */
   def appendBatch(batch: DataFrame, batchId: Long, shredDir: String): Unit =
     writeInto(
-      shred(batch).withColumn("src", lit(s"batch-$batchId")), shredDir)
+      shred(batch).withColumn("src", lit(Generations.Src.batchValue(batchId))),
+      shredDir)
 
   /** Full (re)build: delete + shred everything. */
   def build(spark: SparkSession, logDir: String, shredDir: String): Unit = {
@@ -166,88 +167,28 @@ object ShreddedLog {
     * crash (EmptyInputGate pins this).
     */
   def read(spark: SparkSession, shredDir: String): DataFrame =
-    if (processedSrcs(spark, shredDir).isEmpty)
-      shred(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        LogSchema.schema)).drop("src")
+    if (processedSrcs(spark, shredDir).isEmpty) empty(spark)
     else Fs.readParquet(spark, shredDir).drop("src")
 
-  /** `src=gen-<N>c` generation partition VALUES whose dirs carry the
-    * pipeline's `_FOLDED` commit marker — the only generations a
-    * consistency-promising reader may trust. A marker-less gen dir is
-    * a crashed fold attempt (possibly a torn object-store copy) whose
-    * partial rows must not serve; its sources are still intact and DO
-    * serve, so excluding it is exact, not lossy. One partition-dir
-    * walk, no data read.
-    */
-  private[graft] def committedGenSrcs(spark: SparkSession,
-      storeDir: String): Set[String] = {
-    val fs = Fs(spark, storeDir)
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    if (!fs.exists(p)) return Set.empty
-    val out = Set.newBuilder[String]
-    fs.listStatus(p).foreach { d =>
-      if (d.isDirectory && d.getPath.getName.startsWith("date="))
-        fs.listStatus(d.getPath).foreach { s =>
-          val n = s.getPath.getName
-          if (s.isDirectory && n.startsWith("src=gen-") &&
-              fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_FOLDED")))
-            out += n.stripPrefix("src=")
-        }
-    }
-    out.result()
-  }
+  private def empty(spark: SparkSession): DataFrame =
+    shred(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      LogSchema.schema)).drop("src")
 
-  /** This store's own fold horizon: the highest batch id absorbed into
-    * a COMMITTED (`_FOLDED`-marked) `src=gen-<N>c` generation, −1 when
-    * none — the lowest batch id a snapshot reader can still pin.
-    * Shared by [[readAsOf]] / [[LogRollup.read]]'s refusals and by
-    * [[graft.streaming.LogStreamPipeline.readConsistent]]'s clamp (the
-    * r13 advice fix: the clamp must honor the BINDING store's horizon,
-    * which is not always the log's).
-    */
-  private[graft] def foldHorizon(spark: SparkSession,
-      storeDir: String): Long =
-    committedGenSrcs(spark, storeDir)
-      .map(_.stripPrefix("gen-").stripSuffix("c").toLong - 1)
-      .foldLeft(-1L)(math.max)
-
-  /** The typed view PINNED at a streaming batch id: only rows from
-    * `src=batch-<k>` partitions with `k <= upToBatch` — the shred leg
-    * of [[graft.streaming.LogStreamPipeline.readConsistent]]'s
-    * cross-store snapshot. Defined for PIPELINE-maintained stores
-    * (every src a batch key); file-fingerprint partitions carry no
-    * batch order and are excluded by the filter itself. Partition-value
-    * pruning only — no data read outside the pinned batches.
+  /** The typed view PINNED at a streaming batch id: the rows of batches
+    * `<= upToBatch` — the shred leg of
+    * [[graft.streaming.LogStreamPipeline.readConsistent]]'s cross-store
+    * snapshot — served from the directories [[Generations.pinned]]
+    * selects (refused below this store's fold horizon). Defined for
+    * PIPELINE-maintained stores; file-fingerprint partitions carry no
+    * batch order and are never served. No data read outside the
+    * selected directories.
     */
   def readAsOf(spark: SparkSession, shredDir: String,
       upToBatch: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, regexp_extract}
-    if (processedSrcs(spark, shredDir).isEmpty) read(spark, shredDir)
-    else {
-      // COMMITTED `gen-<N>c` generations hold only batches <= N-1 and
-      // their rows LOSE per-batch identity in the fold merge, so they
-      // can only pass WHOLE — legal exactly when the pin is at or
-      // above this store's own fold horizon (refused otherwise; the
-      // pipeline's readConsistent enforces the same bound from the log
-      // side, this makes the store API standalone-safe). A marker-less
-      // gen is a crashed fold attempt and is excluded — its sources
-      // still serve.
-      val committed = committedGenSrcs(spark, shredDir).toSeq
-      val horizon = committed
-        .map(_.stripPrefix("gen-").stripSuffix("c").toLong - 1)
-        .foldLeft(-1L)(math.max)
-      require(upToBatch >= horizon,
-        s"batches <= $horizon are folded into generations that serve " +
-          s"only whole — this store cannot pin a snapshot at $upToBatch")
-      val genOk =
-        if (committed.isEmpty) lit(false) else col("src").isin(committed: _*)
-      Fs.readParquet(spark, shredDir)
-        .filter(genOk ||
-          regexp_extract(col("src"), "^batch-([0-9]+)$", 1)
-            .cast("long") <= upToBatch)
-        .drop("src")
-    }
+    val dirs = Generations.pinned(spark, shredDir, Generations.Src, upToBatch)
+    if (dirs.isEmpty) empty(spark)
+    else Fs.readParquetUnder(spark, shredDir, dirs: _*).drop("src")
   }
 
   /** Has this store ever been maintained? One partition-dir listing —

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.{Fs, LogEntry}
-import graft.query.{LogRollup, ShreddedLog}
+import graft.query.{Generations, LogRollup, ShreddedLog}
 
 /** The full streaming ingest tick: land the micro-batch in the
   * date-partitioned log, shred it into the typed store, fold it into
@@ -45,14 +45,14 @@ import graft.query.{LogRollup, ShreddedLog}
   * crashed attempt and its replay, a RAW reader of `logDir` (a
   * `date=`/`batch=` wildcard glob that ignores job and fold markers)
   * can observe a partially-committed batch, and around a compaction
-  * fold it can briefly double-count a folded batch (generation data
-  * landed, source dirs not yet deleted) or partially count a crashed
-  * fold attempt's marker-less generation. All windows close on
-  * replay/resume; readers that must never see them should read through
-  * [[readConsistent]] with `batchId` = the last COMPLETED tick, which
-  * excludes the in-flight batch by key and takes only `_FOLDED`-marked
-  * generations. This is the same at-least-once visibility contract
-  * every marker-less object-store landing zone carries.
+  * fold it can double-count a folded batch (generation committed,
+  * sources not yet deleted) or partially count a crashed fold
+  * attempt's marker-less generation. All windows close on
+  * replay/resume. [[readConsistent]] with `batchId` = the last
+  * COMPLETED tick sees none of them: the in-flight batch is excluded by
+  * key, and the fold windows by [[graft.query.Generations]]' rule
+  * (committed generations only, never a directory one of them
+  * supersedes).
   *
   * Scale shape: every stage is one map-side pass over the micro-batch
   * (the rollup's groupBy is partial-agg dominated at micro-batch size);
@@ -66,91 +66,31 @@ import graft.query.{LogRollup, ShreddedLog}
   */
 object LogStreamPipeline {
 
-  private val BatchDirRe = "^batch=([0-9]+)$".r
-  private val GenDirRe = "^batch=([0-9]+)c$".r
-
-  /** The generation-commit marker. A fold's data files land first
-    * (invisible to nothing — see the torn-window doc — but NEVER
-    * load-bearing); the generation EXISTS only once this marker does,
-    * and the marker is born in ONE atomic file create. This is
-    * [[IdempotentSink]]'s commit recipe applied to the folds (r11
-    * verdict): the previous protocol committed by directory rename,
-    * which is atomic on HDFS/local but copy-then-delete on S3-family
-    * stores — there, a crashed rename left a PARTIAL generation that
-    * the "dest exists → resume source deletes" rule then treated as
-    * complete, deleting sources whose rows the partial copy never
-    * received: data loss. Source deletes now key on the marker, which
-    * exists only after every data byte is in place, so a torn write or
-    * torn copy can never trigger them. Underscore-prefixed, so parquet
-    * globs never read it as data.
-    */
-  private[graft] val FoldMarker = "_FOLDED"
-
   private def dateDirs(spark: SparkSession, logDir: String) =
     Fs.list(spark, logDir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
 
-  private[graft] def folded(spark: SparkSession, genDir: String): Boolean =
-    Fs.exists(spark, s"$genDir/$FoldMarker")
-
-  private[graft] def markFolded(spark: SparkSession, genDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$genDir/$FoldMarker")
-    Fs(spark, genDir).create(p, true).close()
-  }
-
-  /** Highest batch id folded into a COMMITTED compacted generation,
-    * across all date partitions (−1 when none): a `batch=<N>c`
-    * generation holds every batch `<= N−1` that existed at fold time,
-    * so ids at or below this are NO LONGER individually addressable in
-    * the log — a replay of one would resurrect rows a generation
-    * already absorbed ([[tick]] guards on exactly this), and
-    * [[readConsistent]] cannot pin below it. Derived from the
-    * directory names plus their `_FOLDED` markers — evidence that
-    * survives any crash point (a crashed attempt's marker-less dir is
-    * NOT a generation and never advances the horizon), unlike a
-    * separately-written watermark file that could lag the fold.
+  /** Highest batch id folded into a COMMITTED generation of the landed
+    * log, across all date partitions (−1 when none): ids at or below it
+    * are no longer individually addressable — a replay of one would
+    * resurrect rows a generation already absorbed ([[tick]] guards on
+    * exactly this), and [[readConsistent]] cannot pin below it. Derived
+    * from the directories and their markers, evidence that survives any
+    * crash point, unlike a separately-written watermark file that could
+    * lag the fold.
     */
   def maxFolded(spark: SparkSession, logDir: String): Long =
-    dateDirs(spark, logDir)
-      .flatMap { d =>
-        val dPath = d.getPath.toString
-        Fs.list(spark, dPath).map(_.getPath.getName).collect {
-          case n @ GenDirRe(m) if folded(spark, s"$dPath/$n") =>
-            m.toLong - 1
-        }
-      }
-      .foldLeft(-1L)(math.max)
+    Generations.horizon(spark, logDir, Generations.Log)
 
-  /** Stamp the `_FOLDED` marker onto every marker-less generation dir
-    * of a store written by a PRE-marker version of these folds (which
-    * committed by directory rename). Run ONCE per store, with no
-    * stream running, when upgrading: the old protocol was only correct
-    * where rename is atomic (HDFS/local), and exactly there a
-    * generation dir's existence proves its completeness — so the stamp
-    * is sound. Without it, marker-gated readers treat legacy
-    * generations as uncommitted debris. Returns how many dirs were
-    * stamped (log `batch=<N>c` and shred/rollup `src=gen-<N>c` layouts
-    * both accepted).
+  /** Stamp the commit marker onto every marker-less generation dir of a
+    * store written by a PRE-marker version of these folds (log and
+    * shred/rollup layouts both accepted). Run ONCE per store, with no
+    * stream running, when upgrading; without it, marker-gated readers
+    * treat legacy generations as uncommitted debris. Returns how many
+    * dirs were stamped.
     */
-  def markLegacyGenerations(spark: SparkSession, storeDir: String): Int = {
-    var n = 0
-    dateDirs(spark, storeDir).foreach { d =>
-      val dPath = d.getPath.toString
-      Fs.list(spark, dPath).map(_.getPath.getName).foreach { name =>
-        val isGen = GenDirRe.matches(name) || SrcGenRe.matches(name)
-        if (isGen && !folded(spark, s"$dPath/$name")) {
-          markFolded(spark, s"$dPath/$name"); n += 1
-        }
-      }
-    }
-    n
-  }
-
-  /** Test hook: invoked after a generation commits (marker created) and
-    * before its sources are deleted — the crash point the resume path
-    * exists for. Production value is a no-op.
-    */
-  private[streaming] var onGenerationCommit: () => Unit = () => ()
+  def markLegacyGenerations(spark: SparkSession, storeDir: String): Int =
+    Generations.stampLegacy(spark, storeDir)
 
   /** Retention for the DETAIL stores: drop every `date=<d>` partition
     * with `d < before` (ISO date strings compare lexicographically)
@@ -195,94 +135,22 @@ object LogStreamPipeline {
     (logged, shredded)
   }
 
-  /** Fold every landed `batch=B` dir with `B <= batchId − 1` — plus any
-    * older compacted generation — into ONE new generation
-    * `batch=<batchId>c` per date partition, then delete the folded
-    * sources. Only batches the stream can never re-deliver are eligible
+  /** Fold every landed batch `<= batchId − 1` — plus any older
+    * committed generation — into ONE generation per date partition,
+    * then delete the folded sources ([[graft.query.Generations.fold]]).
+    * Only batches the stream can never re-deliver are eligible
     * (Structured Streaming replays at most the latest uncommitted
-    * batch), so a fold never races a landing.
-    *
-    * Crash-safe by construction, keyed on the SAME batch id as every
-    * other stage, committed by MARKER, not by rename (see
-    * [[FoldMarker]]): the generation's data is written into its own
-    * dir, then `_FOLDED` is created in one atomic file create — the
-    * commit point — and only then are sources deleted. Every crash
-    * window resolves on replay:
-    *  - before/during the data write (including a torn multi-file copy
-    *    on an object store): a marker-less dest is a crashed attempt;
-    *    the replay's `mode(overwrite)` clears and rewrites it. Sources
-    *    were never touched, so nothing is lost.
-    *  - after the marker, before the source deletes: the replay finds
-    *    the marker and resumes the deletes (every remaining source's
-    *    rows are inside the committed generation — sources only shrink
-    *    AFTER a marker, and the replayed batch itself is never
-    *    eligible).
-    * Between the data write landing and the source deletes finishing,
-    * RAW globs can double-count (and before the marker, partially
-    * count) the folded batches — the documented at-least-once torn
-    * window; [[readConsistent]] readers never see it (marker-gated
-    * dir list).
+    * batch), so a fold never races a landing. Keyed on the SAME batch
+    * id as every other stage, so every crash window resolves on replay:
+    * a marker-less generation is rewritten, a committed one resumes its
+    * source deletes. Until then RAW globs can double-count (and before
+    * the marker, partially count) the folded batches; [[readConsistent]]
+    * counts every row once.
     */
   def compactLanded(spark: SparkSession, logDir: String, batchId: Long,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    dateDirs(spark, logDir).foreach { d =>
-      val dPath = d.getPath.toString
-      Fs.list(spark, dPath)
-        .filter(_.getPath.getName.startsWith(".cmp-tmp-"))
-        .foreach(t => Fs.delete(spark, t.getPath.toString))
-      // Sweep crashed-attempt generations: a marker-less gen dir below
-      // this fold's id whose would-be sources are STILL PRESENT is
-      // provably new-protocol trash (the protocol deletes sources only
-      // under a marker, so a crashed attempt always leaves them) — its
-      // rows duplicate those sources and would double-count for raw
-      // globs forever once they fold into the new generation. A
-      // marker-less gen with NO surviving sources is left alone: that
-      // is a pre-marker LEGACY generation (the old rename protocol
-      // deleted sources on commit) holding the only copy of its rows —
-      // [[markLegacyGenerations]] is its documented upgrade path.
-      val names = Fs.list(spark, dPath).map(_.getPath.getName)
-      names.foreach {
-        case n @ GenDirRe(m)
-            if m.toLong < batchId && !folded(spark, s"$dPath/$n") &&
-              names.exists {
-                case BatchDirRe(b) => b.toLong <= m.toLong - 1
-                case g @ GenDirRe(g0) => g0.toLong < m.toLong &&
-                  folded(spark, s"$dPath/$g")
-                case _ => false
-              } =>
-          Fs.delete(spark, s"$dPath/$n")
-        case _ => ()
-      }
-      val sources = Fs.list(spark, dPath).map(_.getPath.getName).filter {
-        case n @ GenDirRe(m) =>
-          // only COMMITTED older generations fold forward (the sweep
-          // above has already removed marker-less ones)
-          m.toLong < batchId && folded(spark, s"$dPath/$n")
-        case BatchDirRe(b) => b.toLong <= batchId - 1
-        case _ => false
-      }
-      val dest = s"$dPath/batch=${batchId}c"
-      if (folded(spark, dest)) {
-        // a previous attempt committed this generation — resume the
-        // source deletes; every remaining source's rows are inside it
-        sources.foreach(s0 => Fs.delete(spark, s"$dPath/$s0"))
-      } else if (sources.nonEmpty &&
-          !(sources.size == 1 && GenDirRe.matches(sources.head))) {
-        val bytes = sources.map(s0 =>
-          Fs.list(spark, s"$dPath/$s0").map(_.getLen).sum).sum
-        val n = math.max(1,
-          math.ceil(bytes.toDouble / targetFileBytes).toInt)
-        // mode(overwrite) clears a crashed attempt's marker-less dest
-        Fs.readParquet(spark, sources.map(s0 => s"$dPath/$s0"): _*)
-          .coalesce(n)
-          .write.mode("overwrite").option("compression", "snappy")
-          .parquet(dest)
-        markFolded(spark, dest) // the commit point
-        onGenerationCommit()
-        sources.foreach(s0 => Fs.delete(spark, s"$dPath/$s0"))
-      }
-    }
-  }
+      targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    Generations.fold(spark, logDir, Generations.Log, batchId,
+      targetFileBytes, identity)
 
   /** Stage 1: land the micro-batch in the log. Idempotent: a replayed
     * batch dynamically overwrites exactly its own `date=/batch=`
@@ -298,84 +166,32 @@ object LogStreamPipeline {
       .option("compression", "snappy")
       .parquet(logDir)
 
-  private val SrcBatchRe = "^src=batch-([0-9]+)$".r
-  private val SrcGenRe = "^src=gen-([0-9]+)c$".r
-
-  /** The [[compactLanded]] discipline applied to a `date=/src=`
-    * batch-keyed store (shred, rollup): fold every `src=batch-<k>`
-    * partition with `k <= batchId − 1` — plus older COMMITTED
-    * `src=gen-<M>c` generations — into one new generation
-    * `src=gen-<batchId>c` per date partition. Without this, the
-    * downstream stores accumulate one partition per micro-batch
-    * forever — the exact critique the landed log's fold answered, one
-    * level down. `merge` is the store's fold algebra: identity for the
-    * full-fidelity shred rows; the partial-state merge for the rollup
-    * (so folding also COLLAPSES partial rows, not just files). Same
-    * crash discipline as [[compactLanded]]: data written into the
-    * generation dir, `_FOLDED` marker created atomically as THE commit
-    * point, source deletes only under the marker — so a torn
-    * object-store copy can never pass for a committed generation and
-    * trigger the deletes (r11 verdict).
+  /** The tick's fold step, run sequentially: roll crashed LogForget
+    * purges forward in all three stores — BEFORE any fold reads a
+    * partially-swapped partition as a source (heal is a name filter on
+    * a listing in the always case, and idempotent otherwise) — then
+    * fold the log, the shred store and the rollup. The rollup's fold
+    * algebra also merges partial rows down to one per (date, model).
+    * The log folds FIRST, so its horizon is always at or ahead of the
+    * stores'.
     */
-  private def foldSrcStore(spark: SparkSession, storeDir: String,
-      batchId: Long, targetFileBytes: Long,
-      merge: DataFrame => DataFrame): Unit = {
-    dateDirs(spark, storeDir).foreach { d =>
-      val dPath = d.getPath.toString
-      Fs.list(spark, dPath)
-        .filter(_.getPath.getName.startsWith(".fold-tmp-"))
-        .foreach(t => Fs.delete(spark, t.getPath.toString))
-      // sweep marker-less crashed-attempt generations below this fold
-      // — only when their would-be sources survive, proving them
-      // new-protocol trash (same reasoning + legacy caveat as
-      // compactLanded's sweep)
-      val names = Fs.list(spark, dPath).map(_.getPath.getName)
-      names.foreach {
-        case n @ SrcGenRe(m)
-            if m.toLong < batchId && !folded(spark, s"$dPath/$n") &&
-              names.exists {
-                case SrcBatchRe(b) => b.toLong <= m.toLong - 1
-                case g @ SrcGenRe(g0) => g0.toLong < m.toLong &&
-                  folded(spark, s"$dPath/$g")
-                case _ => false
-              } =>
-          Fs.delete(spark, s"$dPath/$n")
-        case _ => ()
-      }
-      val sources = Fs.list(spark, dPath).map(_.getPath.getName).filter {
-        case n @ SrcGenRe(m) =>
-          m.toLong < batchId && folded(spark, s"$dPath/$n")
-        case SrcBatchRe(b) => b.toLong <= batchId - 1
-        case _ => false
-      }
-      val dest = s"$dPath/src=gen-${batchId}c"
-      if (folded(spark, dest)) {
-        sources.foreach(s0 => Fs.delete(spark, s"$dPath/$s0"))
-      } else if (sources.nonEmpty &&
-          !(sources.size == 1 && SrcGenRe.matches(sources.head))) {
-        val bytes = sources.map(s0 =>
-          Fs.list(spark, s"$dPath/$s0").map(_.getLen).sum).sum
-        val n = math.max(1,
-          math.ceil(bytes.toDouble / targetFileBytes).toInt)
-        merge(Fs.readParquet(spark, sources.map(s0 => s"$dPath/$s0"): _*))
-          .coalesce(n)
-          .write.mode("overwrite").option("compression", "snappy")
-          .parquet(dest)
-        markFolded(spark, dest) // the commit point
-        sources.foreach(s0 => Fs.delete(spark, s"$dPath/$s0"))
-      }
-    }
+  private[streaming] def foldStores(spark: SparkSession, batchId: Long,
+      logDir: String, shredDir: String, rollupDir: String,
+      targetFileBytes: Long): Unit = {
+    Seq(logDir, shredDir, rollupDir)
+      .foreach(graft.ops.LogForget.healStore(spark, _))
+    compactLanded(spark, logDir, batchId, targetFileBytes)
+    Generations.fold(spark, shredDir, Generations.Src, batchId,
+      targetFileBytes, identity)
+    Generations.fold(spark, rollupDir, Generations.Src, batchId,
+      targetFileBytes, LogRollup.mergePartials)
   }
 
   /** One full ingest tick: land → shred → rollup, each stage
     * batch-keyed idempotent (see class doc), plus — every
-    * `compactEvery` ticks (0 = off) — the landed-dir fold
-    * ([[compactLanded]]) AND the shred/rollup `src=` partition folds
-    * ([[foldSrcStore]]; the rollup fold also merges partial rows down
-    * to one per (date, model)), all inside the same replay discipline.
-    * The log fold runs FIRST, so the log's fold horizon is always at
-    * or ahead of the stores' — the single horizon [[readConsistent]]
-    * gates on. Attach as the `foreachBatch` body of any
+    * `compactEvery` ticks (0 = off) — the fold step ([[foldStores]])
+    * over all three stores, inside the same replay discipline. Attach
+    * as the `foreachBatch` body of any
     * envelope-schema stream, or use the [[StreamingLogPipeline]]
     * wrapper.
     *
@@ -439,17 +255,8 @@ object LogStreamPipeline {
       Await.result(shredF, Duration.Inf)
     } finally { b.unpersist(); () }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      // a crashed LogForget purge leaves a partially-swapped partition
-      // behind its _PURGE marker — roll it forward BEFORE any fold
-      // reads that partition as a source (heal is a name filter on a
-      // listing in the always case, and idempotent otherwise)
-      graft.ops.LogForget.healStore(spark, logDir)
-      graft.ops.LogForget.healStore(spark, shredDir)
-      graft.ops.LogForget.healStore(spark, rollupDir)
-      compactLanded(spark, logDir, batchId, targetFileBytes)
-      foldSrcStore(spark, shredDir, batchId, targetFileBytes, identity)
-      foldSrcStore(spark, rollupDir, batchId, targetFileBytes,
-        LogRollup.mergePartials)
+      foldStores(spark, batchId, logDir, shredDir, rollupDir,
+        targetFileBytes)
       // refresh AFTER the folds: one listing per fold cycle, and a
       // crash mid-fold leaves the cache lagging — the safe direction
       foldHorizon.put(logDir, Long.box(maxFolded(spark, logDir)))
@@ -461,8 +268,9 @@ object LogStreamPipeline {
     * — so a dashboard can read log detail and rollup aggregates that
     * AGREE even while a later tick is mid-flight or being replayed
     * (the stores are mutually consistent only at tick boundaries;
-    * this view nails one boundary). Pure partition filtering on the
-    * batch-keyed layouts; no extra state is written anywhere.
+    * this view nails one boundary). Pure directory selection on the
+    * batch-keyed layouts ([[graft.query.Generations.pinned]]); no extra
+    * state is written anywhere.
     *
     * A `batchId` below [[maxFolded]] is CLAMPED UP to the fold horizon
     * — the oldest boundary a generation-folded log can still serve
@@ -498,7 +306,8 @@ object LogStreamPipeline {
       try return pinView(spark, batchId, logDir, shredDir, rollupDir, grain)
       catch {
         case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("folded") =>
+            if e.getMessage != null &&
+              e.getMessage.startsWith(Generations.Refusal) =>
           lastRefusal = e
       }
     }
@@ -513,9 +322,8 @@ object LogStreamPipeline {
     // deliberately MUTATING step in this reader: idempotent,
     // commutes with concurrent healers, and free when no marker
     // exists, which is the always case)
-    graft.ops.LogForget.healStore(spark, logDir)
-    graft.ops.LogForget.healStore(spark, shredDir)
-    graft.ops.LogForget.healStore(spark, rollupDir)
+    Seq(logDir, shredDir, rollupDir)
+      .foreach(graft.ops.LogForget.healStore(spark, _))
     // clamp to the MAX of all three stores' fold horizons (r13 advice):
     // the log fold runs first in tick(), so the log horizon normally
     // binds — but a tick that crashed between the log fold and the
@@ -525,29 +333,16 @@ object LogStreamPipeline {
     // stores' refusal, silently breaking the "clamped, not refused"
     // contract exactly when the binding horizon is a non-log store
     val horizon = math.max(maxFolded(spark, logDir),
-      math.max(graft.query.ShreddedLog.foldHorizon(spark, shredDir),
-        graft.query.ShreddedLog.foldHorizon(spark, rollupDir)))
+      math.max(Generations.horizon(spark, shredDir, Generations.Src),
+        Generations.horizon(spark, rollupDir, Generations.Src)))
     val pin = math.max(batchId, horizon)
-    // MARKER-GATED dir list, not a raw glob: a crashed fold attempt
-    // leaves a marker-less `batch=<N>c` dir whose partial data a glob
-    // would read (its non-numeric batch value passes any id filter) —
-    // exactly the torn state this reader promises never to see. One
-    // listing, which the maxFolded call above already paid for.
-    val dirs = dateDirs(spark, logDir).flatMap { d =>
-      val dPath = d.getPath.toString
-      Fs.list(spark, dPath).map(_.getPath.getName).collect {
-        case n @ BatchDirRe(_) => s"$dPath/$n"
-        case n @ GenDirRe(_) if folded(spark, s"$dPath/$n") => s"$dPath/$n"
-      }
-    }
-    val raw =
-      if (dirs.isEmpty) Fs.readParquetUnder(spark, logDir, logDir)
-      else Fs.readParquetUnder(spark, logDir, dirs: _*)
-    // committed generation dirs read as non-numeric `batch` values;
-    // they hold only batches <= maxFolded <= pin, so they pass whole
-    val b = col("batch").cast("string")
-    val log = raw.filter(!b.rlike("^[0-9]+$") ||
-      b.cast("long") <= pin)
+    // the served dirs, not a raw glob: a glob would read a crashed fold
+    // attempt's marker-less generation, and both a committed generation
+    // and the sources it supersedes until the fold's deletes finish
+    val dirs = Generations.pinned(spark, logDir, Generations.Log, pin)
+    val log =
+      if (dirs.nonEmpty) Fs.readParquetUnder(spark, logDir, dirs: _*)
+      else Fs.readParquetUnder(spark, logDir, logDir).where(lit(false))
     ConsistentView(
       log,
       ShreddedLog.readAsOf(spark, shredDir, pin),

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Shared scanner of the source guards ([[SchemaLessReadGuardSpec]],
-  * [[RenameGuardSpec]], [[RawAppendGuardSpec]]).
+  * [[RenameGuardSpec]], [[RawAppendGuardSpec]],
+  * [[GenerationLayoutGuardSpec]]).
   */
 object SourceScan {
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.{Fs, LogEntry}
-import graft.query.{LogRollup, ShreddedLog}
+import graft.query.{Generations, LogRollup, ShreddedLog}
 
 /** The landed log's `batch=` dirs no longer accumulate forever: every
   * `compactEvery` ticks, [[LogStreamPipeline.compactLanded]] folds the
@@ -138,13 +138,13 @@ class LogStreamCompactionSpec extends SparkSpec {
 
     // tick 10 folds batches 0..9; crash right after the FIRST date
     // partition's generation commit, before any source delete
-    LogStreamPipeline.onGenerationCommit =
+    Generations.onCommit =
       () => throw new RuntimeException("injected crash after gen commit")
     try {
       intercept[RuntimeException](
         LogStreamPipeline.tick(batchDf(10), 10L, logDir, shredDir,
           rollupDir, compactEvery = 10))
-    } finally LogStreamPipeline.onGenerationCommit = () => ()
+    } finally Generations.onCommit = () => ()
 
     // torn window, observable exactly as documented: one date's
     // generation AND its sources coexist → raw glob double-counts
@@ -152,6 +152,10 @@ class LogStreamCompactionSpec extends SparkSpec {
     assert(torn > cleanTotal + 2,
       s"expected the documented torn double-count, got $torn")
     assert(LogStreamPipeline.maxFolded(spark, logDir) === 9L)
+    // the pinned reader counts every row once inside that window: the
+    // committed generation's sources are no longer served
+    assert(LogStreamPipeline.readConsistent(spark, 9L, logDir, shredDir,
+      rollupDir).log.count() === cleanTotal)
 
     // replay of tick 10: land/shred/rollup overwrite themselves, the
     // fold RESUMES (generation already present → delete sources; the
@@ -170,6 +174,50 @@ class LogStreamCompactionSpec extends SparkSpec {
       .flatMap(d => Fs.list(spark, d.getPath.toString))
       .filter(_.getPath.getName.startsWith(".cmp-tmp-"))
     assert(trash.isEmpty)
+  }
+
+  test("a source left beside a committed shred/rollup generation (the " +
+    "window between its marker and the last source delete) is served " +
+    "once by every pinned reader") {
+    val logDir = Files.createTempDirectory("win_log").toString
+    val shredDir = Files.createTempDirectory("win_shred").toString
+    val rollupDir = Files.createTempDirectory("win_roll").toString
+    (0 until 10).foreach { b =>
+      LogStreamPipeline.tick(batchDf(b), b.toLong, logDir, shredDir,
+        rollupDir, compactEvery = 10)
+    }
+    // keep one date's src=batch-3 of both stores, fold, then put it back
+    val fs = Fs(spark, shredDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val kept = Files.createTempDirectory("win_kept").toString
+    val date = Fs.list(spark, shredDir).map(_.getPath.getName)
+      .filter(_.startsWith("date=")).min
+    def copy(from: String, to: String): Unit = {
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(
+        from), fs, new org.apache.hadoop.fs.Path(to), false, conf)
+      ()
+    }
+    Seq("shred" -> shredDir, "roll" -> rollupDir).foreach { case (n, d) =>
+      copy(s"$d/$date/src=batch-3", s"$kept/$n")
+    }
+    LogStreamPipeline.tick(batchDf(10), 10L, logDir, shredDir, rollupDir,
+      compactEvery = 10)
+    Seq("shred" -> shredDir, "roll" -> rollupDir).foreach { case (n, d) =>
+      assert(Fs.exists(spark, s"$d/$date/src=gen-10c/_FOLDED"))
+      copy(s"$kept/$n", s"$d/$date/src=batch-3")
+    }
+
+    val total = 2L * 11
+    def events(rollup: DataFrame): Long =
+      rollup.agg(sum(col("n_events"))).head().getLong(0)
+    val v = LogStreamPipeline.readConsistent(spark, 10L, logDir, shredDir,
+      rollupDir)
+    assert(v.log.count() === total)
+    assert(v.shred.count() === total)
+    assert(events(v.rollup) === total)
+    assert(ShreddedLog.readAsOf(spark, shredDir, 10L).count() === total)
+    assert(events(LogRollup.read(spark, rollupDir, Seq("model"),
+      upToBatch = Some(10L))) === total)
   }
 
   test("readConsistent pins one batch across log/shred/rollup: a " +
